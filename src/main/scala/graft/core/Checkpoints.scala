@@ -61,22 +61,6 @@ object Checkpoints {
   private val installed =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Session conf key (plan-evidence tooling, r20 — normally unset): a
-    * file-path PREFIX. When set, every [[cut]] first dumps the
-    * PRE-materialization formatted physical plan of the frame it is
-    * about to checkpoint to `<prefix>_cut<N>.txt` (N counts per
-    * prefix). An eager checkpoint replaces its upstream with `Scan
-    * ExistingRDD` in every later plan, so the final-frame explain of a
-    * cut-based operator proves nothing about the work inside the cuts
-    * (r19 verdict #3) — this hook captures exactly those sub-plans.
-    * [[graft.examples.PlanDump]] sets it per query; never set it on a
-    * production/bench path (one extra planning pass + a file write per
-    * cut). */
-  val DumpPlansConf = "spark.graft.dumpCutPlans"
-
-  private val dumpSeq =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
-
   /** Cut lineage on `df`: reliable eager checkpoint when
     * [[DirConf]] is set, eager localCheckpoint otherwise.
     *
@@ -90,17 +74,6 @@ object Checkpoints {
     * say "too big to broadcast"; small frames keep their real sizes. */
   def cut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    spark.conf.getOption(DumpPlansConf).filter(_.nonEmpty).foreach { prefix =>
-      val n = dumpSeq
-        .computeIfAbsent(prefix, _ => new java.util.concurrent.atomic.AtomicInteger(0))
-        .incrementAndGet()
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"${prefix}_cut$n.txt"),
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      catch { case e: Throwable =>
-        System.err.println(s"[cut-plan-dump] $prefix#$n failed: $e") }
-    }
     val cp = spark.conf.getOption(DirConf).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext

@@ -125,7 +125,7 @@ class GenotypeKernelsSpec extends SparkTestBase {
     ).toDF("id", "gt")
     assert(asMap(Stats.ibsGramian(hand, "gt")) === asMap(Stats.ibsPairs(hand, "gt")))
     // 40 variants × 12 samples, ~5% missing, all dosage classes present
-    val synth = graft.examples.KinshipScaleDemo.synthGt(spark, 40L, 12)
+    val synth = Synth.synthGt(spark, 40L, 12)
       .localCheckpoint()
     val (g, p) = (asMap(Stats.ibsGramian(synth, "gt")), asMap(Stats.ibsPairs(synth, "gt")))
     assert(g.keySet === p.keySet && g.keySet.size === 12 * 11 / 2)
@@ -160,7 +160,7 @@ class GenotypeKernelsSpec extends SparkTestBase {
       ("v3", Seq(Seq(1, 1), Seq(0, 1), Seq(0, 1)))
     ).toDF("id", "gt")
     assert(asMap(Stats.kingGramian(hand, "gt")) === asMap(Stats.kingPairs(hand, "gt")))
-    val synth = graft.examples.KinshipScaleDemo.synthGt(spark, 40L, 12)
+    val synth = Synth.synthGt(spark, 40L, 12)
       .localCheckpoint()
     val (g, p) = (asMap(Stats.kingGramian(synth, "gt")), asMap(Stats.kingPairs(synth, "gt")))
     assert(g.keySet === p.keySet && g.keySet.size === 12 * 11 / 2)
@@ -173,7 +173,7 @@ class GenotypeKernelsSpec extends SparkTestBase {
     import spark.implicits._
     // 12 samples, blockSize 5 → blocks of 5/5/2 (ragged tail exercises
     // the header-driven widths); ~5% missing, all dosage classes
-    val synth = graft.examples.KinshipScaleDemo.synthGt(spark, 40L, 12)
+    val synth = Synth.synthGt(spark, 40L, 12)
       .localCheckpoint()
     val path = java.nio.file.Files.createTempDirectory("pair_blocks").toString
     val (s, nb) = graft.operators.PairBlocks.write(synth, path, "gt", blockSize = 5)
@@ -354,7 +354,7 @@ class GenotypeKernelsSpec extends SparkTestBase {
   }
 
   test("pbsWindowed: pairwise fst ≡ fstWindowed; PBS recombines the branch lengths") {
-    val synth = graft.examples.KinshipScaleDemo.synthGt(spark, 64L, 12)
+    val synth = Synth.synthGt(spark, 64L, 12)
       .localCheckpoint()
     val (pa, pb, pc) = (0 until 4, 4 until 8, 8 until 12)
     val got = graft.operators.Stats.pbsWindowed(synth, "gt", "vid", 16L, pa, pb, pc)

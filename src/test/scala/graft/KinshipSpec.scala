@@ -142,7 +142,7 @@ class KinshipSpec extends SparkTestBase {
 
   test("pcaRandomized ≡ exact pca: eigenvalues and basis-free score projector") {
     // planted two-population cohort → separated top eigenvalues
-    val df = graft.examples.KinshipScaleDemo.synthGt(spark, 300L, 30).localCheckpoint()
+    val df = Synth.synthGt(spark, 300L, 30).localCheckpoint()
     val k = 5
     val (le, pe) = Kinship.pca(df, "gt", k)
     val (lr, pr) = Kinship.pcaRandomized(df, "gt", k, iters = 80, seed = 7L)
@@ -162,7 +162,7 @@ class KinshipSpec extends SparkTestBase {
   }
 
   test("pcaAuto switches on cohort width") {
-    val df = graft.examples.KinshipScaleDemo.synthGt(spark, 200L, 12).localCheckpoint()
+    val df = Synth.synthGt(spark, 200L, 12).localCheckpoint()
     val (le, _) = Kinship.pca(df, "gt", 3)
     val (la, _) = Kinship.pcaAuto(df, "gt", 3, maxDriverSamples = 100) // exact path
     val (lb, _) = Kinship.pcaAuto(df, "gt", 3, maxDriverSamples = 4,   // randomized path

@@ -50,9 +50,9 @@ class ScaleOpsSpec extends SparkTestBase {
     // 300 variants × 10,000 samples = 3M genotype calls per kernel — the
     // SURVEY §1.2 wide-row escape-hatch check above the 2,000-sample
     // ceiling the round-1 suite stopped at (full 200M-call timings live
-    // in ScaleDemo / README §scale).
+    // in README §scale).
     val nSamples = 10000
-    val df = graft.examples.ScaleDemo.synthVariants(spark, 300L, nSamples).cache()
+    val df = Synth.synthVariants(spark, 300L, nSamples).cache()
     try {
       val wide = Stats.variantStats(df)
         .select("chrom", "pos", "id", "call_rate", "n_called", "n_missing", "obs_het")
