@@ -70,7 +70,7 @@ object Checkpoints {
     * iterative operator that joins cut frames on both sides compounds
     * the estimate multiplicatively per round — doubly exponential in
     * rounds, overflowing BigInteger in the driver's stats visitor near
-    * round 15 (the CcScaleDemo 1M-diameter find). Clamped stats still
+    * round 15 (the CcScaleDemo (d521caa) 1M-diameter find). Clamped stats still
     * say "too big to broadcast"; small frames keep their real sizes. */
   def cut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession

@@ -99,7 +99,7 @@ object VariantSchema {
     nSamples.toLong * (4L * ploidy /*gt*/ + 4L /*dp*/ + 8L /*gq*/)
 
   /** Rows-per-batch for the vectorized parquet reader at cohort width
-    * `nSamples` (wide-cohort rehearsal finding, ScaleDemo 10k/100k): the
+    * `nSamples` (wide-cohort rehearsal finding, ScaleDemo (d521caa) 10k/100k): the
     * default `spark.sql.parquet.columnarReaderBatchSize` = 4096 would ask
     * the reader for 4096 × row-width contiguous child vectors — ~3 GB at
     * 10k samples — and fail with "Cannot reserve additional contiguous

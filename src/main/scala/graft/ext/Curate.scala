@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** The standard curation recipe as ONE library call — the stage order
   * the individual operators are designed to compose in (and the
-  * CurationDemo walks through), so a user gets the whole web-corpus
+  * CurationDemo (d521caa) walks through), so a user gets the whole web-corpus
   * funnel without re-deriving the sequencing:
   *
   *   1. HTML → prose ([[TextNorm.stripHtml]], when `htmlInput`)
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * `lang_pred` appended (the [[DocPipeline.prepare]] contract).
   *
   * The unit-dedup-before-near-dup ORDER is load-bearing, not
-  * cosmetic (CurateScaleDemo, 1M-doc rehearsal): corpus-wide
+  * cosmetic (CurateScaleDemo (d521caa), 1M-doc rehearsal): corpus-wide
   * boilerplate lines left in place saturate the MinHash signatures,
   * collapse the LSH buckets into hubs, and crater near-dup recall
   * (DocPipeline.scala stage-5a hazard note); enabling `lineDedup` /
@@ -64,7 +64,7 @@ object Curate {
       // finite by default at THIS facade (DocPipeline's low-level
       // default stays uncapped): the 1M-doc rehearsal measured the
       // banding df-guard at 85.0% → 94.9% planted-pair recall when the
-      // unit-dedup stages are off (CurateScaleDemo, SURVEY §7.3), and
+      // unit-dedup stages are off (CurateScaleDemo (d521caa), SURVEY §7.3), and
       // a token present in >100k web documents is boilerplate-class at
       // any corpus scale — it carries no blocking signal. Uncapped is
       // the explicit opt-out (`maxSignatureDf = Long.MaxValue`).

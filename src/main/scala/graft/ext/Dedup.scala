@@ -730,7 +730,7 @@ object Dedup {
     * point: this library's first implementation (hash-min relaxation
     * with pointer chases through the pre-round labels) claimed
     * O(log d) but measures LINEAR, ~d/3 rounds, on paths with PERMUTED
-    * ids (CcProbe: 330 rounds at diameter 1,000; the claimed doubling
+    * ids (CcProbe (d521caa): 330 rounds at diameter 1,000; the claimed doubling
     * never happens because label chains terminate at local minima,
     * whose own label is themselves — no new reach). Long chains are a
     * real near-dup shape (revision histories, template drift), so the

@@ -1,9 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StructField, StructType}
+import scala.util.control.NonFatal
 import graft.core.Checkpoints.CutOps
+import graft.sources.{AppendStore, AtomicCommit}
 
 /** One-call training-data document preparation: the composed form of the
   * extension operators, in the order a real corpus pipeline runs them.
@@ -41,22 +45,71 @@ object DocPipeline {
     * any zombie of itself — strictly safer. Plain (non-atomic) stores
     * have no commit protocol to fence; they keep the documented
     * single-writer-by-construction contract. */
-  private def streamFence(df: DataFrame, storePath: String,
+  private def streamFence(spark: SparkSession, storePath: String,
                           atomicStore: Boolean, op: String): Option[Long] =
     if (!atomicStore) None
-    else Some(graft.sources.AtomicCommit.acquireEpoch(df.sparkSession, storePath, op))
+    else Some(AtomicCommit.acquireEpoch(spark, storePath, op))
 
-  /** Wire a durable checkpoint into a streaming writer when the caller
-    * provides one. Production streams should ALWAYS pass it: without a
+  /** The `foreachBatch` scaffold every store stream runs on: each
+    * micro-batch's `step` output goes to `onBatch`. A durable
+    * checkpoint is wired in when the caller provides one. Production
+    * streams should ALWAYS pass it: without a
     * checkpoint, a crashed driver loses its source offsets and the
     * restarted query re-reads from the source's current position —
     * the dedup STORES stay correct either way (their replay semantics
     * are store-side, see each operator's caveat), but unprocessed
     * input between crash and restart is silently skipped. */
-  private def withCheckpoint(
-      w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-      loc: Option[String]): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    loc.fold(w)(l => w.option("checkpointLocation", l))
+  private def foreachBatchStream(df: DataFrame, checkpointLocation: Option[String],
+                                 onBatch: (DataFrame, Long) => Unit)(
+      step: (DataFrame, Long) => DataFrame): StreamingQuery = {
+    val w = df.writeStream
+    checkpointLocation.fold(w)(l => w.option("checkpointLocation", l))
+      .outputMode("append")
+      .foreachBatch { (b: DataFrame, batchId: Long) => onBatch(step(b, batchId), batchId) }
+      .start()
+  }
+
+  /** A stream over ONE store at `storePath`: the writer fence is claimed
+    * once at start ([[streamFence]]) and every micro-batch runs `step`,
+    * which appends to the store and returns what `onBatch` receives. */
+  private def streamStore(df: DataFrame, storePath: String, atomicStore: Boolean,
+                          op: String, checkpointLocation: Option[String],
+                          onBatch: (DataFrame, Long) => Unit)(
+      step: (DataFrame, Option[Long]) => DataFrame): StreamingQuery = {
+    val fence = streamFence(df.sparkSession, storePath, atomicStore, op)
+    foreachBatchStream(df, checkpointLocation, onBatch)((b, _) => step(b, fence))
+  }
+
+  /** A store's current rows, and whether its path existed before this
+    * batch: an ATOMIC store reads its live committed versions, a PLAIN
+    * store its parquet; `empty` (which owns the schema — an absent store
+    * has none) stands in for a store with nothing written yet. */
+  private def openStore(spark: SparkSession, storePath: String,
+                        atomicStore: Boolean,
+                        empty: => DataFrame): (DataFrame, Boolean) = {
+    val exists = AtomicCommit.pathExists(spark, storePath)
+    val store =
+      if (atomicStore) AppendStore.readOr(spark, storePath, empty)
+      else if (exists) spark.read.parquet(storePath)
+      else empty
+    (store, exists)
+  }
+
+  /** Append one batch's new store rows: a committed version behind the
+    * writer fence for ATOMIC stores, a sized parquet append for PLAIN
+    * ones (whose first append creates the store). */
+  private def appendStore(rows: DataFrame, storePath: String,
+                          atomicStore: Boolean, fence: Option[Long],
+                          storeExists: Boolean): Unit =
+    if (atomicStore) AppendStore.append(rows, storePath, fence)
+    else AppendStore.sized(rows)
+      .write.mode(if (storeExists) "append" else "overwrite").parquet(storePath)
+
+  /** The schema-only frame an empty single-column hash store reads as. */
+  private def emptyHashStore(spark: SparkSession, column: String,
+                             dt: DataType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField(column, dt, nullable = false))))
 
   /** Append `lang_pred` scored from an existing token-array column —
     * ONE fused pass scores every profile (LangScoresExpr; the per-lang
@@ -98,6 +151,15 @@ object DocPipeline {
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark("_fp")
       .drop("_fp")
+
+  /** `minhashK` at or above which [[prepare]] (and the Curate facade)
+    * band with the OPH kernel by default — the r13 shootout's measured
+    * point where the classic kernel's O(tokens·k) loop stops hiding
+    * behind tokenization. The INCREMENTAL path keeps classic
+    * signatures at every k: a persisted store's band keys must match
+    * across releases, and flipping its kernel would silently miss
+    * every cross-run near-dup. */
+  val OphDefaultMinK = 16
 
   /** Returns the surviving documents with `n_words` and `lang_pred`
     * appended. See the object doc for the five stages.
@@ -169,15 +231,6 @@ object DocPipeline {
     * keeps small-k configs bit-stable with earlier releases). Pass
     * `Some(true)`/`Some(false)` to pin either kernel regardless of
     * k (`None` = the k-derived default). */
-  /** `minhashK` at or above which [[prepare]] (and the Curate facade)
-    * band with the OPH kernel by default — the r13 shootout's measured
-    * point where the classic kernel's O(tokens·k) loop stops hiding
-    * behind tokenization. The INCREMENTAL path keeps classic
-    * signatures at every k: a persisted store's band keys must match
-    * across releases, and flipping its kernel would silently miss
-    * every cross-run near-dup. */
-  val OphDefaultMinK = 16
-
   def prepare(
       docs: DataFrame,
       idCol: String = "doc_id",
@@ -307,7 +360,7 @@ object DocPipeline {
     // within-bucket recall needs all-pairs edges (what
     // embeddingCandidatePairs emits) at O(b²) per bucket instead of
     // O(b).
-    // BOILERPLATE HAZARD (CurateScaleDemo, measured at 1M docs): when
+    // BOILERPLATE HAZARD (CurateScaleDemo (d521caa), measured at 1M docs): when
     // universal tokens (shared footers/headers) own the smallest word
     // hashes, every doc's minhash components equal the boilerplate's
     // hash values, band buckets collapse into corpus-sized hubs, and
@@ -395,7 +448,7 @@ object DocPipeline {
     // Path edges DEFAULT ON (r15): star-only blocking misses any
     // same-batch pair whose bucket minimum is an UNRELATED doc — the
     // pinned cause of the ops-month rehearsal's decaying 35→3/cycle
-    // near-dup leak (BandingLeakSweep r14 exonerated the vs-store
+    // near-dup leak (BandingLeakSweep (d521caa) r14 exonerated the vs-store
     // banding path: ~0 leaks at every sane geometry, so the residual
     // was exactly this in-batch artifact; the union adds ≤ 1 edge per
     // (doc, band) — the same O(b) bound as the star set). `pathEdges =
@@ -550,7 +603,7 @@ object DocPipeline {
     * When the candidate set comes back EMPTY the verify stage is
     * skipped outright — the store's shingle column (its heaviest) is
     * never read for a batch with nothing to verify (r15; most of the
-    * measured per-batch scan slope, ScanFloorDemo). [[streamIncremental]]
+    * measured per-batch scan slope, ScanFloorDemo (d521caa)). [[streamIncremental]]
     * adds the store-bloom gate on top for its long-lived store.
     *
     * Returns the accepted new rows (prepare's output schema). Append
@@ -596,6 +649,24 @@ object DocPipeline {
     prepareIncrementalWithHashes(newDocs, store, idCol, textCol, minWords,
       minhashK, bands, tau, maxStoreBandDf, maxShingles).drop("_fp", "_whs")
 
+  /** Read one long metric from an observe-on-cut observation. The
+    * eager checkpoint that materializes the observed plan fills the
+    * observation via the listener bus, which is asynchronous — poll
+    * briefly rather than block unboundedly (`Observation.get` would
+    * deadlock if a foreign cut implementation never ran the plan as an
+    * action); callers fall back to an explicit aggregate on None. */
+  private def observedLong(o: org.apache.spark.sql.Observation,
+                           key: String): Option[Long] = {
+    import org.apache.spark.sql.graft.bridge.observedOrEmpty
+    val deadline = System.nanoTime() + 2000L * 1000 * 1000
+    var m = observedOrEmpty(o)
+    while (m.isEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(10)
+      m = observedOrEmpty(o)
+    }
+    m.get(key).map(v => v.asInstanceOf[Number].longValue)
+  }
+
   /** The NEW×STORED per-band-key candidate stage, shared by
     * [[prepareIncrementalWithHashes]] and the hub-day measurement probe
     * ([[incrementalCandidateVolume]]) so the guard the rehearsal
@@ -617,24 +688,6 @@ object DocPipeline {
     * either way. With the guard finite, the semi-filtered subtree is
     * referenced twice (the df agg and the candidate rows), costing a
     * second column-pruned store scan — both map-only. */
-  /** Read one long metric from an observe-on-cut observation. The
-    * eager checkpoint that materializes the observed plan fills the
-    * observation via the listener bus, which is asynchronous — poll
-    * briefly rather than block unboundedly (`Observation.get` would
-    * deadlock if a foreign cut implementation never ran the plan as an
-    * action); callers fall back to an explicit aggregate on None. */
-  private def observedLong(o: org.apache.spark.sql.Observation,
-                           key: String): Option[Long] = {
-    import org.apache.spark.sql.graft.bridge.observedOrEmpty
-    val deadline = System.nanoTime() + 2000L * 1000 * 1000
-    var m = observedOrEmpty(o)
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(10)
-      m = observedOrEmpty(o)
-    }
-    m.get(key).map(v => v.asInstanceOf[Number].longValue)
-  }
-
   private def storeCandidates(fresh: DataFrame, store: DataFrame,
                               idCol: String, maxStoreBandDf: Long,
                               batchKeys: Option[DataFrame] = None): DataFrame = {
@@ -693,7 +746,7 @@ object DocPipeline {
   }
 
   /** The geometry-migration DECISION the occupancy probe feeds —
-    * rehearsed, not just documented (r15; OpsMonthDemo MIGRATION-DAY):
+    * rehearsed, not just documented (r15; OpsMonthDemo (d521caa) MIGRATION-DAY):
     * candidate volume per batch grows with per-band-key store df even
     * though the store rides no exchange (measured 139k → 547k pairs as
     * a shared-vocab store grew 1M → 4M at fixed (8,4)), and the
@@ -822,7 +875,7 @@ object DocPipeline {
     // bloom gate (r15, [[graft.sources.StoreBloom]]): test the batch's
     // keys against the driver-held store blooms — keys the store
     // provably lacks never reach a store read, and an all-miss batch
-    // skips the O(store) column scans entirely (ScanFloorDemo: that
+    // skips the O(store) column scans entirely (ScanFloorDemo (d521caa): that
     // scan is the last store-proportional per-batch term). The batch
     // side collects to the driver (5 longs/doc — micro-batches are
     // bounded by the streaming contract); only HIT subsets broadcast.
@@ -908,7 +961,7 @@ object DocPipeline {
     // exchange-free but cannot keep it unread: ~50 longs/doc, ~5-10x
     // the fp+band columns together). The gate fires for every disjoint
     // batch — bloom-gated or not, since candidate keys absent from the
-    // store produce no join rows (ScanFloorDemo: this is most of the
+    // store produce no join rows (ScanFloorDemo (d521caa): this is most of the
     // store-proportional term).
     if (candStats.map(_._1 == 0L).getOrElse(candNa.isEmpty)) {
       return batch.join(fresh.select(col(idCol)), Seq(idCol))
@@ -993,7 +1046,7 @@ object DocPipeline {
     * clips the boilerplate tail; the structural fix is key
     * SPECIFICITY — rebuild at more rows per band
     * ([[rebuildSignatureStore]] at higher minhashK/bands, the
-    * (8,4) → (16,8) migration StoreMigrationDemo rehearses) when
+    * (8,4) → (16,8) migration StoreMigrationDemo (d521caa) rehearses) when
     * [[incrementalCandidateVolume]] says candidates-per-batch has
     * outgrown the verification budget.
     *
@@ -1033,7 +1086,7 @@ object DocPipeline {
       // are absent from the store, so the candidate join comes back
       // EMPTY and the shingle-column scan — the heaviest — is
       // skipped); the bloom trims the fp/band stages on top
-      // (ScanFloorDemo: both measured). Results are bit-identical
+      // (ScanFloorDemo (d521caa): both measured). Results are bit-identical
       // either way (a bloom HIT only routes to the full path; the
       // write protocol — bloom persisted BEFORE the append it
       // covers — means a crash can only over-represent, never skip a
@@ -1044,18 +1097,15 @@ object DocPipeline {
       // absent or stale. false restores the r14 behavior exactly.
       bloom: Boolean = true,
       checkpointLocation: Option[String] = None)(onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fence = streamFence(docs, storePath, atomicStore, "streamIncremental")
     // per-stream driver state; loaded/validated lazily at first batch
     val bloomState = new java.util.concurrent.atomic.AtomicReference[
       graft.sources.StoreBloom.SigBlooms](null)
-    withCheckpoint(docs.writeStream, checkpointLocation)
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        onBatch(incrementalStoreStep(b, storePath, idCol, textCol, minWords,
-          minhashK, bands, tau, atomicStore, maxStoreBandDf, maxShingles,
-          bloom, fence, bloomState), batchId)
-      }
-      .start()
+    streamStore(docs, storePath, atomicStore, "streamIncremental",
+        checkpointLocation, onBatch) { (b, fence) =>
+      incrementalStoreStep(b, storePath, idCol, textCol, minWords, minhashK,
+        bands, tau, atomicStore, maxStoreBandDf, maxShingles, bloom, fence,
+        bloomState)
+    }
   }
 
   /** One micro-batch of incremental signature dedup against ONE store —
@@ -1073,114 +1123,106 @@ object DocPipeline {
       maxShingles: Int, bloom: Boolean, fence: Option[Long],
       bloomState: java.util.concurrent.atomic.AtomicReference[
         graft.sources.StoreBloom.SigBlooms]): DataFrame = {
-        val spark = b.sparkSession
-        // fenced writers must die BEFORE touching any store-adjacent
-        // state, not merely before the data write: the bloom sidecar
-        // is saved ahead of the append (the crash ordering), so
-        // without this check a zombie killed at the APPEND's fence
-        // still clobbers its successor's sidecar with a bloom missing
-        // the successor's rows — an UNDER-representing bloom, the one
-        // state the design forbids (a bloom miss is a proof of
-        // absence). Found by the failover-chain spec: A's doomed
-        // batch overwrote B's sidecar, and C — whose validity check
-        // (rows >= store rows) the zombie sidecar passed by
-        // coincidence — silently re-accepted B's content. The
-        // residual window (zombie already past THIS check when the
-        // takeover lands) is the same sub-batch envelope checkFence
-        // documents for data writes; a sidecar clobbered in that race
-        // is caught at the next STREAM START whose validity check
-        // reads rows < store rows (the store outgrows the stale
-        // sidecar within a few appends) and costs spurious accepts
-        // only until then — over-representation never, misses bounded.
-        fence.foreach(e =>
-          graft.sources.AtomicCommit.checkFence(spark, storePath, e))
-        // persisted band keys are a pure function of (minhashK, bands):
-        // a restart at different values must die loudly, not silently
-        // miss every cross-run near-dup (no rebucket exists here — the
-        // store keeps shingle/band hashes, not the word hashes they
-        // derive from; changing geometry means rebuilding the store
-        // from the corpus)
-        // fpv versions the FINGERPRINT algorithm (2 = the 64-bit
-        // wrap-around roll; 1 was the mod-P roll whose 2^30 space
-        // false-collided at corpus scale — r14). A pre-upgrade store
-        // degrades gracefully even though its fps never match again:
-        // an exact dup is also a J=1.0 near-dup, so the banding path
-        // still rejects re-crawls of old content.
-        // m versions the VERIFICATION payload (0 = full shingle sets,
-        // m ≥ 1 = bottom-m sketches): sketches at different m are not
-        // comparable, so a mismatched restart dies loudly; sidecars
-        // written before the cap existed describe exact stores
-        // (legacy default 0).
-        // bkv versions the BAND-KEY format (2 = packed 64-bit longs,
-        // r15; 1 = the "b:h1_h2" strings). Unlike fpv there is no
-        // graceful degradation: a bkv=1 store's band_keys column is
-        // array<string> and the candidate equi-join would type-clash
-        // (or silently never match) — the restart must die loudly and
-        // the store be rebuilt from the corpus.
-        checkOrWriteStoreMeta(spark,
-          s"${storePath.stripSuffix("/")}_sig_meta", storePath,
-          "restart with the stored geometry or rebuild the store from " +
-            "the corpus (rebuildSignatureStore)",
-          Seq("minhashK" -> minhashK, "bands" -> bands, "fpv" -> 2,
-            "m" -> maxShingles, "bkv" -> 2),
-          legacyDefaults = Map("m" -> 0, "bkv" -> 1))
-        def empty = signatures(b.limit(0), idCol, textCol, minhashK, bands,
-          maxShingles)
-        val storeExists = graft.sources.AtomicCommit.pathExists(spark, storePath)
-        val store =
-          if (atomicStore) graft.sources.AppendStore.readOr(spark, storePath, empty)
-          else if (storeExists) spark.read.parquet(storePath)
-          else empty
-        // bloom lifecycle: load the sidecar at first batch; a missing,
-        // unreadable, or UNDER-covering sidecar (rows < store rows —
-        // someone appended outside the protocol, or the store was
-        // rebuilt) triggers one rebuild scan. Over-coverage is the
-        // normal crash/replay state and is safe by construction.
-        if (bloom && bloomState.get() == null) {
-          val loaded = graft.sources.StoreBloom.load(spark, storePath)
-          val valid = loaded.filter(_.rows >= (if (storeExists) store.count() else 0L))
-          bloomState.set(valid.getOrElse {
-            if (storeExists) graft.sources.StoreBloom.fromStore(store, bands)
-            else graft.sources.StoreBloom.create(4L << 20, bands)
-          })
-        }
-        val gate = if (bloom) Option(bloomState.get()) else None
-        val accepted = prepareIncrementalWithHashes(
-          b, store, idCol, textCol, minWords, minhashK, bands, tau,
-          maxStoreBandDf, maxShingles, gate)
-          .cut // materialize BEFORE the store append
-        val sigs = signaturesFromHashes(accepted, idCol, minhashK, bands,
-          maxShingles)
-        // merge the ACCEPTED rows (exactly what the append persists)
-        // and save the sidecar BEFORE the append — the crash window
-        // between the two leaves a bloom that over-represents, which
-        // costs one spurious full-path batch, never a missed duplicate
-        gate.foreach { g =>
-          // the accepted frame is a SUBSET of the batch the bloom-gate
-          // site already bounded — re-count only when that check was
-          // skipped (thr <= 0 pins legacy shapes, no gate collect ran)
-          if (graft.core.Joins.broadcastThresholdBytes(spark) <= 0)
-            requireBatchBounded(sigs, "streamIncremental bloom merge")
-          val rows = sigs.select(col("fp"), col("band_keys")).collect()
-          if (rows.nonEmpty) {
-            graft.sources.StoreBloom.addBatch(g,
-              rows.map(_.getLong(0)), rows.flatMap(_.getSeq[Long](1)))
-            graft.sources.StoreBloom.save(spark, storePath, g)
-          }
-        }
-        if (atomicStore) graft.sources.AppendStore.append(sigs, storePath, fence)
-        else graft.sources.AppendStore.sized(sigs).write.mode(if (storeExists) "append" else "overwrite").parquet(storePath)
-        // outgrown capacity degrades fpp (more spurious full-path
-        // batches, never a miss): rebuild AFTER the append at 4x, so
-        // growth costs O(1) amortized rebuild scans per doubling
-        gate.filter(_.outgrown(bands)).foreach { _ =>
-          val grown = graft.sources.StoreBloom.fromStore(
-            if (atomicStore) graft.sources.AppendStore.readOr(spark, storePath, empty)
-            else spark.read.parquet(storePath), bands)
-          graft.sources.StoreBloom.save(spark, storePath, grown)
-          bloomState.set(grown)
-        }
-        accepted.drop("_fp", "_whs")
+    val spark = b.sparkSession
+    // fenced writers must die BEFORE touching any store-adjacent
+    // state, not merely before the data write: the bloom sidecar
+    // is saved ahead of the append (the crash ordering), so
+    // without this check a zombie killed at the APPEND's fence
+    // still clobbers its successor's sidecar with a bloom missing
+    // the successor's rows — an UNDER-representing bloom, the one
+    // state the design forbids (a bloom miss is a proof of
+    // absence). Found by the failover-chain spec: A's doomed
+    // batch overwrote B's sidecar, and C — whose validity check
+    // (rows >= store rows) the zombie sidecar passed by
+    // coincidence — silently re-accepted B's content. The
+    // residual window (zombie already past THIS check when the
+    // takeover lands) is the same sub-batch envelope checkFence
+    // documents for data writes; a sidecar clobbered in that race
+    // is caught at the next STREAM START whose validity check
+    // reads rows < store rows (the store outgrows the stale
+    // sidecar within a few appends) and costs spurious accepts
+    // only until then — over-representation never, misses bounded.
+    fence.foreach(e =>
+      graft.sources.AtomicCommit.checkFence(spark, storePath, e))
+    // persisted band keys are a pure function of (minhashK, bands):
+    // a restart at different values must die loudly, not silently
+    // miss every cross-run near-dup (no rebucket exists here — the
+    // store keeps shingle/band hashes, not the word hashes they
+    // derive from; changing geometry means rebuilding the store
+    // from the corpus)
+    // fpv versions the FINGERPRINT algorithm (2 = the 64-bit
+    // wrap-around roll; 1 was the mod-P roll whose 2^30 space
+    // false-collided at corpus scale — r14). A pre-upgrade store
+    // degrades gracefully even though its fps never match again:
+    // an exact dup is also a J=1.0 near-dup, so the banding path
+    // still rejects re-crawls of old content.
+    // m versions the VERIFICATION payload (0 = full shingle sets,
+    // m ≥ 1 = bottom-m sketches): sketches at different m are not
+    // comparable, so a mismatched restart dies loudly; sidecars
+    // written before the cap existed describe exact stores
+    // (legacy default 0).
+    // bkv versions the BAND-KEY format (2 = packed 64-bit longs,
+    // r15; 1 = the "b:h1_h2" strings). Unlike fpv there is no
+    // graceful degradation: a bkv=1 store's band_keys column is
+    // array<string> and the candidate equi-join would type-clash
+    // (or silently never match) — the restart must die loudly and
+    // the store be rebuilt from the corpus.
+    checkOrWriteStoreMeta(spark, metaDir(storePath, "sig"), storePath,
+      "restart with the stored geometry or rebuild the store from " +
+        "the corpus (rebuildSignatureStore)",
+      sigGeometry(minhashK, bands, maxShingles),
+      legacyDefaults = Map("m" -> 0, "bkv" -> 1))
+    def empty = signatures(b.limit(0), idCol, textCol, minhashK, bands,
+      maxShingles)
+    val (store, storeExists) = openStore(spark, storePath, atomicStore, empty)
+    // bloom lifecycle: load the sidecar at first batch; a missing,
+    // unreadable, or UNDER-covering sidecar (rows < store rows —
+    // someone appended outside the protocol, or the store was
+    // rebuilt) triggers one rebuild scan. Over-coverage is the
+    // normal crash/replay state and is safe by construction.
+    if (bloom && bloomState.get() == null) {
+      val loaded = graft.sources.StoreBloom.load(spark, storePath)
+      val valid = loaded.filter(_.rows >= (if (storeExists) store.count() else 0L))
+      bloomState.set(valid.getOrElse {
+        if (storeExists) graft.sources.StoreBloom.fromStore(store, bands)
+        else graft.sources.StoreBloom.create(4L << 20, bands)
+      })
+    }
+    val gate = if (bloom) Option(bloomState.get()) else None
+    val accepted = prepareIncrementalWithHashes(
+      b, store, idCol, textCol, minWords, minhashK, bands, tau,
+      maxStoreBandDf, maxShingles, gate)
+      .cut // materialize BEFORE the store append
+    val sigs = signaturesFromHashes(accepted, idCol, minhashK, bands,
+      maxShingles)
+    // merge the ACCEPTED rows (exactly what the append persists)
+    // and save the sidecar BEFORE the append — the crash window
+    // between the two leaves a bloom that over-represents, which
+    // costs one spurious full-path batch, never a missed duplicate
+    gate.foreach { g =>
+      // the accepted frame is a SUBSET of the batch the bloom-gate
+      // site already bounded — re-count only when that check was
+      // skipped (thr <= 0 pins legacy shapes, no gate collect ran)
+      if (graft.core.Joins.broadcastThresholdBytes(spark) <= 0)
+        requireBatchBounded(sigs, "streamIncremental bloom merge")
+      val rows = sigs.select(col("fp"), col("band_keys")).collect()
+      if (rows.nonEmpty) {
+        graft.sources.StoreBloom.addBatch(g,
+          rows.map(_.getLong(0)), rows.flatMap(_.getSeq[Long](1)))
+        graft.sources.StoreBloom.save(spark, storePath, g)
+      }
+    }
+    appendStore(sigs, storePath, atomicStore, fence, storeExists)
+    // outgrown capacity degrades fpp (more spurious full-path
+    // batches, never a miss): rebuild AFTER the append at 4x, so
+    // growth costs O(1) amortized rebuild scans per doubling
+    gate.filter(_.outgrown(bands)).foreach { _ =>
+      val grown = graft.sources.StoreBloom.fromStore(
+        openStore(spark, storePath, atomicStore, empty)._1, bands)
+      graft.sources.StoreBloom.save(spark, storePath, grown)
+      bloomState.set(grown)
+    }
+    accepted.drop("_fp", "_whs")
   }
 
   /** Stable shard router: `pmod(xxhash64(key), numShards)` — a pure
@@ -1195,7 +1237,7 @@ object DocPipeline {
     * so a single tenant's corpus spreads across sub-shards keyed by a
     * caller-chosen attribute (crawl host, language, url prefix) and
     * its per-batch scans/blooms are bounded by the sub-shard, not the
-    * tenant. THE TRADE, priced by ShardOpsDemo's composite day on
+    * tenant. THE TRADE, priced by ShardOpsDemo's (d521caa) composite day on
     * planted mirrors: duplicates repeating ACROSS sub-keys (mirrored
     * hosts, cross-host re-crawls) land in different sub-shards and are
     * NOT caught — [[auditCrossShardDups]] recovers them pair-exactly —
@@ -1233,7 +1275,7 @@ object DocPipeline {
     *
     * Why this is the 100 TB shape: the unsharded store's fp/band
     * column scans are O(store) I/O per batch (exchange-free but read
-    * in full — ScanFloorDemo), and the driver bloom pair is ~1.2 GB
+    * in full — ScanFloorDemo (d521caa)), and the driver bloom pair is ~1.2 GB
     * per 10^9 docs. Sharding bounds BOTH by the shard, not the
     * corpus: tenant-affine traffic (the deployment norm — each stream
     * serves one content domain) touches one shard and pays one
@@ -1288,7 +1330,7 @@ object DocPipeline {
     * duplicates are sub-key-local, prefer a composite shard key
     * ([[compositeKey]]`(col("tenant"), col("host"))`) instead — that
     * trades recall ACROSS the tenant's sub-shards, a MEASURED loss
-    * (r18, ShardOpsDemo composite day: planted cross-host mirrors on
+    * (r18, ShardOpsDemo (d521caa) composite day: planted cross-host mirrors on
     * split sub-shards are all missed, within-host re-crawls all still
     * reject, and [[auditCrossShardDups]] recovers the missed mirrors
     * pair-exactly — the trade is a number you can re-price on live
@@ -1343,81 +1385,86 @@ object DocPipeline {
       checkpointLocation: Option[String] = None,
       outlierRoots: Map[String, String] = Map.empty,
       tenantScope: Seq[String] = Nil)(onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(numShards >= 1, s"numShards=$numShards must be >= 1")
-    requireScopeSlice(outlierRoots, tenantScope)
-    val keyTag = if (shardTag.nonEmpty) shardTag else shardKey.toString()
-    val outKeys = outlierRoots.keys.toSeq.sorted
-    // per-store driver state, created at the stream's first touch of
-    // each store (hash shards AND outlier roots): epoch fences (atomic
-    // stores) and bloom pairs — keyed by store path
-    val fences = new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
+    // per-store bloom pairs, created at the stream's first touch of each
+    // store (hash shards AND outlier roots) — keyed by store path
     val blooms = new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.atomic.AtomicReference[graft.sources.StoreBloom.SigBlooms]]()
-    def stateFor(spark: org.apache.spark.sql.SparkSession, sp: String) = (
-      fences.computeIfAbsent(sp, _ =>
-        if (atomicStore)
-          Some(graft.sources.AtomicCommit.acquireEpoch(spark, sp,
-            "streamIncrementalSharded"))
-        else None),
-      blooms.computeIfAbsent(sp, _ =>
-        new java.util.concurrent.atomic.AtomicReference[
-          graft.sources.StoreBloom.SigBlooms](null)))
-    withCheckpoint(docs.writeStream, checkpointLocation)
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val spark = b.sparkSession
-        ensureShardedStreamMeta(spark,
-          s"${rootPath.stripSuffix("/")}_shard_meta", rootPath,
-          "restart with the stored shard count AND key (the key is " +
-            s"pinned as hash('$keyTag') — pass shardTag to keep a " +
-            "renamed-but-identical expression) or re-shard by rebuilding " +
-            "every shard from the accepted corpus (rebuildSignatureStore " +
-            "per shard)",
-          numShards, keyTag.hashCode & 0x7fffffff, outlierRoots, tenantScope)
-        val keyStr = shardKey.cast("string")
-        requireBatchInScope(b, keyStr, tenantScope, batchId)
-        val withShard = (
-          if (outKeys.isEmpty) b.withColumn("_okey", lit(null).cast("string"))
-          else b.withColumn("_okey",
-            when(keyStr.isin(outKeys: _*), keyStr)
-              .otherwise(lit(null).cast("string"))))
-          .withColumn("_gshard",
-            when(col("_okey").isNotNull, lit(-1L))
-              .otherwise(shardOf(shardKey, numShards)))
-          .cut
-        // ≤ numShards + outliers rows — the routing census, not a data
-        // collect
-        val census = withShard.select(col("_gshard"), col("_okey"))
-          .distinct().collect()
-        val present = census.filter(_.isNullAt(1)).map(_.getLong(0)).sorted
-        val outPresent = census.filterNot(_.isNullAt(1)).map(_.getString(1)).sorted
-        if (present.isEmpty && outPresent.isEmpty) {
-          onBatch(prepareWithHashes(b, idCol, textCol, minWords, minhashK,
-            bands, tau, transitive = false, maxShingles = maxShingles)
-            .drop("_fp", "_whs").withColumn("shard", lit(0L)).limit(0), batchId)
-        } else {
-          val outParts = outPresent.map { k =>
-            val sp = outlierRoots(k)
-            val (fence, st) = stateFor(spark, sp)
-            incrementalStoreStep(
-              withShard.filter(col("_okey") === k).drop("_gshard", "_okey"),
-              sp, idCol, textCol, minWords, minhashK, bands, tau,
-              atomicStore, maxStoreBandDf, maxShingles, bloom, fence, st)
-              .withColumn("shard", lit(-1L))
-          }
-          val parts = present.map { s =>
-            val sp = shardPath(rootPath, s)
-            val (fence, st) = stateFor(spark, sp)
-            incrementalStoreStep(
-              withShard.filter(col("_gshard") === s).drop("_gshard", "_okey"),
-              sp, idCol, textCol, minWords, minhashK, bands, tau, atomicStore,
-              maxStoreBandDf, maxShingles, bloom, fence, st)
-              .withColumn("shard", lit(s))
-          }
-          onBatch((outParts ++ parts).reduce(_ unionByName _), batchId)
-        }
-      }
-      .start()
+    streamSharded(docs, rootPath, shardKey, numShards, atomicStore, shardTag,
+        checkpointLocation, outlierRoots, tenantScope, onBatch)(
+      "streamIncrementalSharded",
+      "corpus (rebuildSignatureStore per shard)",
+      b => prepareWithHashes(b, idCol, textCol, minWords, minhashK, bands, tau,
+        transitive = false, maxShingles = maxShingles).drop("_fp", "_whs")) {
+      (part, sp, fence) =>
+        incrementalStoreStep(part, sp, idCol, textCol, minWords, minhashK,
+          bands, tau, atomicStore, maxStoreBandDf, maxShingles, bloom, fence,
+          blooms.computeIfAbsent(sp, _ => new java.util.concurrent.atomic
+            .AtomicReference[graft.sources.StoreBloom.SigBlooms](null)))
+    }
+  }
+
+  /** The sharded router both store families run on (contract at
+    * [[streamIncrementalSharded]]): per micro-batch it checks the
+    * `_shard_meta` pin and the tenant scope, routes each row to an
+    * outlier root or a hash shard, runs `step` once per store the batch
+    * touches — against that store's lazily claimed writer fence — and
+    * hands `onBatch` the union of the accepted rows with a `shard`
+    * column (-1 for outlier roots). A batch touching no store yields
+    * `emptyOut(batch)` with `shard`, limited to zero rows. `fixHint`
+    * names what every shard is rebuilt from in the meta mismatch
+    * message. */
+  private def streamSharded(df: DataFrame, rootPath: String, shardKey: Column,
+                            numShards: Int, atomicStore: Boolean,
+                            shardTag: String,
+                            checkpointLocation: Option[String],
+                            outlierRoots: Map[String, String],
+                            tenantScope: Seq[String],
+                            onBatch: (DataFrame, Long) => Unit)(
+      op: String, fixHint: String, emptyOut: DataFrame => DataFrame)(
+      step: (DataFrame, String, Option[Long]) => DataFrame): StreamingQuery = {
+    require(numShards >= 1, s"numShards=$numShards must be >= 1")
+    requireScopeSlice(outlierRoots, tenantScope)
+    val (keyTag, keyHash) = shardKeyPin(shardKey, shardTag)
+    val outKeys = outlierRoots.keys.toSeq.sorted
+    // epoch fences (atomic stores), claimed at the stream's first touch
+    // of each store (hash shards AND outlier roots) — keyed by store path
+    val fences = new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
+    foreachBatchStream(df, checkpointLocation, onBatch) { (b, batchId) =>
+      val spark = b.sparkSession
+      ensureShardedStreamMeta(spark, metaDir(rootPath, "shard"), rootPath,
+        "restart with the stored shard count AND key (the key is " +
+          s"pinned as hash('$keyTag') — pass shardTag to keep a " +
+          "renamed-but-identical expression) or re-shard by rebuilding " +
+          s"every shard from the accepted $fixHint",
+        numShards, keyHash, outlierRoots, tenantScope)
+      val keyStr = shardKey.cast("string")
+      requireBatchInScope(b, keyStr, tenantScope, batchId)
+      val withShard = (
+        if (outKeys.isEmpty) b.withColumn("_okey", lit(null).cast("string"))
+        else b.withColumn("_okey",
+          when(keyStr.isin(outKeys: _*), keyStr)
+            .otherwise(lit(null).cast("string"))))
+        .withColumn("_gshard",
+          when(col("_okey").isNotNull, lit(-1L))
+            .otherwise(shardOf(shardKey, numShards)))
+        .cut
+      // ≤ numShards + outliers rows — the routing census, not a data
+      // collect
+      val census = withShard.select(col("_gshard"), col("_okey"))
+        .distinct().collect()
+      val outRoutes = census.filterNot(_.isNullAt(1)).map(_.getString(1)).sorted
+        .map(k => (outlierRoots(k), col("_okey") === k, -1L))
+      val shardRoutes = census.filter(_.isNullAt(1)).map(_.getLong(0)).sorted
+        .map(s => (shardPath(rootPath, s), col("_gshard") === s, s))
+      val routes = outRoutes ++ shardRoutes
+      if (routes.isEmpty) emptyOut(b).withColumn("shard", lit(0L)).limit(0)
+      else routes.map { case (sp, routed, s) =>
+        val fence = fences.computeIfAbsent(sp, _ =>
+          streamFence(spark, sp, atomicStore, op))
+        step(withShard.filter(routed).drop("_gshard", "_okey"), sp, fence)
+          .withColumn("shard", lit(s))
+      }.reduce(_ unionByName _)
+    }
   }
 
   /** Pin-hash of an outlier routing table: a pure function of the
@@ -1461,8 +1508,23 @@ object DocPipeline {
     * inside any scope that excludes X). */
   private def outlierMetaRows(outlierRoots: Map[String, String]): Seq[(String, Int)] =
     ("outlierHash" -> outlierTableHash(outlierRoots)) +:
-      outlierRoots.toSeq.sorted.map { case (k, r) =>
-        s"out:$k" -> math.max(1, digest31(r)) }
+      outlierRoots.toSeq.sorted.map { case (k, r) => s"out:$k" -> entryPin(r) }
+
+  /** One outlier entry's `out:<tenant>` pin: its dedicated root's digest
+    * (≥ 1, so a pin is never the no-table sentinel). */
+  private def entryPin(root: String): Int = math.max(1, digest31(root))
+
+  /** The per-entry pins (tenant → [[entryPin]]) a `_shard_meta` holds. */
+  private def pinnedEntries(stored: Map[String, Int]): Map[String, Int] =
+    stored.collect { case (k, v) if k.startsWith("out:") => k.stripPrefix("out:") -> v }
+
+  /** Re-pin a `_shard_meta` to `outlierRoots`, keeping its routing rows. */
+  private def repinOutliers(spark: SparkSession, metaPath: String,
+                            stored: Map[String, Int],
+                            outlierRoots: Map[String, String]): Unit =
+    writeStoreMeta(spark, metaPath,
+      stored.view.filterKeys(k => k != "outlierHash" && !k.startsWith("out:"))
+        .toSeq.sortBy(_._1) ++ outlierMetaRows(outlierRoots))
 
   /** Promote (or repoint/demote) outlier tenants on a sharded layout —
     * the maintenance valve behind [[streamIncrementalSharded]]'s
@@ -1505,33 +1567,42 @@ object DocPipeline {
                      minhashK: Int = 8, bands: Int = 4,
                      maxShingles: Int = 0,
                      atomicStore: Boolean = false,
-                     rebuildUnchanged: Boolean = false): Unit = {
-    val spark = docs.sparkSession
-    val metaDir = s"${rootPath.stripSuffix("/")}_shard_meta"
-    require(graft.sources.AtomicCommit.pathExists(spark, metaDir),
+                     rebuildUnchanged: Boolean = false): Unit =
+    promoteOutliers(docs.sparkSession, rootPath, outlierRoots, rebuildUnchanged,
+      "build one with reshardSignatureStores or by starting " +
+        "streamIncrementalSharded",
+      " — finish or rerun the reshard first") { (k, dst) =>
+      rebuildSignatureStore(docs.filter(col(keyCol).cast("string") === k), dst,
+        idCol, textCol, minhashK, bands, maxShingles, atomicStore)
+    }
+
+  /** The tenant promotion both store families share (contract at
+    * [[promoteTenants]]): `rebuild(tenant, dstRoot)` replays the tenant's
+    * accepted rows into its dedicated store, for changed or new entries
+    * only (every entry with `rebuildUnchanged`), then the `_shard_meta`
+    * table is re-pinned LAST. `buildHint` and `finalizeHint` complete the
+    * no-layout and not-finalized messages. */
+  private def promoteOutliers(spark: SparkSession, rootPath: String,
+                              outlierRoots: Map[String, String],
+                              rebuildUnchanged: Boolean,
+                              buildHint: String, finalizeHint: String)(
+      rebuild: (String, String) => Unit): Unit = {
+    val dir = metaDir(rootPath, "shard")
+    require(AtomicCommit.pathExists(spark, dir),
       s"$rootPath carries no shard layout — promotion amends an existing " +
-        "sharded deployment (build one with reshardSignatureStores or by " +
-        "starting streamIncrementalSharded)")
-    val stored = spark.read.parquet(metaDir).collect()
-      .map(r => r.getString(0) -> r.getInt(1)).toMap
+        s"sharded deployment ($buildHint)")
+    val stored = readMeta(spark, dir)
     require(stored.get("numShards").exists(_ > 0),
-      s"$rootPath shard layout is not finalized (meta: $stored) — finish " +
-        "or rerun the reshard first")
-    val pinned = stored.collect {
-      case (k, v) if k.startsWith("out:") => k.stripPrefix("out:") -> v }
+      s"$rootPath shard layout is not finalized (meta: $stored)$finalizeHint")
+    val pinned = pinnedEntries(stored)
     outlierRoots.toSeq.sortBy(_._1).foreach { case (k, dst) =>
-      if (rebuildUnchanged || !pinned.get(k).contains(math.max(1, digest31(dst))))
-        rebuildSignatureStore(
-          docs.filter(col(keyCol).cast("string") === k), dst,
-          idCol, textCol, minhashK, bands, maxShingles, atomicStore)
+      if (rebuildUnchanged || !pinned.get(k).contains(entryPin(dst))) rebuild(k, dst)
     }
     // re-pin LAST: the global hash for unscoped writers plus one
     // `out:<tenant>` row per entry (r18) — the per-entry rows are what
     // scoped writers check, so re-pinning tenant X disturbs no writer
     // whose scope excludes X (the rolling-promotion contract)
-    writeStoreMeta(spark, metaDir,
-      stored.view.filterKeys(k => k != "outlierHash" && !k.startsWith("out:"))
-        .toSeq.sortBy(_._1) ++ outlierMetaRows(outlierRoots))
+    repinOutliers(spark, dir, stored, outlierRoots)
   }
 
   /** Rebuild the signature store from the ACCEPTED corpus at a
@@ -1542,59 +1613,54 @@ object DocPipeline {
     * geometry change cannot re-key history in place; the primary
     * store of accepted documents is the source of truth and this is
     * its one-pass replay. Run while the ingest stream is STOPPED,
-    * then restart it at the new geometry (the meta sidecar is updated
-    * last, so a premature restart at the new parameters fails the
-    * check until the rows are in place).
+    * then restart it at the new geometry (the meta sidecar is written
+    * after the rows, so a premature restart at the new parameters fails
+    * the check until the rows are in place).
     *
     * `docs` must be the accepted corpus (the dedup survivors the old
     * store described) — passing raw traffic would poison the store
     * with signatures of documents that were never accepted. Atomic
-    * stores replace content via one committed append + vacuum (same
-    * crash semantics as [[rebucketEmbeddingStore]]: the
-    * commit-to-vacuum window leaves duplicate rows, which only add
-    * candidate cost and vanish on the next rebuild). */
+    * stores replace content via one committed append, then the meta,
+    * then the vacuum ([[replaceStore]]; same crash semantics as
+    * [[rebucketEmbeddingStore]]: the commit-to-vacuum window leaves
+    * duplicate rows, which only add candidate cost and vanish on the
+    * next rebuild). */
   def rebuildSignatureStore(docs: DataFrame, storePath: String,
                             idCol: String = "doc_id",
                             textCol: String = "text",
                             minhashK: Int = 8, bands: Int = 4,
                             maxShingles: Int = 0,
                             atomicStore: Boolean = false): Unit = {
-    import graft.core.Checkpoints.CutOps
-    val spark = docs.sparkSession
     // the bloom sidecar's coverage is void once content is re-keyed;
     // dropping it FIRST means any crash below leaves a missing sidecar
     // (next stream start rebuilds — safe), never a stale one
-    graft.sources.StoreBloom.invalidate(spark, storePath)
-    val sigs = signatures(docs, idCol, textCol, minhashK, bands, maxShingles).cut
-    if (atomicStore) {
-      graft.sources.AppendStore.append(sigs, storePath)
-      graft.sources.AtomicCommit.vacuum(spark, storePath, keepVersions = 1)
-    } else sigs.write.mode("overwrite").parquet(storePath)
-    writeStoreMeta(spark, s"${storePath.stripSuffix("/")}_sig_meta",
-      Seq("minhashK" -> minhashK, "bands" -> bands, "fpv" -> 2,
-        "m" -> maxShingles, "bkv" -> 2))
+    graft.sources.StoreBloom.invalidate(docs.sparkSession, storePath)
+    replaceStore(signatures(docs, idCol, textCol, minhashK, bands, maxShingles),
+      storePath, atomicStore, metaDir(storePath, "sig"),
+      sigGeometry(minhashK, bands, maxShingles))
   }
 
-  /** Streaming SPAN dedup against a growing chunk-hash store — the
-    * continuous-ingestion twin of `Dedup.chunkDedup`: each micro-batch
-    * splits its documents into `chunkTokens`-token chunks, keeps only
-    * chunks that are first occurrences BOTH within the batch (min
-    * (doc, chunk_id) wins) and versus every previously accepted batch
-    * (anti-join on the persisted md5 set), reassembles surviving text
-    * per document, hands (idCol, text_kept, n_kept, n_dropped) to
-    * `onBatch`, and appends the newly accepted hashes to the store.
-    *
-    * The store holds ONE 32-char hash per ever-accepted chunk — it
-    * grows with distinct content, not with traffic. Same `foreachBatch`
-    * durability caveat as [[streamIncremental]]; `atomicStore = true`
-    * routes the store through [[graft.sources.AppendStore]]
-    * (write-then-commit) so a crashed append is invisible debris. */
-  /** The persisted hash column IS its own format version: r15 stores
-    * keep `h` as binary(16) (`unhex(md5(...))` — the in-batch
-    * operators' representation, half the bytes of the old 32-char hex
-    * string at rest and on every broadcast). A pre-r15 string-keyed
-    * store must die loudly — Spark would happily cast the join and
-    * silently never match, re-accepting every duplicate forever. */
+  /** Replace a store's whole content — the one write behind
+    * [[rebuildSignatureStore]], [[rebuildEmbeddingStore]] and
+    * [[rebucketEmbeddingStore]]. `rows` is materialized first (it may
+    * read the store it replaces). ATOMIC stores: one committed append,
+    * then the `geometry` meta, then the vacuum — the meta lands BETWEEN
+    * the two (r17, see [[rebucketEmbeddingStore]]): with the vacuum
+    * first, a window holds ONLY new-geometry rows under the OLD meta,
+    * where a meta-keyed reader — or a stream restarted at the old
+    * geometry, which passes the meta check — silently matches nothing.
+    * PLAIN stores: overwrite, then the meta. */
+  private def replaceStore(rows: DataFrame, storePath: String,
+                           atomicStore: Boolean, metaPath: String,
+                           geometry: Seq[(String, Int)]): Unit = {
+    val spark = rows.sparkSession
+    val cut = rows.cut
+    if (atomicStore) AppendStore.append(cut, storePath)
+    else cut.write.mode("overwrite").parquet(storePath)
+    writeStoreMeta(spark, metaPath, geometry)
+    if (atomicStore) AtomicCommit.vacuum(spark, storePath, keepVersions = 1)
+  }
+
   /** Hard bound on the driver-side batch-key collects (VERDICT r15
     * what's-wrong #2): the bloom gate and the sidecar merge collect
     * ~5 longs per batch doc to the driver — fine under the documented
@@ -1644,6 +1710,12 @@ object DocPipeline {
         "the store from the corpus (rebuildSignatureStore)")
   }
 
+  /** The persisted hash column IS its own format version: r15 stores
+    * keep `h` as binary(16) (`unhex(md5(...))` — the in-batch
+    * operators' representation, half the bytes of the old 32-char hex
+    * string at rest and on every broadcast). A pre-r15 string-keyed
+    * store must die loudly — Spark would happily cast the join and
+    * silently never match, re-accepting every duplicate forever. */
   private def requireBinaryHashStore(store: DataFrame, storePath: String,
                                      what: String): Unit =
     require(store.schema("h").dataType ==
@@ -1652,6 +1724,20 @@ object DocPipeline {
         "keys (pre-r15 hex format) — current code keys on binary(16) " +
         "unhex(md5); rebuild the store from the corpus")
 
+  /** Streaming SPAN dedup against a growing chunk-hash store — the
+    * continuous-ingestion twin of `Dedup.chunkDedup`: each micro-batch
+    * splits its documents into `chunkTokens`-token chunks, keeps only
+    * chunks that are first occurrences BOTH within the batch (min
+    * (doc, chunk_id) wins) and versus every previously accepted batch
+    * (anti-join on the persisted md5 set), reassembles surviving text
+    * per document, hands (idCol, text_kept, n_kept, n_dropped) to
+    * `onBatch`, and appends the newly accepted hashes to the store.
+    *
+    * The store holds ONE 32-char hash per ever-accepted chunk — it
+    * grows with distinct content, not with traffic. Same `foreachBatch`
+    * durability caveat as [[streamIncremental]]; `atomicStore = true`
+    * routes the store through [[graft.sources.AppendStore]]
+    * (write-then-commit) so a crashed append is invisible debris. */
   def streamChunkDedup(
       docs: DataFrame,
       storePath: String,
@@ -1659,139 +1745,87 @@ object DocPipeline {
       textCol: String = "text",
       chunkTokens: Int = 20,
       atomicStore: Boolean = false,
-      checkpointLocation: Option[String] = None)(onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fence = streamFence(docs, storePath, atomicStore, "streamChunkDedup")
-    withCheckpoint(docs.writeStream, checkpointLocation)
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val spark = b.sparkSession
-        // the stored md5s hash WHOLE chunks: a restart at a different
-        // chunkTokens re-chunks on different boundaries and no stored
-        // hash ever matches again — die loudly (rebuild the store from
-        // the corpus to change the width)
-        checkOrWriteStoreMeta(spark,
-          s"${storePath.stripSuffix("/")}_chunk_meta", storePath,
-          "restart with the stored chunk width or rebuild the store",
-          Seq("chunkTokens" -> chunkTokens))
-        def empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("h",
-              org.apache.spark.sql.types.BinaryType, nullable = false))))
-        val storeExists = graft.sources.AtomicCommit.pathExists(spark, storePath)
-        val store =
-          if (atomicStore) graft.sources.AppendStore.readOr(spark, storePath, empty)
-          else if (storeExists) spark.read.parquet(storePath)
-          else empty
-        requireBinaryHashStore(store, storePath, "chunk-hash")
-        // store-side exchange discipline (the
-        // prepareIncrementalWithHashes argument): the store grows with
-        // distinct corpus content while the batch stays small, so the
-        // legacy `store.distinct()` + SMJ anti shuffled AND aggregated
-        // the whole store every batch. One map-only aggregate over the
-        // batch prices its chunk-hash set; when it fits the broadcast
-        // threshold, the store's hash column is semi-filtered map-side
-        // (scan only, no exchange) and the distinct is dropped — anti
-        // joins are set-semantics over the right side, so the rare
-        // crash-window duplicate rows change nothing. Oversized
-        // batches (or threshold ≤ 0) keep the legacy plan.
-        val thr = graft.core.Joins.broadcastThresholdBytes(spark)
-        val nChunks =
-          if (thr <= 0) Long.MaxValue
-          else b.agg(coalesce(sum(ceil(size(split(col(textCol), " "))
-            .cast("double") / chunkTokens).cast("long")), lit(0L)))
-            .head().getLong(0)
-        val storeH = store.select(col("h").as("_h"))
-        val storeSide =
-          if (nChunks <= thr / 48) // 16 B binary md5 + row envelope (r15 hv=binary)
-            storeH.join(broadcast(
-              Corpus.chunkDocs(b, idCol, textCol, chunkTokens)
-                .select(unhex(md5(col("chunk").cast("binary"))).as("_h"))),
-              Seq("_h"), "left_semi")
-          else storeH.distinct()
-        // winner decision mirrors Dedup.chunkDedup: partial+final
-        // min(struct) over a text-free (md5, doc, chunk_id) projection
-        // (skew-safe — a hot chunk collapses map-side), then anti-join
-        // the persisted set; the checkpoint materializes the TINY
-        // winner frame (scalars), not the chunk text
-        val winners = Corpus.chunkDocs(b, idCol, textCol, chunkTokens)
-          .select(unhex(md5(col("chunk").cast("binary"))).as("_h"),
-            struct(col(idCol).as("_wid"), col("chunk_id").as("_wcid")).as("_w"))
-          .groupBy(col("_h")).agg(min(col("_w")).as("_w"))
-          .join(storeSide, Seq("_h"), "left_anti")
-          .select(col("_h"), col("_w._wid").as(idCol), col("_w._wcid").as("_wcid"))
-          .cut
-        val keptPerDoc = winners.groupBy(col(idCol))
-          .agg(collect_set(col("_wcid")).as("_kept_ids"))
-        // slim map-side reassembly (the Dedup.chunkDedup pattern):
-        // re-chunk the original column against the per-doc kept-id
-        // arrays — chunk text never rides a shuffle; here the KEPT set
-        // is the slim side (store-known chunks are never winners, so
-        // drop arrays would grow with boilerplate, kept arrays don't)
-        val out = b.filter(length(col(textCol)) > 0)
-          .withColumn("_toks", split(col(textCol), " "))
-          .filter(size(col("_toks")) > 0)
-          .join(keptPerDoc, Seq(idCol), "left")
-          .withColumn("_chunks",
-            transform(Corpus.chunkSlices(col("_toks"), chunkTokens, 0),
-              s => array_join(s, " ")))
-          .withColumn("_nk",
-            when(col("_kept_ids").isNull, lit(0L))
-              .otherwise(size(col("_kept_ids")).cast("long")))
-          .select(col(idCol),
-            col("_nk").as("n_kept"),
-            (size(col("_chunks")).cast("long") - col("_nk")).as("n_dropped"),
-            nullif(array_join(
-              filter(col("_chunks"), (_, i) =>
-                coalesce(array_contains(col("_kept_ids"), i.cast("long")),
-                  lit(false))),
-              " "), lit("")).as("text_kept"))
-        val newHashes = winners.select(col("_h").as("h"))
-        if (atomicStore) graft.sources.AppendStore.append(newHashes, storePath, fence)
-        else graft.sources.AppendStore.sized(newHashes).write.mode(if (storeExists) "append" else "overwrite")
-          .parquet(storePath)
-        onBatch(out, batchId)
-      }
-      .start()
-  }
+      checkpointLocation: Option[String] = None)(onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    streamStore(docs, storePath, atomicStore, "streamChunkDedup",
+        checkpointLocation, onBatch) { (b, fence) =>
+      val spark = b.sparkSession
+      // the stored md5s hash WHOLE chunks: a restart at a different
+      // chunkTokens re-chunks on different boundaries and no stored
+      // hash ever matches again — die loudly (rebuild the store from
+      // the corpus to change the width)
+      checkOrWriteStoreMeta(spark, metaDir(storePath, "chunk"), storePath,
+        "restart with the stored chunk width or rebuild the store",
+        Seq("chunkTokens" -> chunkTokens))
+      val (store, storeExists) = openStore(spark, storePath, atomicStore,
+        emptyHashStore(spark, "h", BinaryType))
+      requireBinaryHashStore(store, storePath, "chunk-hash")
+      // store-side exchange discipline (the
+      // prepareIncrementalWithHashes argument): the store grows with
+      // distinct corpus content while the batch stays small, so the
+      // legacy `store.distinct()` + SMJ anti shuffled AND aggregated
+      // the whole store every batch. One map-only aggregate over the
+      // batch prices its chunk-hash set; when it fits the broadcast
+      // threshold, the store's hash column is semi-filtered map-side
+      // (scan only, no exchange) and the distinct is dropped — anti
+      // joins are set-semantics over the right side, so the rare
+      // crash-window duplicate rows change nothing. Oversized
+      // batches (or threshold ≤ 0) keep the legacy plan.
+      val thr = graft.core.Joins.broadcastThresholdBytes(spark)
+      val nChunks =
+        if (thr <= 0) Long.MaxValue
+        else b.agg(coalesce(sum(ceil(size(split(col(textCol), " "))
+          .cast("double") / chunkTokens).cast("long")), lit(0L)))
+          .head().getLong(0)
+      val storeH = store.select(col("h").as("_h"))
+      val storeSide =
+        if (nChunks <= thr / 48) // 16 B binary md5 + row envelope (r15 hv=binary)
+          storeH.join(broadcast(
+            Corpus.chunkDocs(b, idCol, textCol, chunkTokens)
+              .select(unhex(md5(col("chunk").cast("binary"))).as("_h"))),
+            Seq("_h"), "left_semi")
+        else storeH.distinct()
+      // winner decision mirrors Dedup.chunkDedup: partial+final
+      // min(struct) over a text-free (md5, doc, chunk_id) projection
+      // (skew-safe — a hot chunk collapses map-side), then anti-join
+      // the persisted set; the checkpoint materializes the TINY
+      // winner frame (scalars), not the chunk text
+      val winners = Corpus.chunkDocs(b, idCol, textCol, chunkTokens)
+        .select(unhex(md5(col("chunk").cast("binary"))).as("_h"),
+          struct(col(idCol).as("_wid"), col("chunk_id").as("_wcid")).as("_w"))
+        .groupBy(col("_h")).agg(min(col("_w")).as("_w"))
+        .join(storeSide, Seq("_h"), "left_anti")
+        .select(col("_h"), col("_w._wid").as(idCol), col("_w._wcid").as("_wcid"))
+        .cut
+      val keptPerDoc = winners.groupBy(col(idCol))
+        .agg(collect_set(col("_wcid")).as("_kept_ids"))
+      // slim map-side reassembly (the Dedup.chunkDedup pattern):
+      // re-chunk the original column against the per-doc kept-id
+      // arrays — chunk text never rides a shuffle; here the KEPT set
+      // is the slim side (store-known chunks are never winners, so
+      // drop arrays would grow with boilerplate, kept arrays don't)
+      val out = b.filter(length(col(textCol)) > 0)
+        .withColumn("_toks", split(col(textCol), " "))
+        .filter(size(col("_toks")) > 0)
+        .join(keptPerDoc, Seq(idCol), "left")
+        .withColumn("_chunks",
+          transform(Corpus.chunkSlices(col("_toks"), chunkTokens, 0),
+            s => array_join(s, " ")))
+        .withColumn("_nk",
+          when(col("_kept_ids").isNull, lit(0L))
+            .otherwise(size(col("_kept_ids")).cast("long")))
+        .select(col(idCol),
+          col("_nk").as("n_kept"),
+          (size(col("_chunks")).cast("long") - col("_nk")).as("n_dropped"),
+          nullif(array_join(
+            filter(col("_chunks"), (_, i) =>
+              coalesce(array_contains(col("_kept_ids"), i.cast("long")),
+                lit(false))),
+            " "), lit("")).as("text_kept"))
+      appendStore(winners.select(col("_h").as("h")), storePath, atomicStore,
+        fence, storeExists)
+      out
+    }
 
-  /** Streaming VARIABLE-SPAN dedup against a growing shingle store —
-    * the continuous-ingestion twin of `Dedup.spanDedup` (ExactSubstr
-    * semantics across batches): a token position in an arriving doc is
-    * duplicated when its word `n`-shingle was seen in ANY previously
-    * accepted batch (history is always the witness and always wins) or
-    * recurs across ≥2 docs of the current batch (minimum doc id wins,
-    * exactly the batch operator's election). Duplicated positions grow
-    * to maximal runs; runs ≥ `minTokens` are cut from the doc's token
-    * stream; `onBatch` receives (idCol, n_removed, text_kept).
-    *
-    * The store holds one 64-bit hash per DISTINCT shingle ever seen —
-    * it grows with distinct content, not traffic (the
-    * [[streamChunkDedup]] store argument, at shingle granularity).
-    * Scale shape per batch: map-side shingling, one shingle-keyed
-    * dedup + store anti/semi join pair, one doc-keyed window — the
-    * batch operator's exchanges plus the store join; the only
-    * checkpointed frame is the tiny new-shingle set. Same
-    * `foreachBatch` durability caveat as [[streamIncremental]];
-    * `atomicStore = true` routes the store through
-    * [[graft.sources.AppendStore]] (write-then-commit). */
-  /** Streaming cross-corpus LINE dedup against a growing line-hash
-    * store — the continuous-ingestion twin of [[Dedup.lineDedup]] (C4
-    * line semantics across batches): a line is cut when it was
-    * accepted in ANY previous batch (history always wins) or recurs
-    * within the current batch (min (doc, pos) wins, exactly the batch
-    * operator's election). Lines shorter than `minChars` always pass.
-    * `onBatch` receives (idCol, n_lines, n_dropped, text_kept) —
-    * the batch operator's exact schema, and a single-batch run is
-    * value-identical to [[Dedup.lineDedup]] (spec-proven).
-    *
-    * The store holds one md5 per DISTINCT accepted line — it grows
-    * with distinct content, not traffic. Scale shape per batch:
-    * map-side line split, one line-keyed partial-min + store anti
-    * join, one doc-keyed reassembly; the only checkpointed frame is
-    * the tiny new-hash set. Same `foreachBatch` durability caveat as
-    * [[streamIncremental]]; `atomicStore = true` routes the store
-    * through [[graft.sources.AppendStore]] (write-then-commit). */
   /** Streaming EMBEDDING near-dedup against a growing vector store —
     * the vector twin of [[streamIncremental]]: each micro-batch drops
     * (a) in-batch near-dups (min-id survivor per verified cosine pair,
@@ -1840,16 +1874,12 @@ object DocPipeline {
       bands: Int = 2,
       tau: Double = 0.9,
       atomicStore: Boolean = false,
-      checkpointLocation: Option[String] = None)(onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fence = streamFence(vecs, storePath, atomicStore, "streamEmbeddingDedup")
-    withCheckpoint(vecs.writeStream, checkpointLocation)
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        onBatch(embeddingStoreStep(b, storePath, dim, idCol, vecCol, bits,
-          bands, tau, atomicStore, fence), batchId)
-      }
-      .start()
-  }
+      checkpointLocation: Option[String] = None)(onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    streamStore(vecs, storePath, atomicStore, "streamEmbeddingDedup",
+        checkpointLocation, onBatch) { (b, fence) =>
+      embeddingStoreStep(b, storePath, dim, idCol, vecCol, bits, bands, tau,
+        atomicStore, fence)
+    }
 
   /** One micro-batch of embedding dedup against ONE store — the shared
     * per-store step behind [[streamEmbeddingDedup]] and
@@ -1863,41 +1893,37 @@ object DocPipeline {
       atomicStore: Boolean, fence: Option[Long]): DataFrame = {
     def keysOf(df: DataFrame): DataFrame =
       embStoreKeys(df, idCol, vecCol, dim, bits, bands)
-        val spark = b.sparkSession
-        checkOrWriteEmbMeta(spark, storePath, dim, bits, bands)
-        def empty = keysOf(b.limit(0))
-        val storeExists = graft.sources.AtomicCommit.pathExists(spark, storePath)
-        val store =
-          if (atomicStore) graft.sources.AppendStore.readOr(spark, storePath, empty)
-          else if (storeExists) spark.read.parquet(storePath)
-          else empty
-        val inBatchDrop = Dedup.embeddingNearDups(b, idCol, vecCol, dim, bits, tau, bands)
-          .select(col(idCol)).distinct()
-        val survivors = b.join(inBatchDrop, Seq(idCol), "left_anti")
-        // store-side semi-filter (the scaladoc's exchange discipline):
-        // keysOf(b) — not keysOf(survivors) — keeps the broadcast side
-        // map-only from the raw batch (no in-batch-dedup subtree runs
-        // twice); it is a superset of the survivors' keys, and extra
-        // keys only retain store rows the inner join below discards
-        val thr = graft.core.Joins.broadcastThresholdBytes(spark)
-        val nVecs = if (thr <= 0) Long.MaxValue else b.count()
-        val storeVecs = store.select(col("band"), col("bucket"), col("vec").as("_sv"))
-        val storeSide =
-          if (nVecs <= thr / (bands * 48L)) // 2 ints + row envelope per key
-            storeVecs.join(broadcast(keysOf(b).select(col("band"), col("bucket"))),
-              Seq("band", "bucket"), "left_semi")
-          else storeVecs
-        val histDrop = keysOf(survivors)
-          .join(storeSide, Seq("band", "bucket"))
-          .filter(Similarity.cosine(col("vec"), col("_sv")) >= tau)
-          .select(col("id").as(idCol)).distinct()
-        val accepted = survivors.join(histDrop, Seq(idCol), "left_anti")
-          .cut // materialize BEFORE the store append
-        val newKeys = keysOf(accepted)
-        if (atomicStore) graft.sources.AppendStore.append(newKeys, storePath, fence)
-        else graft.sources.AppendStore.sized(newKeys).write.mode(if (storeExists) "append" else "overwrite")
-          .parquet(storePath)
-        accepted
+    val spark = b.sparkSession
+    checkOrWriteStoreMeta(spark, metaDir(storePath, "emb"), storePath,
+      "restart with the stored geometry or rebucket the store " +
+        "(rebucketEmbeddingStore)",
+      embGeometry(dim, bits, bands), legacyDefaults = Map("pv" -> 1))
+    val (store, storeExists) = openStore(spark, storePath, atomicStore,
+      keysOf(b.limit(0)))
+    val inBatchDrop = Dedup.embeddingNearDups(b, idCol, vecCol, dim, bits, tau, bands)
+      .select(col(idCol)).distinct()
+    val survivors = b.join(inBatchDrop, Seq(idCol), "left_anti")
+    // store-side semi-filter (the scaladoc's exchange discipline):
+    // keysOf(b) — not keysOf(survivors) — keeps the broadcast side
+    // map-only from the raw batch (no in-batch-dedup subtree runs
+    // twice); it is a superset of the survivors' keys, and extra
+    // keys only retain store rows the inner join below discards
+    val thr = graft.core.Joins.broadcastThresholdBytes(spark)
+    val nVecs = if (thr <= 0) Long.MaxValue else b.count()
+    val storeVecs = store.select(col("band"), col("bucket"), col("vec").as("_sv"))
+    val storeSide =
+      if (nVecs <= thr / (bands * 48L)) // 2 ints + row envelope per key
+        storeVecs.join(broadcast(keysOf(b).select(col("band"), col("bucket"))),
+          Seq("band", "bucket"), "left_semi")
+      else storeVecs
+    val histDrop = keysOf(survivors)
+      .join(storeSide, Seq("band", "bucket"))
+      .filter(Similarity.cosine(col("vec"), col("_sv")) >= tau)
+      .select(col("id").as(idCol)).distinct()
+    val accepted = survivors.join(histDrop, Seq(idCol), "left_anti")
+      .cut // materialize BEFORE the store append
+    appendStore(keysOf(accepted), storePath, atomicStore, fence, storeExists)
+    accepted
   }
 
   /** READER-facing batch duplicate probe against a persisted
@@ -1941,12 +1967,9 @@ object DocPipeline {
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         atomicStore: Boolean = true,
                         maxAttempts: Int = 8): DataFrame = {
-    import graft.core.Checkpoints.CutOps
     require(maxAttempts >= 1, s"maxAttempts=$maxAttempts must be >= 1")
     val spark = vecs.sparkSession
-    def readMeta(): Map[String, Int] =
-      spark.read.parquet(embMetaDir(storePath)).collect()
-        .map(r => r.getString(0) -> r.getInt(1)).toMap
+    val metaPath = metaDir(storePath, "emb")
     var attempt = 0
     var lastTorn: Throwable = null
     while (attempt < maxAttempts) {
@@ -1954,13 +1977,13 @@ object DocPipeline {
       // the WHOLE attempt retries on a torn listing — the meta sidecar
       // itself can be mid-overwrite (empty dir) at either read
       try {
-        val m1 = readMeta()
+        val m1 = readMeta(spark, metaPath)
         require(m1.getOrElse("pv", 1) == 2,
           s"embedding store $storePath carries pv=1 (pre-r16 linear plane " +
             "family) keys — rebucket it first (rebucketEmbeddingStore)")
         val (dim, bits, bands) = (m1("dim"), m1("bits"), m1("bands"))
         val store =
-          if (atomicStore) graft.sources.AppendStore.readOr(spark, storePath,
+          if (atomicStore) AppendStore.readOr(spark, storePath,
             sys.error(s"no committed embedding store at $storePath"))
           else spark.read.parquet(storePath)
         val df = embStoreKeys(vecs, idCol, vecCol, dim, bits, bands)
@@ -1971,7 +1994,7 @@ object DocPipeline {
           .select(col("id").as(idCol), col("match_id"),
             Similarity.cosine(col("vec"), col("_sv")).as("cos"))
           .distinct().cut
-        if (readMeta() == m1) return df
+        if (readMeta(spark, metaPath) == m1) return df
         require(attempt < maxAttempts,
           s"embeddingDupProbe: $storePath geometry moved mid-read " +
             s"$attempt times — a rebucket storm; quiesce maintenance " +
@@ -1981,7 +2004,7 @@ object DocPipeline {
         // exhaustion message below instead of propagating the raw
         // FileNotFound/inference error (VERDICT r17 #1) — the raw cause
         // rides along for forensics
-        case e: Throwable if graft.sources.TornReads.matches(e) => lastTorn = e
+        case NonFatal(e) if graft.sources.TornReads.matches(e) => lastTorn = e
       }
     }
     throw new IllegalStateException(
@@ -2027,11 +2050,7 @@ object DocPipeline {
         // (reading the shard root raw would partition-discover v= dirs
         // and sweep uncommitted crash debris into the count); a plain
         // store counts its parquet directly.
-        val versions = graft.sources.AppendStore.liveVersions(spark, sp)
-        if (versions.nonEmpty)
-          spark.read.parquet(versions.map(v =>
-            graft.sources.AtomicCommit.versionDir(sp, v)): _*).count()
-        else spark.read.parquet(sp).select(col("doc_id")).count()
+        readLive(spark, sp).count()
       })
     }.toMap
     val total = counts.values.sum
@@ -2085,28 +2104,11 @@ object DocPipeline {
     * HASH shards only — a promoted tenant's dedicated outlier root is
     * out of the router and out of this audit (its copies of other
     * tenants' content stop being counted from its promotion cycle on;
-    * FleetMonthDemo's promotion-aware truth derives exactly this). */
+    * FleetMonthDemo's (d521caa) promotion-aware truth derives exactly this). */
   def auditCrossShardDups(spark: org.apache.spark.sql.SparkSession,
                           rootPath: String, numShards: Int,
-                          sampleK: Int = 4096): CrossShardDupAudit = {
-    require(numShards >= 2, s"numShards=$numShards: need >= 2 to cross")
-    require(sampleK >= 2, s"sampleK=$sampleK must be >= 2")
-    val frames = (0L until numShards.toLong).flatMap { s =>
-      val sp = shardPath(rootPath, s)
-      if (!graft.sources.AtomicCommit.pathExists(spark, sp)) None
-      else {
-        // LIVE versions, not committed: a grace-retained pre-fold
-        // version would double-count every fp in the audit
-        val versions = graft.sources.AppendStore.liveVersions(spark, sp)
-        val df =
-          if (versions.nonEmpty) spark.read.parquet(versions.map(v =>
-            graft.sources.AtomicCommit.versionDir(sp, v)): _*)
-          else spark.read.parquet(sp)
-        Some(df.select(lit(s).as("_shard"), col("fp")))
-      }
-    }
-    kmvCrossShardAudit(sampleK, frames)
-  }
+                          sampleK: Int = 4096): CrossShardDupAudit =
+    kmvCrossShardAudit(spark, rootPath, numShards, sampleK, col("fp"))
 
   /** Vector-family twin of [[auditCrossShardDups]] (r18 — the same
     * honest caveat, priced for the embedding stores):
@@ -2124,29 +2126,23 @@ object DocPipeline {
     * shuffled per shard-task, numShards × k longs on the driver. */
   def auditCrossShardEmbDups(spark: org.apache.spark.sql.SparkSession,
                              rootPath: String, numShards: Int,
-                             sampleK: Int = 4096): CrossShardDupAudit = {
+                             sampleK: Int = 4096): CrossShardDupAudit =
+    kmvCrossShardAudit(spark, rootPath, numShards, sampleK,
+      xxhash64(col("vec").cast("string")))
+
+  /** The shared KMV cross-shard estimator over the hash shards under
+    * `rootPath`: `fp` is each audit's per-row key, uniform over the
+    * signed-long range. */
+  private def kmvCrossShardAudit(spark: SparkSession, rootPath: String,
+                                 numShards: Int, sampleK: Int,
+                                 fp: Column): CrossShardDupAudit = {
     require(numShards >= 2, s"numShards=$numShards: need >= 2 to cross")
     require(sampleK >= 2, s"sampleK=$sampleK must be >= 2")
     val frames = (0L until numShards.toLong).flatMap { s =>
       val sp = shardPath(rootPath, s)
-      if (!graft.sources.AtomicCommit.pathExists(spark, sp)) None
-      else {
-        val versions = graft.sources.AppendStore.liveVersions(spark, sp)
-        val df =
-          if (versions.nonEmpty) spark.read.parquet(versions.map(v =>
-            graft.sources.AtomicCommit.versionDir(sp, v)): _*)
-          else spark.read.parquet(sp)
-        Some(df.select(lit(s).as("_shard"),
-          xxhash64(col("vec").cast("string")).as("fp")))
-      }
+      if (!AtomicCommit.pathExists(spark, sp)) None
+      else Some(readLive(spark, sp).select(lit(s).as("_shard"), fp.as("fp")))
     }
-    kmvCrossShardAudit(sampleK, frames)
-  }
-
-  /** The shared KMV cross-shard estimator: `frames` carry (_shard, fp)
-    * with fp uniform over the signed-long range. */
-  private def kmvCrossShardAudit(sampleK: Int,
-                                 frames: Seq[DataFrame]): CrossShardDupAudit = {
     if (frames.size < 2)
       return CrossShardDupAudit(sampleK, Map.empty, Nil, 0L)
     val w = Window.partitionBy(col("_shard")).orderBy(col("fp"))
@@ -2225,25 +2221,22 @@ object DocPipeline {
                              shardTag: String = ""): Unit = {
     require(numShards >= 1, s"numShards=$numShards must be >= 1")
     val spark = docs.sparkSession
-    val keyTag = if (shardTag.nonEmpty) shardTag else shardKey.toString()
-    val keyHash = keyTag.hashCode & 0x7fffffff
-    val metaDir = s"${rootPath.stripSuffix("/")}_shard_meta"
-    if (graft.sources.AtomicCommit.pathExists(spark, metaDir)) {
+    val (_, keyHash) = shardKeyPin(shardKey, shardTag)
+    val dir = metaDir(rootPath, "shard")
+    if (AtomicCommit.pathExists(spark, dir)) {
       // a sentinel still at the numShards=0 in-progress marker is
       // proof the prior reshard crashed before finalizing — the rerun
       // may overwrite it (ADVICE r16: the sentinel is a sibling of the
       // root, so "delete the partial root and rerun" used to strand it
       // and die here with a misleading layout refusal)
-      val stored = spark.read.parquet(metaDir).collect()
-        .map(r => r.getString(0) -> r.getInt(1)).toMap
+      val stored = readMeta(spark, dir)
       require(stored.get("numShards").contains(0),
         s"$rootPath already carries a FINALIZED shard layout " +
           s"(numShards=${stored.getOrElse("numShards", -1)}) — reshard " +
           "into a FRESH root (side-by-side: the old layout keeps serving " +
           "until the stream is repointed)")
     }
-    writeStoreMeta(spark, metaDir,
-      Seq("numShards" -> 0, "shardKeyHash" -> keyHash))
+    writeStoreMeta(spark, dir, Seq("numShards" -> 0, "shardKeyHash" -> keyHash))
     val routed = docs.withColumn("_gshard", shardOf(shardKey, numShards)).cut
     val present = routed.select(col("_gshard")).distinct()
       .collect().map(_.getLong(0)).sorted
@@ -2290,7 +2283,7 @@ object DocPipeline {
         throw e
       }
     } finally pool.shutdown()
-    writeStoreMeta(spark, metaDir,
+    writeStoreMeta(spark, dir,
       Seq("numShards" -> numShards, "shardKeyHash" -> keyHash))
   }
 
@@ -2336,70 +2329,15 @@ object DocPipeline {
       shardTag: String = "",
       checkpointLocation: Option[String] = None,
       outlierRoots: Map[String, String] = Map.empty,
-      tenantScope: Seq[String] = Nil)(onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(numShards >= 1, s"numShards=$numShards must be >= 1")
-    requireScopeSlice(outlierRoots, tenantScope)
-    val keyTag = if (shardTag.nonEmpty) shardTag else shardKey.toString()
-    val outKeys = outlierRoots.keys.toSeq.sorted
-    // fences keyed by STORE PATH (hash shards AND outlier roots)
-    val fences = new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
-    def fenceFor(spark: org.apache.spark.sql.SparkSession, sp: String) =
-      fences.computeIfAbsent(sp, _ =>
-        if (atomicStore)
-          Some(graft.sources.AtomicCommit.acquireEpoch(spark, sp,
-            "streamEmbeddingDedupSharded"))
-        else None)
-    withCheckpoint(vecs.writeStream, checkpointLocation)
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val spark = b.sparkSession
-        ensureShardedStreamMeta(spark,
-          s"${rootPath.stripSuffix("/")}_shard_meta", rootPath,
-          "restart with the stored shard count AND key (the key is " +
-            s"pinned as hash('$keyTag') — pass shardTag to keep a " +
-            "renamed-but-identical expression) or re-shard by rebuilding " +
-            "every shard from the accepted vectors (rebuildEmbeddingStore " +
-            "per shard)",
-          numShards, keyTag.hashCode & 0x7fffffff, outlierRoots, tenantScope)
-        val keyStr = shardKey.cast("string")
-        requireBatchInScope(b, keyStr, tenantScope, batchId)
-        val withShard = (
-          if (outKeys.isEmpty) b.withColumn("_okey", lit(null).cast("string"))
-          else b.withColumn("_okey",
-            when(keyStr.isin(outKeys: _*), keyStr)
-              .otherwise(lit(null).cast("string"))))
-          .withColumn("_gshard",
-            when(col("_okey").isNotNull, lit(-1L))
-              .otherwise(shardOf(shardKey, numShards)))
-          .cut
-        val census = withShard.select(col("_gshard"), col("_okey"))
-          .distinct().collect()
-        val present = census.filter(_.isNullAt(1)).map(_.getLong(0)).sorted
-        val outPresent = census.filterNot(_.isNullAt(1)).map(_.getString(1)).sorted
-        if (present.isEmpty && outPresent.isEmpty) {
-          onBatch(b.withColumn("shard", lit(0L)).limit(0), batchId)
-        } else {
-          val outParts = outPresent.map { k =>
-            val sp = outlierRoots(k)
-            embeddingStoreStep(
-              withShard.filter(col("_okey") === k).drop("_gshard", "_okey"),
-              sp, dim, idCol, vecCol, bits, bands, tau, atomicStore,
-              fenceFor(spark, sp))
-              .withColumn("shard", lit(-1L))
-          }
-          val parts = present.map { s =>
-            val sp = shardPath(rootPath, s)
-            embeddingStoreStep(
-              withShard.filter(col("_gshard") === s).drop("_gshard", "_okey"),
-              sp, dim, idCol, vecCol, bits, bands, tau, atomicStore,
-              fenceFor(spark, sp))
-              .withColumn("shard", lit(s))
-          }
-          onBatch((outParts ++ parts).reduce(_ unionByName _), batchId)
-        }
-      }
-      .start()
-  }
+      tenantScope: Seq[String] = Nil)(onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    streamSharded(vecs, rootPath, shardKey, numShards, atomicStore, shardTag,
+        checkpointLocation, outlierRoots, tenantScope, onBatch)(
+      "streamEmbeddingDedupSharded",
+      "vectors (rebuildEmbeddingStore per shard)",
+      b => b) { (part, sp, fence) =>
+      embeddingStoreStep(part, sp, dim, idCol, vecCol, bits, bands, tau,
+        atomicStore, fence)
+    }
 
   /** [[promoteTenants]] for the VECTOR family: promote (or repoint/
     * demote) outlier tenants on a sharded EMBEDDING layout — same
@@ -2416,32 +2354,13 @@ object DocPipeline {
                               vecCol: String = "embedding",
                               bits: Int = 8, bands: Int = 2,
                               atomicStore: Boolean = false,
-                              rebuildUnchanged: Boolean = false): Unit = {
-    val spark = vecs.sparkSession
-    val metaDir = s"${rootPath.stripSuffix("/")}_shard_meta"
-    require(graft.sources.AtomicCommit.pathExists(spark, metaDir),
-      s"$rootPath carries no shard layout — promotion amends an existing " +
-        "sharded deployment (start streamEmbeddingDedupSharded or rebuild " +
-        "the shards first)")
-    val stored = spark.read.parquet(metaDir).collect()
-      .map(r => r.getString(0) -> r.getInt(1)).toMap
-    require(stored.get("numShards").exists(_ > 0),
-      s"$rootPath shard layout is not finalized (meta: $stored)")
-    // amend semantics shared with [[promoteTenants]] (r19): an entry
-    // whose stored pin already matches keeps its store untouched —
-    // its scoped owner may be live
-    val pinned = stored.collect {
-      case (k, v) if k.startsWith("out:") => k.stripPrefix("out:") -> v }
-    outlierRoots.toSeq.sortBy(_._1).foreach { case (k, dst) =>
-      if (rebuildUnchanged || !pinned.get(k).contains(math.max(1, digest31(dst))))
-        rebuildEmbeddingStore(
-          vecs.filter(col(keyCol).cast("string") === k), dst,
+                              rebuildUnchanged: Boolean = false): Unit =
+    promoteOutliers(vecs.sparkSession, rootPath, outlierRoots, rebuildUnchanged,
+      "start streamEmbeddingDedupSharded or rebuild the shards first", "") {
+      (k, dst) =>
+        rebuildEmbeddingStore(vecs.filter(col(keyCol).cast("string") === k), dst,
           dim, idCol, vecCol, bits, bands, atomicStore)
     }
-    writeStoreMeta(spark, metaDir,
-      stored.view.filterKeys(k => k != "outlierHash" && !k.startsWith("out:"))
-        .toSeq.sortBy(_._1) ++ outlierMetaRows(outlierRoots))
-  }
 
   /** The embedding store's row shape: one (band, bucket, id, vec) per
     * band per vector — shared by the stream and [[rebucketEmbeddingStore]]
@@ -2459,32 +2378,48 @@ object DocPipeline {
   // sibling of the data path, NOT inside it: creating the sidecar must
   // not make an empty store directory spring into existence (the plain
   // path's batch-0 "store exists yet?" probe keys on the data dir)
-  private def embMetaDir(storePath: String) =
-    s"${storePath.stripSuffix("/")}_emb_meta"
+  private def metaDir(path: String, kind: String): String =
+    s"${path.stripSuffix("/")}_${kind}_meta"
 
-  /** Validate (or, on first contact, persist) a dedup store's KEY
-    * GEOMETRY — the parameters its persisted keys are a pure function
-    * of (band count + minhash k for signature stores, chunk width for
-    * chunk stores, shingle width for span stores, (dim, bits, bands)
-    * for embedding stores). Rows written under different parameters
-    * are mutually invisible at lookup time, so a restart with the
-    * wrong geometry would silently dedup NOTHING across runs — it must
-    * fail loudly instead. The sidecar lives at a SIBLING path
-    * (`<store>_meta`-style): creating it must not make an empty data
-    * dir spring into existence (the plain store's batch-0 "exists
-    * yet?" probe keys on the data dir). */
-  /** `_shard_meta` pin for [[streamIncrementalSharded]]: numShards +
-    * shardKeyHash exact-match (the r16 contract), plus the outlier
-    * routing table — checked GLOBALLY (one table hash) for unscoped
-    * writers, PER ENTRY for writers that declared a `tenantScope`. The
-    * scoped check compares only the `out:<tenant>` rows inside the
-    * scope, which is safe because the per-batch scope assert proves
-    * the writer cannot route any undeclared tenant — and it is what
-    * lets [[promoteTenants]] re-pin ONE tenant's entry while every
-    * writer whose scope excludes it keeps running (the r18 rolling
-    * promotion). The meta read retries torn listings: promotion
-    * overwrites the sidecar while live writers read it, and a reader
-    * landing in the overwrite window must re-read, not die. */
+  /** A meta sidecar's (param → value) rows. */
+  private def readMeta(spark: SparkSession, metaPath: String): Map[String, Int] =
+    spark.read.parquet(metaPath).collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
+
+  /** The signature store's key geometry, as its `_sig_meta` pins it
+    * (see [[incrementalStoreStep]] for what each value versions). */
+  private def sigGeometry(minhashK: Int, bands: Int,
+                          maxShingles: Int): Seq[(String, Int)] =
+    Seq("minhashK" -> minhashK, "bands" -> bands, "fpv" -> 2,
+      "m" -> maxShingles, "bkv" -> 2)
+
+  // pv versions the PLANE FAMILY the bucket keys are a pure function
+  // of (2 = the r16 mixed multiply/xor-shift family; 1 = the linear
+  // LCG whose sequential-index planes were near-shifted copies —
+  // bits beyond ~6 bought no bucket discrimination, measured 1.24×
+  // suppression from +6 bits at 1M vectors). pv=1 keys never match
+  // pv=2 lookups, so a pre-r16 store must die loudly and be re-keyed
+  // (rebucketEmbeddingStore — one pass, vectors are in the store).
+  private def embGeometry(dim: Int, bits: Int, bands: Int): Seq[(String, Int)] =
+    Seq("dim" -> dim, "bits" -> bits, "bands" -> bands, "pv" -> 2)
+
+  /** The shard-key pin: `shardTag` when given, else the Column's own
+    * expression string, with its 31-bit hash (the `shardKeyHash` row). */
+  private def shardKeyPin(shardKey: Column, shardTag: String): (String, Int) = {
+    val tag = if (shardTag.nonEmpty) shardTag else shardKey.toString()
+    (tag, tag.hashCode & 0x7fffffff)
+  }
+
+  /** A hash shard's LIVE rows: an atomic store's live versions (not
+    * every committed one — a grace-retained pre-fold version would
+    * count its rows twice), else the plain parquet. */
+  private def readLive(spark: SparkSession, sp: String): DataFrame = {
+    val versions = AppendStore.liveVersions(spark, sp)
+    if (versions.nonEmpty)
+      spark.read.parquet(versions.map(AtomicCommit.versionDir(sp, _)): _*)
+    else spark.read.parquet(sp)
+  }
+
   /** A scoped writer's outlier table is its scope's slice of the
     * fleet table — an out-of-scope entry is unroutable dead config or
     * a scope violation waiting. Checked once at stream start. */
@@ -2519,6 +2454,18 @@ object DocPipeline {
           "undeclared tenants; widen the scope or fix the feed")
     }
 
+  /** `_shard_meta` pin for [[streamIncrementalSharded]]: numShards +
+    * shardKeyHash exact-match (the r16 contract), plus the outlier
+    * routing table — checked GLOBALLY (one table hash) for unscoped
+    * writers, PER ENTRY for writers that declared a `tenantScope`. The
+    * scoped check compares only the `out:<tenant>` rows inside the
+    * scope, which is safe because the per-batch scope assert proves
+    * the writer cannot route any undeclared tenant — and it is what
+    * lets [[promoteTenants]] re-pin ONE tenant's entry while every
+    * writer whose scope excludes it keeps running (the r18 rolling
+    * promotion). The meta read retries torn listings: promotion
+    * overwrites the sidecar while live writers read it, and a reader
+    * landing in the overwrite window must re-read, not die. */
   private def ensureShardedStreamMeta(spark: org.apache.spark.sql.SparkSession,
                                       metaDir: String, rootPath: String,
                                       fix: String,
@@ -2549,17 +2496,16 @@ object DocPipeline {
       var attempt = 0
       while (out.isEmpty) {
         attempt += 1
-        try out = Some(spark.read.parquet(metaDir).collect()
-          .map(r => r.getString(0) -> r.getInt(1)).toMap)
+        try out = Some(readMeta(spark, metaDir))
         catch {
           // 20 × 250 ms: the promotion's sidecar overwrite is one tiny
           // parquet job, but on a loaded box it can exceed a sub-second
           // window — a live writer must out-wait it, not die flaky
           // (torn classification via the ONE shared matcher, r19)
-          case e: Throwable if attempt < 20 &&
+          case NonFatal(e) if attempt < 20 &&
               graft.sources.TornReads.matches(e) =>
             Thread.sleep(250)
-          case e: Throwable if graft.sources.TornReads.matches(e) =>
+          case NonFatal(e) if graft.sources.TornReads.matches(e) =>
             throw new IllegalStateException(
               s"$rootPath holds shard data but its _shard_meta sidecar is " +
                 "missing or unreadable after 20 attempts — a lost sidecar " +
@@ -2576,9 +2522,8 @@ object DocPipeline {
         s"but this run uses ${base.mkString(", ")} — persisted keys would " +
         s"not match and every cross-run duplicate would be silently " +
         s"missed; $fix")
-    val storedEntries = stored.collect {
-      case (k, v) if k.startsWith("out:") => k.stripPrefix("out:") -> v }
-    val mine = outlierRoots.map { case (k, r) => k -> math.max(1, digest31(r)) }
+    val storedEntries = pinnedEntries(stored)
+    val mine = outlierRoots.map { case (k, r) => k -> entryPin(r) }
     // r18 pin-hash migration (ADVICE r18): a pre-r18 sidecar pinned the
     // table under the weak String.hashCode mix. An IDENTICAL table must
     // not die on upgrade — accept the legacy value exactly once and
@@ -2586,10 +2531,7 @@ object DocPipeline {
     // (enabling scoped checks from then on). The overwrite is
     // idempotent (any racing upgrader writes the same bytes) and live
     // readers crossing it retry through the torn-listing window above.
-    def migrateLegacyPin(): Unit =
-      writeStoreMeta(spark, metaDir,
-        stored.view.filterKeys(k => k != "outlierHash" && !k.startsWith("out:"))
-          .toSeq.sortBy(_._1) ++ outlierMetaRows(outlierRoots))
+    def migrateLegacyPin(): Unit = repinOutliers(spark, metaDir, stored, outlierRoots)
     if (tenantScope.isEmpty) {
       val storedHash = stored.getOrElse("outlierHash", 0)
       if (storedHash != outlierTableHash(outlierRoots)) {
@@ -2633,18 +2575,24 @@ object DocPipeline {
     }
   }
 
+  /** Validate (or, on first contact, persist) a dedup store's KEY
+    * GEOMETRY — the parameters its persisted keys are a pure function
+    * of (band count + minhash k for signature stores, chunk width for
+    * chunk stores, shingle width for span stores, (dim, bits, bands)
+    * for embedding stores). Rows written under different parameters
+    * are mutually invisible at lookup time, so a restart with the
+    * wrong geometry would silently dedup NOTHING across runs — it must
+    * fail loudly instead. The sidecar lives at a SIBLING path
+    * (`<store>_meta`-style): creating it must not make an empty data
+    * dir spring into existence (the plain store's batch-0 "exists
+    * yet?" probe keys on the data dir). */
   private def checkOrWriteStoreMeta(spark: org.apache.spark.sql.SparkSession,
                                     metaDir: String, storePath: String,
                                     fix: String,
                                     params: Seq[(String, Int)],
                                     legacyDefaults: Map[String, Int] = Map.empty): Unit = {
-    import org.apache.hadoop.fs.Path
-    import spark.implicits._
-    val p = new Path(metaDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val stored = spark.read.parquet(metaDir).collect()
-        .map(r => r.getString(0) -> r.getInt(1)).toMap
+    if (AtomicCommit.pathExists(spark, metaDir)) {
+      val stored = readMeta(spark, metaDir)
       // a parameter ADDED after a store was built is absent from its
       // sidecar; `legacyDefaults` names the value such a store was
       // implicitly built at (e.g. m = 0: pre-cap stores are exact), so
@@ -2668,21 +2616,26 @@ object DocPipeline {
       .write.mode("overwrite").parquet(metaDir)
   }
 
-  // pv versions the PLANE FAMILY the bucket keys are a pure function
-  // of (2 = the r16 mixed multiply/xor-shift family; 1 = the linear
-  // LCG whose sequential-index planes were near-shifted copies —
-  // bits beyond ~6 bought no bucket discrimination, measured 1.24×
-  // suppression from +6 bits at 1M vectors). pv=1 keys never match
-  // pv=2 lookups, so a pre-r16 store must die loudly and be re-keyed
-  // (rebucketEmbeddingStore — one pass, vectors are in the store).
-  private def checkOrWriteEmbMeta(spark: org.apache.spark.sql.SparkSession,
-                                  storePath: String,
-                                  dim: Int, bits: Int, bands: Int): Unit =
-    checkOrWriteStoreMeta(spark, embMetaDir(storePath), storePath,
-      "restart with the stored geometry or rebucket the store " +
-        "(rebucketEmbeddingStore)",
-      Seq("dim" -> dim, "bits" -> bits, "bands" -> bands, "pv" -> 2),
-      legacyDefaults = Map("pv" -> 1))
+  /** Build (or rebuild) the embedding-dedup store from an ACCEPTED
+    * vector corpus — the embedding twin of [[rebuildSignatureStore]]:
+    * one pass over (id, vec) emits the per-band bucket rows at the
+    * given geometry, and the `_emb_meta` sidecar is written LAST (a
+    * premature stream start at the new parameters fails the check
+    * until the rows are in place). Use to bootstrap a store for an
+    * existing corpus before starting [[streamEmbeddingDedup]], or to
+    * replace one whose vectors live authoritatively elsewhere.
+    * `vecs` must be the accepted corpus; run while any ingest stream
+    * is STOPPED. Atomic stores replace content via one committed
+    * append, then the meta, then the vacuum ([[replaceStore]]; crash
+    * semantics as [[rebucketEmbeddingStore]]). */
+  def rebuildEmbeddingStore(vecs: DataFrame, storePath: String, dim: Int,
+                            idCol: String = "vec_id",
+                            vecCol: String = "embedding",
+                            bits: Int = 8, bands: Int = 2,
+                            atomicStore: Boolean = false): Unit =
+    replaceStore(embStoreKeys(vecs, idCol, vecCol, dim, bits, bands),
+      storePath, atomicStore, metaDir(storePath, "emb"),
+      embGeometry(dim, bits, bands))
 
   /** Re-key the persisted embedding-dedup store at a new bucket
     * geometry — the occupancy maintenance valve for
@@ -2717,64 +2670,14 @@ object DocPipeline {
     * rewrite in place after an eager materialization. A restarted
     * stream at the NEW geometry passes the meta check only once the
     * rows are in place (the append precedes the meta). */
-  /** Build (or rebuild) the embedding-dedup store from an ACCEPTED
-    * vector corpus — the embedding twin of [[rebuildSignatureStore]]:
-    * one pass over (id, vec) emits the per-band bucket rows at the
-    * given geometry, and the `_emb_meta` sidecar is written LAST (a
-    * premature stream start at the new parameters fails the check
-    * until the rows are in place). Use to bootstrap a store for an
-    * existing corpus before starting [[streamEmbeddingDedup]], or to
-    * replace one whose vectors live authoritatively elsewhere.
-    * `vecs` must be the accepted corpus; run while any ingest stream
-    * is STOPPED. Atomic stores replace content via one committed
-    * append + vacuum (crash semantics as [[rebucketEmbeddingStore]]). */
-  def rebuildEmbeddingStore(vecs: DataFrame, storePath: String, dim: Int,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding",
-                            bits: Int = 8, bands: Int = 2,
-                            atomicStore: Boolean = false): Unit = {
-    import graft.core.Checkpoints.CutOps
-    val spark = vecs.sparkSession
-    val rekeyed = embStoreKeys(vecs, idCol, vecCol, dim, bits, bands).cut
-    if (atomicStore) {
-      graft.sources.AppendStore.append(rekeyed, storePath)
-      // meta BEFORE vacuum (r17 — see the rebucket scaladoc): a reader
-      // must never observe new-geometry-only rows under an old meta
-      writeStoreMeta(spark, embMetaDir(storePath),
-        Seq("dim" -> dim, "bits" -> bits, "bands" -> bands, "pv" -> 2))
-      graft.sources.AtomicCommit.vacuum(spark, storePath, keepVersions = 1)
-    } else {
-      rekeyed.write.mode("overwrite").parquet(storePath)
-      writeStoreMeta(spark, embMetaDir(storePath),
-        Seq("dim" -> dim, "bits" -> bits, "bands" -> bands, "pv" -> 2))
-    }
-  }
-
   def rebucketEmbeddingStore(spark: org.apache.spark.sql.SparkSession,
                              storePath: String, dim: Int,
                              bits: Int, bands: Int,
                              atomicStore: Boolean = false): Unit = {
-    import spark.implicits._
-    import graft.core.Checkpoints.CutOps
-    val existing =
-      if (atomicStore) graft.sources.AppendStore.readOr(spark, storePath,
-        sys.error(s"no embedding store at $storePath"))
-      else spark.read.parquet(storePath)
-    val vecs = existing.select(col("id"), col("vec")).distinct()
-    val rekeyed = embStoreKeys(vecs, "id", "vec", dim, bits, bands).cut
-    if (atomicStore) {
-      graft.sources.AppendStore.append(rekeyed, storePath)
-      // meta BEFORE vacuum (r17 — scaladoc above): the old order had a
-      // window (new rows only, old meta) where a meta-keyed reader
-      // silently matched nothing — a missed duplicate
-      writeStoreMeta(spark, embMetaDir(storePath),
-        Seq("dim" -> dim, "bits" -> bits, "bands" -> bands, "pv" -> 2))
-      graft.sources.AtomicCommit.vacuum(spark, storePath, keepVersions = 1)
-    } else {
-      rekeyed.write.mode("overwrite").parquet(storePath)
-      writeStoreMeta(spark, embMetaDir(storePath),
-        Seq("dim" -> dim, "bits" -> bits, "bands" -> bands, "pv" -> 2))
-    }
+    val (existing, _) = openStore(spark, storePath, atomicStore,
+      sys.error(s"no embedding store at $storePath"))
+    rebuildEmbeddingStore(existing.select(col("id"), col("vec")).distinct(),
+      storePath, dim, "id", "vec", bits, bands, atomicStore)
   }
 
   /** The embedding-store twin of [[adviseGeometryMigration]] (VERDICT
@@ -2793,7 +2696,7 @@ object DocPipeline {
     * linearly in the accepted corpus (~n/2^bits per band), so a fired
     * probe is the expected aging signal, not an anomaly. Act on
     * `migrate` with [[rebucketEmbeddingStore]] at MORE BITS at fixed
-    * bands — the measured boundary (StoreMigrationDemo EMB-ADVISE,
+    * bands — the measured boundary (StoreMigrationDemo (d521caa) EMB-ADVISE,
     * 1M vectors, pv=2 planes): candidate volume is the UNION over
     * bands, so adding bands raises it linearly — bands buy per-band
     * recall at linear candidate cost, bits buy occupancy ((8,2) read
@@ -2826,6 +2729,23 @@ object DocPipeline {
     MigrationAdvice(cand, vecs, perVec, perVec > maxCandidatesPerVec)
   }
 
+  /** Streaming cross-corpus LINE dedup against a growing line-hash
+    * store — the continuous-ingestion twin of [[Dedup.lineDedup]] (C4
+    * line semantics across batches): a line is cut when it was
+    * accepted in ANY previous batch (history always wins) or recurs
+    * within the current batch (min (doc, pos) wins, exactly the batch
+    * operator's election). Lines shorter than `minChars` always pass.
+    * `onBatch` receives (idCol, n_lines, n_dropped, text_kept) —
+    * the batch operator's exact schema, and a single-batch run is
+    * value-identical to [[Dedup.lineDedup]] (spec-proven).
+    *
+    * The store holds one md5 per DISTINCT accepted line — it grows
+    * with distinct content, not traffic. Scale shape per batch:
+    * map-side line split, one line-keyed partial-min + store anti
+    * join, one doc-keyed reassembly; the only checkpointed frame is
+    * the tiny new-hash set. Same `foreachBatch` durability caveat as
+    * [[streamIncremental]]; `atomicStore = true` routes the store
+    * through [[graft.sources.AppendStore]] (write-then-commit). */
   def streamLineDedup(
       docs: DataFrame,
       storePath: String,
@@ -2835,74 +2755,81 @@ object DocPipeline {
       atomicStore: Boolean = false,
       checkpointLocation: Option[String] = None)(onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     require(minChars >= 1, s"minChars=$minChars must be >= 1")
-    val fence = streamFence(docs, storePath, atomicStore, "streamLineDedup")
-    withCheckpoint(docs.writeStream, checkpointLocation)
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val spark = b.sparkSession
-        def empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("h",
-              org.apache.spark.sql.types.BinaryType, nullable = false))))
-        val storeExists = graft.sources.AtomicCommit.pathExists(spark, storePath)
-        val store =
-          if (atomicStore) graft.sources.AppendStore.readOr(spark, storePath, empty)
-          else if (storeExists) spark.read.parquet(storePath)
-          else empty
-        requireBinaryHashStore(store, storePath, "line-hash")
-        val lines = b.select(col(idCol),
-          posexplode(split(col(textCol), "\r?\n")).as(Seq("pos", "line")))
-        // store-side semi-filter (streamChunkDedup's discipline): the
-        // broadcast side is the batch's line hashes — a map-only
-        // superset projection (no minChars filter: extra hashes only
-        // widen the filter) — so the store's hash column is scanned
-        // but never shuffled or distinct-aggregated per batch
-        val thr = graft.core.Joins.broadcastThresholdBytes(spark)
-        val nLines =
-          if (thr <= 0) Long.MaxValue
-          else b.agg(coalesce(sum(size(split(col(textCol), "\r?\n"))
-            .cast("long")), lit(0L))).head().getLong(0)
-        val storeH = store.select(col("h").as("_h"))
-        val storeSide =
-          if (nLines <= thr / 48) // 16 B binary md5 + row envelope (r15 hv=binary)
-            storeH.join(broadcast(
-              lines.select(unhex(md5(col("line").cast("binary"))).as("_h"))),
-              Seq("_h"), "left_semi")
-          else storeH.distinct()
-        // winner election mirrors Dedup.lineDedup (partial+final
-        // min(struct), text-free), then history wins via the store
-        // anti join; only the new-hash scalars checkpoint
-        val winners = lines.filter(length(col("line")) >= minChars)
-          .select(unhex(md5(col("line").cast("binary"))).as("_h"),
-            struct(col(idCol).as("_wid"), col("pos").as("_wpos")).as("_w"))
-          .groupBy(col("_h")).agg(min(col("_w")).as("_w"))
-          .join(storeSide, Seq("_h"), "left_anti")
-          .select(col("_h"), col("_w._wid").as(idCol), col("_w._wpos").as("_wpos"))
-          .cut
-        val keptPerDoc = winners.groupBy(col(idCol))
-          .agg(collect_set(col("_wpos")).as("_kept"))
-        val out = lines.join(keptPerDoc, Seq(idCol), "left")
-          .withColumn("_keep",
-            length(col("line")) < minChars ||
-              coalesce(array_contains(col("_kept"), col("pos")), lit(false)))
-          .groupBy(col(idCol))
-          .agg(
-            count(lit(1)).as("n_lines"),
-            count(when(!col("_keep"), lit(1))).as("n_dropped"),
-            array_join(transform(
-              array_sort(collect_list(when(col("_keep"),
-                struct(col("pos"), col("line"))))),
-              c => c.getField("line")), "\n").as("text_kept"))
-        val newHashes = winners.select(col("_h").as("h"))
-        if (atomicStore) graft.sources.AppendStore.append(newHashes, storePath, fence)
-        else graft.sources.AppendStore.sized(newHashes).write.mode(if (storeExists) "append" else "overwrite")
-          .parquet(storePath)
-        onBatch(out, batchId)
-      }
-      .start()
+    streamStore(docs, storePath, atomicStore, "streamLineDedup",
+        checkpointLocation, onBatch) { (b, fence) =>
+      val spark = b.sparkSession
+      val (store, storeExists) = openStore(spark, storePath, atomicStore,
+        emptyHashStore(spark, "h", BinaryType))
+      requireBinaryHashStore(store, storePath, "line-hash")
+      val lines = b.select(col(idCol),
+        posexplode(split(col(textCol), "\r?\n")).as(Seq("pos", "line")))
+      // store-side semi-filter (streamChunkDedup's discipline): the
+      // broadcast side is the batch's line hashes — a map-only
+      // superset projection (no minChars filter: extra hashes only
+      // widen the filter) — so the store's hash column is scanned
+      // but never shuffled or distinct-aggregated per batch
+      val thr = graft.core.Joins.broadcastThresholdBytes(spark)
+      val nLines =
+        if (thr <= 0) Long.MaxValue
+        else b.agg(coalesce(sum(size(split(col(textCol), "\r?\n"))
+          .cast("long")), lit(0L))).head().getLong(0)
+      val storeH = store.select(col("h").as("_h"))
+      val storeSide =
+        if (nLines <= thr / 48) // 16 B binary md5 + row envelope (r15 hv=binary)
+          storeH.join(broadcast(
+            lines.select(unhex(md5(col("line").cast("binary"))).as("_h"))),
+            Seq("_h"), "left_semi")
+        else storeH.distinct()
+      // winner election mirrors Dedup.lineDedup (partial+final
+      // min(struct), text-free), then history wins via the store
+      // anti join; only the new-hash scalars checkpoint
+      val winners = lines.filter(length(col("line")) >= minChars)
+        .select(unhex(md5(col("line").cast("binary"))).as("_h"),
+          struct(col(idCol).as("_wid"), col("pos").as("_wpos")).as("_w"))
+        .groupBy(col("_h")).agg(min(col("_w")).as("_w"))
+        .join(storeSide, Seq("_h"), "left_anti")
+        .select(col("_h"), col("_w._wid").as(idCol), col("_w._wpos").as("_wpos"))
+        .cut
+      val keptPerDoc = winners.groupBy(col(idCol))
+        .agg(collect_set(col("_wpos")).as("_kept"))
+      val out = lines.join(keptPerDoc, Seq(idCol), "left")
+        .withColumn("_keep",
+          length(col("line")) < minChars ||
+            coalesce(array_contains(col("_kept"), col("pos")), lit(false)))
+        .groupBy(col(idCol))
+        .agg(
+          count(lit(1)).as("n_lines"),
+          count(when(!col("_keep"), lit(1))).as("n_dropped"),
+          array_join(transform(
+            array_sort(collect_list(when(col("_keep"),
+              struct(col("pos"), col("line"))))),
+            c => c.getField("line")), "\n").as("text_kept"))
+      appendStore(winners.select(col("_h").as("h")), storePath, atomicStore,
+        fence, storeExists)
+      out
+    }
   }
 
+  /** Streaming VARIABLE-SPAN dedup against a growing shingle store —
+    * the continuous-ingestion twin of `Dedup.spanDedup` (ExactSubstr
+    * semantics across batches): a token position in an arriving doc is
+    * duplicated when its word `n`-shingle was seen in ANY previously
+    * accepted batch (history is always the witness and always wins) or
+    * recurs across ≥2 docs of the current batch (minimum doc id wins,
+    * exactly the batch operator's election). Duplicated positions grow
+    * to maximal runs; runs ≥ `minTokens` are cut from the doc's token
+    * stream; `onBatch` receives (idCol, n_removed, text_kept).
+    *
+    * The store holds one 64-bit hash per DISTINCT shingle ever seen —
+    * it grows with distinct content, not traffic (the
+    * [[streamChunkDedup]] store argument, at shingle granularity).
+    * Scale shape per batch: map-side shingling, one shingle-keyed
+    * dedup + store anti/semi join pair, one doc-keyed window — the
+    * batch operator's exchanges plus the store join; the only
+    * checkpointed frame is the tiny new-shingle set. Same
+    * `foreachBatch` durability caveat as [[streamIncremental]];
+    * `atomicStore = true` routes the store through
+    * [[graft.sources.AppendStore]] (write-then-commit). */
   def streamSpanDedup(
       docs: DataFrame,
       storePath: String,
@@ -2913,94 +2840,80 @@ object DocPipeline {
       atomicStore: Boolean = false,
       checkpointLocation: Option[String] = None)(onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     require(minTokens >= n, s"minTokens=$minTokens must be >= n=$n")
-    val fence = streamFence(docs, storePath, atomicStore, "streamSpanDedup")
-    withCheckpoint(docs.writeStream, checkpointLocation)
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val spark = b.sparkSession
-        // the stored hashes are width-n word shingles: a restart at a
-        // different n hashes different windows and history never
-        // matches again — die loudly (minTokens only thresholds run
-        // length and may change freely)
-        checkOrWriteStoreMeta(spark,
-          s"${storePath.stripSuffix("/")}_span_meta", storePath,
-          "restart with the stored shingle width or rebuild the store",
-          Seq("n" -> n))
-        def empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("sh",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-        val storeExists = graft.sources.AtomicCommit.pathExists(spark, storePath)
-        val store =
-          if (atomicStore) graft.sources.AppendStore.readOr(spark, storePath, empty)
-          else if (storeExists) spark.read.parquet(storePath)
-          else empty
-        val pos = b.withColumn("_whs", TextHash.wordHashes(col(textCol)))
-          .select(col(idCol),
-            posexplode(TextHash.shingleHashes(col("_whs"), n)).as(Seq("_p", "_sh")))
-          .withColumn("_p", col("_p").cast("long"))
-        // batch-internal repeats: ≥2 docs share the shingle, min doc wins
-        val batchRep = pos.select(col(idCol), col("_sh")).distinct()
-          .groupBy(col("_sh"))
-          .agg(count(lit(1)).as("_df"), min(col(idCol)).as("_win"))
-        // store-side semi-filter (streamChunkDedup's discipline): the
-        // span store is the heaviest of the hash stores — one row per
-        // distinct n-gram EVER accepted — and `hist` is referenced by
-        // both the cut-position join and the fresh-shingle anti-join,
-        // so the legacy full-store distinct ran twice per batch. The
-        // broadcast side is the batch's shingle hashes (map-only from
-        // `pos`); the gate estimate is token-count-based (one cheap
-        // agg — tokenization differences only move the gate, never
-        // correctness). distinct STAYS — `hist` feeds a left join
-        // where duplicate rows would multiply matches — but after the
-        // filter it aggregates only the batch's matching shingles.
-        val thr = graft.core.Joins.broadcastThresholdBytes(spark)
-        val nSh =
-          if (thr <= 0) Long.MaxValue
-          else b.agg(coalesce(sum(greatest(
-            size(split(col(textCol), " ")) - (n - 1), lit(0))
-            .cast("long")), lit(0L))).head().getLong(0)
-        val hist0 = store.select(col("sh").as("_sh"))
-        val hist =
-          (if (nSh <= thr / 40) // 8 B long + row envelope
-            hist0.join(broadcast(pos.select(col("_sh"))), Seq("_sh"), "left_semi")
-          else hist0).distinct()
-        // a position is cut when history holds its shingle, or a
-        // batch-mate with a smaller id does
-        val cutPos = pos.join(batchRep, Seq("_sh"))
-          .join(hist.withColumn("_inHist", lit(true)), Seq("_sh"), "left")
-          .filter(coalesce(col("_inHist"), lit(false)) ||
-            (col("_df") >= 2 && col(idCol) =!= col("_win")))
-          .select(col(idCol), col("_p"))
-        val w = Window.partitionBy(col(idCol)).orderBy(col("_p"))
-        val spans = cutPos
-          .withColumn("_grp", col("_p") - row_number().over(w))
-          .groupBy(col(idCol), col("_grp"))
-          .agg(min(col("_p")).as("_st"),
-            (max(col("_p")) + lit(n - 1).cast("long")).as("_en"))
-          .filter(col("_en") - col("_st") + 1L >= minTokens)
-          .groupBy(col(idCol))
-          .agg(collect_list(struct(col("_st"), col("_en"))).as("_rm"))
-        // the batch kernel's rebuild, shared (Dedup.removeSpans) —
-        // materialized (cut) BEFORE the store append below: out's plan
-        // reads the store, and the sibling ops' invariant is that
-        // nothing downstream re-reads it after this batch's shingles
-        // landed (also saves onBatch a full pipeline re-execution)
-        val out = Dedup.removeSpans(b, idCol, textCol, spans)
-          .cut
-        // store grows by the batch's genuinely-new distinct shingles;
-        // checkpoint the tiny hash set so the append and any downstream
-        // reuse don't recompute the batch pipeline
-        val fresh = pos.select(col("_sh")).distinct()
-          .join(hist, Seq("_sh"), "left_anti")
-          .cut
-        val newShingles = fresh.select(col("_sh").as("sh"))
-        if (atomicStore) graft.sources.AppendStore.append(newShingles, storePath, fence)
-        else graft.sources.AppendStore.sized(newShingles).write.mode(if (storeExists) "append" else "overwrite")
-          .parquet(storePath)
-        onBatch(out, batchId)
-      }
-      .start()
+    streamStore(docs, storePath, atomicStore, "streamSpanDedup",
+        checkpointLocation, onBatch) { (b, fence) =>
+      val spark = b.sparkSession
+      // the stored hashes are width-n word shingles: a restart at a
+      // different n hashes different windows and history never
+      // matches again — die loudly (minTokens only thresholds run
+      // length and may change freely)
+      checkOrWriteStoreMeta(spark, metaDir(storePath, "span"), storePath,
+        "restart with the stored shingle width or rebuild the store",
+        Seq("n" -> n))
+      val (store, storeExists) = openStore(spark, storePath, atomicStore,
+        emptyHashStore(spark, "sh", LongType))
+      val pos = b.withColumn("_whs", TextHash.wordHashes(col(textCol)))
+        .select(col(idCol),
+          posexplode(TextHash.shingleHashes(col("_whs"), n)).as(Seq("_p", "_sh")))
+        .withColumn("_p", col("_p").cast("long"))
+      // batch-internal repeats: ≥2 docs share the shingle, min doc wins
+      val batchRep = pos.select(col(idCol), col("_sh")).distinct()
+        .groupBy(col("_sh"))
+        .agg(count(lit(1)).as("_df"), min(col(idCol)).as("_win"))
+      // store-side semi-filter (streamChunkDedup's discipline): the
+      // span store is the heaviest of the hash stores — one row per
+      // distinct n-gram EVER accepted — and `hist` is referenced by
+      // both the cut-position join and the fresh-shingle anti-join,
+      // so the legacy full-store distinct ran twice per batch. The
+      // broadcast side is the batch's shingle hashes (map-only from
+      // `pos`); the gate estimate is token-count-based (one cheap
+      // agg — tokenization differences only move the gate, never
+      // correctness). distinct STAYS — `hist` feeds a left join
+      // where duplicate rows would multiply matches — but after the
+      // filter it aggregates only the batch's matching shingles.
+      val thr = graft.core.Joins.broadcastThresholdBytes(spark)
+      val nSh =
+        if (thr <= 0) Long.MaxValue
+        else b.agg(coalesce(sum(greatest(
+          size(split(col(textCol), " ")) - (n - 1), lit(0))
+          .cast("long")), lit(0L))).head().getLong(0)
+      val hist0 = store.select(col("sh").as("_sh"))
+      val hist =
+        (if (nSh <= thr / 40) // 8 B long + row envelope
+          hist0.join(broadcast(pos.select(col("_sh"))), Seq("_sh"), "left_semi")
+        else hist0).distinct()
+      // a position is cut when history holds its shingle, or a
+      // batch-mate with a smaller id does
+      val cutPos = pos.join(batchRep, Seq("_sh"))
+        .join(hist.withColumn("_inHist", lit(true)), Seq("_sh"), "left")
+        .filter(coalesce(col("_inHist"), lit(false)) ||
+          (col("_df") >= 2 && col(idCol) =!= col("_win")))
+        .select(col(idCol), col("_p"))
+      val w = Window.partitionBy(col(idCol)).orderBy(col("_p"))
+      val spans = cutPos
+        .withColumn("_grp", col("_p") - row_number().over(w))
+        .groupBy(col(idCol), col("_grp"))
+        .agg(min(col("_p")).as("_st"),
+          (max(col("_p")) + lit(n - 1).cast("long")).as("_en"))
+        .filter(col("_en") - col("_st") + 1L >= minTokens)
+        .groupBy(col(idCol))
+        .agg(collect_list(struct(col("_st"), col("_en"))).as("_rm"))
+      // the batch kernel's rebuild, shared (Dedup.removeSpans) —
+      // materialized (cut) BEFORE the store append below: out's plan
+      // reads the store, and the sibling ops' invariant is that
+      // nothing downstream re-reads it after this batch's shingles
+      // landed (also saves onBatch a full pipeline re-execution)
+      val out = Dedup.removeSpans(b, idCol, textCol, spans)
+        .cut
+      // store grows by the batch's genuinely-new distinct shingles;
+      // checkpoint the tiny hash set so the append and any downstream
+      // reuse don't recompute the batch pipeline
+      val fresh = pos.select(col("_sh")).distinct()
+        .join(hist, Seq("_sh"), "left_anti")
+        .cut
+      appendStore(fresh.select(col("_sh").as("sh")), storePath, atomicStore,
+        fence, storeExists)
+      out
+    }
   }
 }

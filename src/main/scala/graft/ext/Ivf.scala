@@ -789,7 +789,7 @@ object Ivf {
     * the parity across build/append/delete/compact/retrain). Fallback
     * chain for older indexes: per-segment `_census` sidecar sum
     * (pre-r15 commits; measured 92 ms/segment — one Spark job each,
-    * CensusCostProbe), then the one column-pruned scan (pre-r14). */
+    * CensusCostProbe (d521caa)), then the one column-pruned scan (pre-r14). */
   def indexCellCounts(spark: org.apache.spark.sql.SparkSession,
                       root: String,
                       cellCol: String = "ivf_cell"): Map[Int, Long] = {
@@ -841,7 +841,7 @@ object Ivf {
     * Why this exists: under a STALE or skewed quantizer a fixed
     * `nprobe` conflates recall with work — probes whose region drifted
     * land on a few giant frontier cells and quietly scan 10–100× the
-    * rows of a probe in a well-split region (the IvfLifecycleDemo
+    * rows of a probe in a well-split region (the IvfLifecycleDemo (d521caa)
     * measured exactly this: after `retrainAtomic`, recall at nprobe=8
     * LOOKED worse on drifted probes only because the stale index had
     * been buying recall with 1.6× the scanned rows). Budget probing

@@ -150,7 +150,7 @@ object TextHashLoopsBand {
     * (r14) needed the full space for correctness. vs the pre-r15
     * `"b:h1_h2"` STRING keys (~25-45 chars): measured 1.8x fewer
     * band-key bytes at rest AND 1.8x fewer candidate-stage shuffle
-    * bytes (StoreMigrationDemo BAND-BYTES — parquet encodings and the
+    * bytes (StoreMigrationDemo (d521caa) BAND-BYTES — parquet encodings and the
     * UnsafeRow envelope absorb the rest of the raw ~3-5x), plus long
     * instead of string equi-joins on every candidate stage. */
   def bandKeys64(sig: org.apache.spark.sql.catalyst.util.ArrayData, bands: Int): Array[Long] = {

@@ -93,7 +93,7 @@ object Stats {
     * (variant, sample), aggregate back per variant — SURVEY.md §1.2's
     * escape hatch for cohorts too wide to hold as one row.
     *
-    * WHEN TO SWITCH (rehearsed in ScaleDemo at 10k and 100k samples,
+    * WHEN TO SWITCH (rehearsed in ScaleDemo (d521caa) at 10k and 100k samples,
     * ~200M genotype calls both ways — wall-times in README §scale): the
     * wide codegen kernel stays map-only and wins at every rehearsed
     * width; this form pays explode (n_variants × n_samples rows) plus a

@@ -426,7 +426,7 @@ object AtomicCommit {
     * already fetches to resolve `latest` — so a serve-path census read
     * costs ZERO extra filesystem reads (the per-segment `_census`
     * parquet sidecars measured 92 ms/segment at read: one Spark job
-    * each; CensusCostProbe). Writers keep the sidecars as the
+    * each; CensusCostProbe (d521caa)). Writers keep the sidecars as the
     * per-segment source of truth and maintain the body total
     * incrementally (previous total + the new segment's delta). */
   def encodeCensusLine(counts: Seq[(Int, Long)]): String =

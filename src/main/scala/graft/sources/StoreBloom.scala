@@ -5,12 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Driver-held bloom pair over a signature store's fingerprints and
-  * band keys — a gate on the per-batch store reads (ScanFloorDemo:
+  * band keys — a gate on the per-batch store reads (ScanFloorDemo (d521caa):
   * the store-scan term was ~49% of a 30k-doc batch's wall at an
   * 8M-doc store and grew linearly — the last store-proportional
   * per-batch cost after the r15 exchange discipline).
   *
-  * Measured division of labor (ScanFloorDemo, 30k all-fresh batch):
+  * Measured division of labor (ScanFloorDemo (d521caa), 30k all-fresh batch):
   * most of that slope was the store's SHINGLE column riding the
   * verify semi-join — now skipped by the zero-candidate gate in
   * prepareIncrementalWithHashes, which needs no bloom (keys absent

@@ -26,7 +26,7 @@ object bridge {
     * they are hundreds of millions of bits (minutes of single-core
     * driver CPU per round) and around round ~15
     * java.math.BigInteger overflows its supported range, killing the
-    * job — found by the 21M-vertex CcScaleDemo rehearsal (a 1M-diameter
+    * job — found by the 21M-vertex CcScaleDemo (d521caa) rehearsal (a 1M-diameter
     * path needs ~14 rounds; every prior near-dup graph converged in ≤6
     * and kept the hazard invisible). Clamping to Long.MaxValue keeps
     * the semantic content ("too big to broadcast") while resetting

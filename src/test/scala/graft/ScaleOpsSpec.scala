@@ -101,17 +101,17 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("AQE splits a skewed sort-merge join at runtime (skew=true)") {
-    val keep = Seq(
-      "spark.sql.adaptive.enabled" -> spark.conf.get("spark.sql.adaptive.enabled"),
-      "spark.sql.autoBroadcastJoinThreshold" -> spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    val confs = Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
       // left: half the rows pile onto key 0 — one shuffle partition far
       // exceeds the (lowered) skew threshold; right: uniform small
       val left = spark.range(200000L)
@@ -124,7 +124,14 @@ class ScaleOpsSpec extends SparkTestBase {
       assert(n === 100000 + 2500) // key 0 matches once; 2500 odd keys < 5000
       val plan = joined.queryExecution.executedPlan.toString()
       assert(plan.contains("skew=true"), plan.take(1200))
-    } finally keep.foreach { case (k, v) => spark.conf.set(k, v) }
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // the shared session must leave this test as it entered: the suites
+    // that run after it plan their joins under these confs
+    val leaked = prior.filter { case (k, v) => spark.conf.getOption(k) != v }
+    assert(leaked.isEmpty, s"confs not restored: $leaked")
   }
 
   test("runtime bloom filter injects on a selective dim join (semi-join reduction)") {

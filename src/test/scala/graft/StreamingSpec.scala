@@ -542,6 +542,58 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("sharded streams: a zero-row micro-batch reaches onBatch as zero " +
+      "rows carrying each family's accepted-row columns plus shard") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("shardempty").toFile
+    val seen = scala.collection.mutable.ArrayBuffer[(String, Long, Seq[String])]()
+    val inSig = MemoryStream[(Long, String, String)]
+    val qSig = graft.ext.DocPipeline.streamIncrementalSharded(
+      inSig.toDF().toDF("doc_id", "tenant", "text"),
+      new java.io.File(root, "sig").getAbsolutePath, col("tenant"),
+      numShards = 2, minWords = 4, tau = 0.7) { (df, _) =>
+      seen += (("sig", df.count(), df.columns.toSeq))
+    }
+    val inEmb = MemoryStream[(Long, String, Array[Float])]
+    val qEmb = graft.ext.DocPipeline.streamEmbeddingDedupSharded(
+      inEmb.toDF().toDF("vec_id", "tenant", "embedding"),
+      new java.io.File(root, "emb").getAbsolutePath, col("tenant"),
+      numShards = 2, dim = 4, bits = 4) { (df, _) =>
+      seen += (("emb", df.count(), df.columns.toSeq))
+    }
+    try {
+      inSig.addData()
+      qSig.processAllAvailable()
+      inEmb.addData()
+      qEmb.processAllAvailable()
+      assert(seen.toSeq === Seq(
+        ("sig", 0L, Seq("doc_id", "tenant", "text", "n_words", "lang_pred", "shard")),
+        ("emb", 0L, Seq("vec_id", "tenant", "embedding", "shard"))), s"got $seen")
+    } finally {
+      qSig.stop(); qEmb.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(root)
+    }
+  }
+
+  test("adviseShardCount counts a PLAIN embedding shard layout, whose rows " +
+      "carry no doc_id column") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("embadvise").toFile
+    try {
+      val vecs = Seq((1L, Array(1f, 0f, 0f, 0f)), (2L, Array(0f, 1f, 0f, 0f)))
+        .toDF("vec_id", "embedding")
+      graft.ext.DocPipeline.rebuildEmbeddingStore(vecs,
+        graft.ext.DocPipeline.shardPath(root.getAbsolutePath, 0),
+        dim = 4, bits = 4, bands = 2)
+      val adv = graft.ext.DocPipeline.adviseShardCount(spark,
+        root.getAbsolutePath, numShards = 2)
+      // one store row per vector per band
+      assert(adv.shardDocs === Map(0L -> 4L), s"got $adv")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(root)
+  }
+
   test("sharded atomic stores under a sustained FAILOVER CHAIN: A fenced " +
       "by B fenced by C on the same shard across multiple batches each — " +
       "every zombie dies loudly at its shard fence, every successor keeps " +
