@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ext.{Dedup, Similarity, TextAnalysis, TextHash}
+import graft.ext.{Dedup, Similarity, TextAnalysis, TextHash, TextHashLoops}
 
 /** One declared query: Spark builder + (optional) DuckDB oracle SQL.
   *
@@ -112,6 +112,69 @@ object Queries {
       |       ELSE [CAST((vid*7919 + s*104729) % 1000 % 2 AS INT),
       |             CAST(((vid*7919 + s*104729) % 1000 // 3) % 2 AS INT)] END) AS gt
       |FROM (SELECT o_orderkey AS vid FROM orders ORDER BY vid LIMIT 100)""".stripMargin
+
+  /** `cnt(vid, a0, a1, b0, b1)`: per-variant allele-0/1 counts of the
+    * two 6-sample populations of `g` (samples 0-5 → a, 6-11 → b). */
+  private val duckPopCounts =
+    """cnt AS (SELECT vid,
+      |  len(list_filter(flatten(gt[1:6]),  a -> a = 0)) AS a0,
+      |  len(list_filter(flatten(gt[1:6]),  a -> a = 1)) AS a1,
+      |  len(list_filter(flatten(gt[7:12]), a -> a = 0)) AS b0,
+      |  len(list_filter(flatten(gt[7:12]), a -> a = 1)) AS b1
+      |  FROM g)"""
+  /** `fin(vid, num, den)` over [[duckPopCounts]]: Hudson F_ST numerator
+    * and denominator per variant (Stats.fstHudson), NULL unless both
+    * populations have ≥ 2 called alleles. */
+  private val duckHudsonTerms =
+    """fr AS (SELECT vid, a0+a1 AS na, b0+b1 AS nb,
+      |  a1*1.0/(a0+a1) AS pa, b1*1.0/(b0+b1) AS pb FROM cnt),
+      |fin AS (SELECT vid,
+      |  CASE WHEN na > 1 AND nb > 1 THEN
+      |    (pa-pb)*(pa-pb) - pa*(1.0-pa)/(na-1) - pb*(1.0-pb)/(nb-1) END AS num,
+      |  CASE WHEN na > 1 AND nb > 1 THEN
+      |    pa*(1.0-pb) + pb*(1.0-pa) END AS den
+      |  FROM fr)"""
+
+  /** `dos(vid, d)`: per-variant dosage list of `g`, -1 for a missing
+    * call. */
+  private val duckDosages =
+    """dos AS (SELECT vid, list_transform(gt, x ->
+      |  CASE WHEN list_contains(x, -1) THEN -1 ELSE x[1] + x[2] END) AS d FROM g)"""
+  /** `ex(vid, si, d)`: per-sample dosages (0 for a missing call) of the
+    * rare variants of `g` — MAF > 0 and ≤ 0.25 (Assoc.burdenMatrix's
+    * mafMaxE4 = 2500) — through `cc` and `rare`. */
+  private val duckRareDosages =
+    """cc AS (SELECT vid,
+      |  len(list_filter(flatten(gt), x -> x = 0)) AS c0,
+      |  len(list_filter(flatten(gt), x -> x = 1)) AS c1 FROM g),
+      |rare AS (SELECT vid FROM cc WHERE c0+c1 > 0
+      |  AND least(c0, c1) > 0
+      |  AND least(c0, c1)*10000 <= 2500*(c0+c1)),
+      |ex AS (SELECT g.vid, s.i AS si,
+      |  CASE WHEN list_contains(gt[CAST(s.i+1 AS INT)], -1) THEN 0
+      |    ELSE gt[CAST(s.i+1 AS INT)][1] + gt[CAST(s.i+1 AS INT)][2]
+      |    END AS d
+      |  FROM g JOIN rare USING (vid), range(0, 12) s(i))"""
+  /** Pairwise IBS over [[duckGt]] (Stats.ibsPairs and Stats.ibsGramian,
+    * which compute the same statistic): integer num/den sums per sample
+    * pair and the e4 ratio. */
+  private val duckIbs =
+    s"""WITH g AS ($duckGt),
+      |$duckDosages,
+      |pr AS (SELECT vid, d, r1.i AS si, r2.j AS sj
+      |  FROM dos, range(0, 12) r1(i), range(0, 12) r2(j) WHERE r2.j > r1.i),
+      |terms AS (SELECT si, sj,
+      |  CASE WHEN d[CAST(si+1 AS INT)] >= 0 AND d[CAST(sj+1 AS INT)] >= 0
+      |    THEN 2 - abs(d[CAST(si+1 AS INT)] - d[CAST(sj+1 AS INT)]) ELSE 0 END AS num,
+      |  CASE WHEN d[CAST(si+1 AS INT)] >= 0 AND d[CAST(sj+1 AS INT)] >= 0
+      |    THEN 2 ELSE 0 END AS den
+      |  FROM pr)
+      |SELECT CAST(si AS BIGINT) AS si, CAST(sj AS BIGINT) AS sj,
+      |CAST(sum(num) AS BIGINT) AS ibs_num, CAST(sum(den) AS BIGINT) AS ibs_den,
+      |CASE WHEN CAST(sum(den) AS BIGINT) = 0 THEN NULL
+      |  ELSE CAST(floor(CAST(sum(num) AS BIGINT)*1.0/CAST(sum(den) AS BIGINT)
+      |    *10000.0 + 0.5) AS BIGINT) END AS ibs_e4
+      |FROM terms GROUP BY si, sj ORDER BY si, sj""".stripMargin
 
   /** Second-callset twin of [[gtTable]] (the "re-call": different vid
     * mix constant → genuine per-sample discordance and one-sided
@@ -406,7 +469,7 @@ object Queries {
   // authored against duckdb 1.0 list/lambda docs). The Scala kernels and
   // these strings implement the SAME arithmetic (31-roll mod 1e9+7 etc.);
   // q_fingerprint/q_minhash_sig/... hash-matching IS the proof they agree.
-  private val duckP = "1000000007"
+  private val duckP = TextHashLoops.P.toString
   private def duckCharHash(e: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split($e,''), " +
       s"c -> CAST(unicode(c) AS BIGINT))), (a,b) -> (a*31+b)%$duckP)"
@@ -454,10 +517,43 @@ object Queries {
     s"(($t4)/2147483648.0 - 0.5)"
   }
 
+  /** Dot product of two float lists in DOUBLE (Similarity.dot), summed
+    * over `a`'s length. */
+  private def duckDot(a: String, b: String): String =
+    s"list_sum(list_transform(range(1, len($a)+1), " +
+      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+  /** Cosine of two float lists (Similarity.cosine): the dot over the
+    * product of the two norms. */
+  private def duckCosine(a: String, b: String): String =
+    s"${duckDot(a, b)} / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)}))"
+
+  /** `b(vec_id, embedding, bucket)`: every embedding with its 4-bit
+    * LSH bucket over the 64-dim pv=2 planes (Similarity.lshBucket,
+    * dim = 64, bits = 4). */
+  private val duckLshBuckets =
+    s"""b AS (SELECT vec_id, embedding,
+       |  CAST(list_sum(list_transform(range(0,4), j ->
+       |    CASE WHEN list_sum(list_transform(range(0,64), i ->
+       |      CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) *
+       |      ${duckPlane("j*64+i+1")})) > 0
+       |    THEN CAST(pow(2,j) AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
+       |  FROM embeddings)"""
+
   private val duckWhs =
     s"list_transform(string_split(text,' '), w -> ${duckCharHash("w")})"
-  private def duckRehash(i: Int): String =
-    s"(x*${(2654435761L * (i + 1)) % 1000000007L}+${(40503L * (i + 1) + 7L) % 1000000007L})%$duckP"
+  /** MinHash rehash i of a list element `x`, (x·aᵢ + bᵢ) mod P, with
+    * the coefficients of TextHashLoops.minhashCoef inlined as literals. */
+  private def duckRehash(i: Int): String = {
+    val (a, b) = TextHashLoops.minhashCoef(i)
+    s"(x*$a+$b)%$duckP"
+  }
+  /** MinHash component i over the word-hash list `h` (TextHash.minhash). */
+  private def duckMinhash(h: String, i: Int): String =
+    s"list_min(list_transform($h, x -> ${duckRehash(i)}))"
+  /** k-component MinHash signature list over the word-hash list `h`
+    * (TextHash.minhashSignature). */
+  private def duckMinhashSig(h: String, k: Int): String =
+    (0 until k).map(duckMinhash(h, _)).mkString("[", ", ", "]")
   /** DSIR shared CTE chain (q_dsir_score / q_dsir_resample): hashed
     * unigram+bigram buckets (m=64), smoothed lp6 tables for target
     * (doc_id%7=0) vs raw (all docs), per-doc integer weight sums —
@@ -481,32 +577,56 @@ object Queries {
        |sc AS (SELECT e.doc_id, CAST(sum(wt.lr6) AS BIGINT) AS dsir_lw6
        |       FROM ex e JOIN wt ON e.bucket = wt.bucket GROUP BY e.doc_id)""".stripMargin
 
-  /** DuckDB replay of the whole prepare funnel (gates → langid → exact
-    * dedup → star∪path near-dup) for one document subset, CTEs suffixed
-    * `sfx` — shared by the incremental (q_incremental_dedup) and
-    * sharded (q_sharded_dedup) oracles, which replay the funnel once
-    * per (side, shard) partition of the corpus. */
-  private def duckPrepFunnel(sfx: String, pred: String): String = {
+  /** DuckDB twin of the stopword-argmax language ID
+    * (TextAnalysis.langScoresOf + argmax over the sorted languages,
+    * first language on ties, `und` when no stopword hits): a SELECT of
+    * `keep` plus the prediction `predAs` over relation `from`, whose
+    * `text` column is scored. */
+  private def duckLangId(keep: String, from: String, predAs: String): String = {
     val langs = TextAnalysis.stopwords.keys.toSeq.sorted
     val scores = langs.map(l =>
       s"len(list_filter(string_split(text,' '), w -> list_contains(${duckStop(l)}, w))) AS s_$l")
       .mkString(",\n")
     val best = langs.map(l => s"s_$l").mkString("greatest(", ",", ")")
     val cases = langs.map(l => s"WHEN best > 0 AND s_$l = best THEN '$l'").mkString(" ")
+    s"""SELECT $keep, CASE $cases ELSE 'und' END AS $predAs
+       |  FROM (SELECT *, $best AS best FROM (SELECT $keep, $scores FROM $from))"""
+  }
+
+  /** 3-shingle hash list over a word-hash list `h` (TextHash.shingleHashes). */
+  private val duckSh3 =
+    s"""list_transform(range(0, len(h)-2),
+       |  i -> ((h[CAST(i+1 AS INT)]*31 + h[CAST(i+2 AS INT)])%$duckP*31
+       |        + h[CAST(i+3 AS INT)])%$duckP)"""
+
+  /** DuckDB replay of the whole prepare funnel (gates → langid → exact
+    * dedup → star∪path near-dup) for one document subset, CTEs suffixed
+    * `sfx` — shared by the in-batch (q_doc_pipeline, q_doc_pipeline_kmv),
+    * incremental (q_incremental_dedup) and sharded (q_sharded_dedup)
+    * oracles; the latter two replay the funnel once per (side, shard)
+    * partition of the corpus. `maxShingles` > 0 replays the capped
+    * verify (prepare(maxShingles)): bottom-`maxShingles` shingle
+    * sketches and the KMV Jaccard estimate instead of exact Jaccard. */
+  private def duckPrepFunnel(sfx: String, pred: String, maxShingles: Int = 0): String = {
+    val shSet = s"list_distinct($duckSh3)"
+    val (sh, sim) =
+      if (maxShingles == 0)
+        (shSet, "len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s)))")
+      else {
+        val x = s"list_slice(list_sort(list_distinct(list_concat(a.s, b.s))), 1, $maxShingles)"
+        (s"list_slice(list_sort($shSet), 1, $maxShingles)",
+          s"len(list_intersect($x, list_intersect(a.s, b.s))) * 1.0 / len($x)")
+      }
     s"""base$sfx AS (
        |  SELECT doc_id, text, CAST(len(string_split(text,' ')) AS BIGINT) AS n_words
        |  FROM documents WHERE ($pred) AND len(string_split(text,' ')) >= 30),
-       |sc$sfx AS (SELECT doc_id, text, n_words, $scores FROM base$sfx),
-       |p$sfx AS (SELECT doc_id, text, n_words, ${duckCharHash64("text")} AS fp,
-       |      CASE $cases ELSE 'und' END AS lang_pred
-       |      FROM (SELECT *, $best AS best FROM sc$sfx)),
+       |p$sfx AS (SELECT *, ${duckCharHash64("text")} AS fp FROM (
+       |  ${duckLangId("doc_id, text, n_words", s"base$sfx", "lang_pred")})),
        |ex$sfx AS (SELECT doc_id, text, n_words, lang_pred, fp FROM (
        |  SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
        |  FROM p$sfx) WHERE rn = 1),
        |w$sfx AS (SELECT doc_id, $duckWhs AS h FROM ex$sfx),
-       |sig$sfx AS (SELECT doc_id, list_transform(range(0,8),
-       |  i -> list_min(list_transform(h,
-       |    x -> (x*((2654435761*(i+1))%$duckP)+(40503*(i+1)+7))%$duckP))) AS s FROM w$sfx),
+       |sig$sfx AS (SELECT doc_id, ${duckMinhashSig("h", 8)} AS s FROM w$sfx),
        |bands$sfx AS (SELECT doc_id, $duckBandKeys FROM sig$sfx),
        |bmin$sfx AS (SELECT band_key, min(doc_id) AS min_id FROM bands$sfx GROUP BY band_key),
        |cand$sfx AS (SELECT DISTINCT doc_id, min_id FROM (
@@ -517,13 +637,10 @@ object Queries {
        |    SELECT doc_id, lag(doc_id) OVER (
        |      PARTITION BY band_key ORDER BY doc_id) AS prev FROM bands$sfx)
        |  WHERE prev IS NOT NULL)),
-       |sh$sfx AS (SELECT doc_id, list_distinct(list_transform(range(0, len(h)-2),
-       |  i -> ((h[CAST(i+1 AS INT)]*31 + h[CAST(i+2 AS INT)])%$duckP*31
-       |        + h[CAST(i+3 AS INT)])%$duckP)) AS s FROM w$sfx),
+       |sh$sfx AS (SELECT doc_id, $sh AS s FROM w$sfx),
        |drops$sfx AS (SELECT DISTINCT c.doc_id FROM cand$sfx c
        |  JOIN sh$sfx a ON a.doc_id = c.doc_id JOIN sh$sfx b ON b.doc_id = c.min_id
-       |  WHERE len(list_intersect(a.s, b.s)) * 1.0
-       |        / len(list_distinct(list_concat(a.s, b.s))) >= 0.8),
+       |  WHERE $sim >= 0.8),
        |acc$sfx AS (SELECT * FROM ex$sfx
        |  WHERE doc_id NOT IN (SELECT doc_id FROM drops$sfx))"""
   }
@@ -552,8 +669,7 @@ object Queries {
        |inc$sfx AS (SELECT * FROM fresh$sfx
        |  WHERE doc_id NOT IN (SELECT doc_id FROM xdrops$sfx))"""
 
-  /** 5-gram shingle roll over a word-hash list `h` at 0-based offset `i`
-    * (same arithmetic as q_crossdoc_ngram's inline form). */
+  /** 5-gram shingle roll over a word-hash list `h` at 0-based offset `i`. */
   private val duckSh5 =
     s"((((h[CAST(i+1 AS INT)]*31 + h[CAST(i+2 AS INT)])%$duckP*31" +
       s" + h[CAST(i+3 AS INT)])%$duckP*31 + h[CAST(i+4 AS INT)])%$duckP*31" +
@@ -609,18 +725,40 @@ object Queries {
        |  UNION ALL SELECT 9000003, '$spanOracleX'
        |  UNION ALL SELECT 9000004, '$spanOracleC'
        |  UNION ALL SELECT 9000005, '$spanOracleD'""".stripMargin
-  /** Shared CTE prefix of the exact-span twins: maximal per-(pair,
-    * diagonal) shingle-match runs ≥ 20 tokens (`pairCond` restricts the
-    * grid: detection sees both orientations, removal losers only),
-    * then the per-doc interval union via gaps-and-islands. */
-  private def duckExactSpans(pairCond: String): String =
+  /** Per-position 5-shingles of `aug(doc_id, text)`, shared by every
+    * span twin: `w(doc_id, h, tk)` (word hashes and raw tokens), `sg`
+    * (the shingle list) and `e(doc_id, sh, p)`, one row per shingle at
+    * 0-based token position `p`. */
+  private val duckSpanShingles =
     s"""w AS (SELECT doc_id, $duckWhs AS h,
        |  string_split(text, ' ') AS tk FROM aug),
        |sg AS (SELECT doc_id, CASE WHEN len(h) >= 5 THEN
        |  list_transform(range(0, len(h)-4), i -> $duckSh5)
        |  ELSE [] END AS gs FROM w),
        |e AS (SELECT doc_id, unnest(gs) AS sh,
-       |  unnest(range(0, len(gs))) AS p FROM sg),
+       |  unnest(range(0, len(gs))) AS p FROM sg)"""
+  /** Span-removal tail over [[duckSpanShingles]]' `w`: cut every token
+    * inside an interval of `iv(doc_id, st, en)` and rebuild the kept
+    * text — `kept(doc_id, n_tot, n_kept, txt)`, one row per doc. */
+  private def duckSpanCut(iv: String): String =
+    s"""tok AS (SELECT doc_id, unnest(tk) AS tkn,
+       |  unnest(range(0, len(tk))) AS i FROM w),
+       |cutpos AS (SELECT DISTINCT t.doc_id, t.i FROM tok t
+       |  JOIN $iv ON t.doc_id = $iv.doc_id AND t.i BETWEEN $iv.st AND $iv.en),
+       |kept AS (SELECT t.doc_id,
+       |    CAST(count(*) AS BIGINT) AS n_tot,
+       |    CAST(count(*) FILTER (WHERE c.i IS NULL) AS BIGINT) AS n_kept,
+       |    string_agg(CASE WHEN c.i IS NULL THEN t.tkn END, ' '
+       |      ORDER BY t.i) AS txt
+       |  FROM tok t LEFT JOIN cutpos c
+       |    ON t.doc_id = c.doc_id AND t.i = c.i
+       |  GROUP BY t.doc_id)"""
+  /** Shared CTE prefix of the exact-span twins: maximal per-(pair,
+    * diagonal) shingle-match runs ≥ 20 tokens (`pairCond` restricts the
+    * grid: detection sees both orientations, removal losers only),
+    * then the per-doc interval union via gaps-and-islands. */
+  private def duckExactSpans(pairCond: String): String =
+    s"""$duckSpanShingles,
        |rep AS (SELECT sh FROM (SELECT DISTINCT doc_id, sh FROM e)
        |  GROUP BY sh HAVING count(*) >= 2),
        |er AS (SELECT * FROM e WHERE sh IN (SELECT sh FROM rep)),
@@ -675,17 +813,18 @@ object Queries {
        |  SELECT $prev.cid, COALESCE($m.e, $prev.e) AS e
        |  FROM $prev LEFT JOIN $m ON $m.cell = $prev.cid)""".stripMargin
   }
-  /** CTE chain `emb, c0, a1, m1, c1, a2, m2, c2` — `emb(vec_id, e)` is
-    * the double-cast corpus, `c2(cid, e)` the trained centroids. */
-  private val duckKmeans4x2: String =
-    s"""emb AS (
+  /** CTE chain `emb, c0, a1, m1, c1, …, c<rounds>` — `emb(vec_id, e)`
+    * is the double-cast corpus filtered by `where`, `c0` the id-order
+    * seeds (spreadInit = false), `c<rounds>(cid, e)` the trained
+    * centroids. */
+  private def duckKmeans(where: String, rounds: Int): String =
+    (s"""emb AS (
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-       |  FROM embeddings),
+       |  FROM embeddings WHERE $where),
        |c0 AS (
        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INTEGER) - 1 AS cid, e
-       |  FROM (SELECT vec_id, e FROM emb ORDER BY vec_id LIMIT 4)),
-       |${duckLloydRound(1)},
-       |${duckLloydRound(2)}""".stripMargin
+       |  FROM (SELECT vec_id, e FROM emb ORDER BY vec_id LIMIT 4))""" +:
+      (1 to rounds).map(duckLloydRound)).mkString(",\n").stripMargin
 
   /** DuckDB twin of q_quality_logreg: the 3 GD iterations unrolled as
     * CTEs. Every arithmetic step mirrors LogReg.train's expression
@@ -1499,9 +1638,8 @@ ORDER BY feature"""
           .orderBy(col("dot").desc, col("vec_id"))
           .limit(5)
       },
-      Some("""SELECT v.vec_id,
-             |round(list_sum(list_transform(range(1, len(v.embedding) + 1),
-             |  i -> CAST(v.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE))), 4) AS dot
+      Some(s"""SELECT v.vec_id,
+             |round(${duckDot("v.embedding", "p.embedding")}, 4) AS dot
              |FROM embeddings v,
              |(SELECT embedding FROM embeddings WHERE vec_id = 0) p
              |WHERE v.vec_id <> 0
@@ -1586,7 +1724,7 @@ ORDER BY feature"""
           .limit(200),
       Some(s"""WITH w AS (SELECT doc_id, $duckWhs AS h FROM documents)
              |SELECT doc_id,
-             |${(0 until 4).map(i => s"list_min(list_transform(h, x -> ${duckRehash(i)})) AS m$i").mkString(",\n")}
+             |${(0 until 4).map(i => s"${duckMinhash("h", i)} AS m$i").mkString(",\n")}
              |FROM w ORDER BY doc_id LIMIT 200""".stripMargin)),
 
     // ── 38. minhash-LSH near-dup candidate buckets ─────────────────────
@@ -1596,9 +1734,7 @@ ORDER BY feature"""
         Dedup.minhashDupGroups(t(s, d, "documents"), "doc_id", "text", k = 8, bands = 4)
           .orderBy(col("band_key")),
       Some(s"""WITH w AS (SELECT doc_id, $duckWhs AS h FROM documents),
-             |sig AS (SELECT doc_id, list_transform(range(0,8),
-             |  i -> list_min(list_transform(h,
-             |    x -> (x*((2654435761*(i+1))%$duckP)+(40503*(i+1)+7))%$duckP))) AS s FROM w),
+             |sig AS (SELECT doc_id, ${duckMinhashSig("h", 8)} AS s FROM w),
              |bands AS (SELECT doc_id, $duckBandKeys FROM sig)
              |SELECT band_key, CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS min_doc_id
              |FROM bands GROUP BY band_key HAVING count(*) > 1 ORDER BY band_key""".stripMargin)),
@@ -1621,9 +1757,7 @@ ORDER BY feature"""
           .orderBy(col("doc_id"), col("band")).limit(2000)
       },
       Some(s"""WITH w AS (SELECT doc_id, $duckWhs AS h FROM documents),
-             |sig AS (SELECT doc_id, list_transform(range(0,8),
-             |  i -> list_min(list_transform(h,
-             |    x -> (x*((2654435761*(i+1))%$duckP)+(40503*(i+1)+7))%$duckP))) AS s FROM w),
+             |sig AS (SELECT doc_id, ${duckMinhashSig("h", 8)} AS s FROM w),
              |bands AS (SELECT doc_id, CAST(b AS INT) AS band,
              |  ${duckBandKey64("s[CAST(2*b+1 AS INT)]", "s[CAST(2*b+2 AS INT)]")} AS band_key
              |FROM sig, range(0,4) t(b))
@@ -1692,9 +1826,7 @@ ORDER BY feature"""
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH w AS (SELECT doc_id, $duckWhs AS h FROM documents),
-             |sh AS (SELECT doc_id, list_distinct(list_transform(range(0, len(h)-2),
-             |  i -> ((h[CAST(i+1 AS INT)]*31 + h[CAST(i+2 AS INT)])%$duckP*31
-             |        + h[CAST(i+3 AS INT)])%$duckP)) AS s FROM w)
+             |sh AS (SELECT doc_id, list_distinct($duckSh3) AS s FROM w)
              |SELECT a.doc_id AS doc_id,
              |round(CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 'NaN'::DOUBLE
              |  ELSE len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s)))
@@ -1712,15 +1844,9 @@ ORDER BY feature"""
           .select(col("vec_id"), round(Similarity.cosine(col("ea"), col("eb")), 4).as("cos"))
           .orderBy(col("vec_id"))
       },
-      Some("""WITH e AS (SELECT vec_id, embedding FROM embeddings)
+      Some(s"""WITH e AS (SELECT vec_id, embedding FROM embeddings)
              |SELECT a.vec_id AS vec_id,
-             |round(
-             |  list_sum(list_transform(range(1, len(a.embedding)+1),
-             |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-             |  / (sqrt(list_sum(list_transform(range(1, len(a.embedding)+1),
-             |       i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
-             |   * sqrt(list_sum(list_transform(range(1, len(b.embedding)+1),
-             |       i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))), 4) AS cos
+             |round(${duckCosine("a.embedding", "b.embedding")}, 4) AS cos
              |FROM e a JOIN e b ON b.vec_id = a.vec_id + 1 ORDER BY a.vec_id""".stripMargin)),
 
     // ── 42. LSH-bucketed ANN top-k (deterministic LCG hyperplanes) ─────
@@ -1738,17 +1864,10 @@ ORDER BY feature"""
           .orderBy(col("dot").desc, col("vec_id"))
           .limit(5)
       },
-      Some(s"""WITH b AS (SELECT vec_id, embedding,
-             |  CAST(list_sum(list_transform(range(0,4), j ->
-             |    CASE WHEN list_sum(list_transform(range(0,64), i ->
-             |      CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) *
-             |      ${duckPlane("j*64+i+1")})) > 0
-             |    THEN CAST(pow(2,j) AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
-             |  FROM embeddings),
+      Some(s"""WITH $duckLshBuckets,
              |p AS (SELECT embedding AS pe, bucket AS pb FROM b WHERE vec_id = 0)
              |SELECT v.vec_id,
-             |round(list_sum(list_transform(range(1, len(v.embedding)+1),
-             |  i -> CAST(v.embedding[i] AS DOUBLE) * CAST(p.pe[i] AS DOUBLE))), 4) AS dot
+             |round(${duckDot("v.embedding", "p.pe")}, 4) AS dot
              |FROM b v, p WHERE v.vec_id <> 0 AND v.bucket = p.pb
              |ORDER BY dot DESC, v.vec_id LIMIT 5""".stripMargin)),
 
@@ -1765,15 +1884,9 @@ ORDER BY feature"""
           .orderBy(col("cos").desc, col("vec_id"))
           .limit(5)
       },
-      Some("""WITH p AS (SELECT embedding AS pe FROM embeddings WHERE vec_id = 0)
+      Some(s"""WITH p AS (SELECT embedding AS pe FROM embeddings WHERE vec_id = 0)
              |SELECT v.vec_id,
-             |round(
-             |  list_sum(list_transform(range(1, len(v.embedding)+1),
-             |    i -> CAST(v.embedding[i] AS DOUBLE) * CAST(p.pe[i] AS DOUBLE)))
-             |  / (sqrt(list_sum(list_transform(range(1, len(v.embedding)+1),
-             |       i -> CAST(v.embedding[i] AS DOUBLE) * CAST(v.embedding[i] AS DOUBLE))))
-             |   * sqrt(list_sum(list_transform(range(1, len(p.pe)+1),
-             |       i -> CAST(p.pe[i] AS DOUBLE) * CAST(p.pe[i] AS DOUBLE))))), 4) AS cos
+             |round(${duckCosine("v.embedding", "p.pe")}, 4) AS cos
              |FROM embeddings v, p WHERE v.vec_id <> 0
              |ORDER BY cos DESC, v.vec_id LIMIT 5""".stripMargin)),
 
@@ -1800,21 +1913,9 @@ ORDER BY feature"""
           .agg(count(lit(1)).as("cnt"))
           .orderBy(col("lang"), col("pred"))
       },
-      Some {
-        val langs = TextAnalysis.stopwords.keys.toSeq.sorted
-        val scores = langs.map(l =>
-          s"len(list_filter(string_split(text,' '), w -> list_contains(${duckStop(l)}, w))) AS s_$l")
-          .mkString(",\n")
-        val best = langs.map(l => s"s_$l").mkString("greatest(", ",", ")")
-        val cases = langs.map(l => s"WHEN best > 0 AND s_$l = best THEN '$l'").mkString(" ")
-        s"""WITH sc AS (SELECT lang,
-           |$scores
-           |FROM documents),
-           |p AS (SELECT lang, CASE $cases ELSE 'und' END AS pred
-           |      FROM (SELECT *, $best AS best FROM sc))
-           |SELECT lang, pred, CAST(count(*) AS BIGINT) AS cnt
-           |FROM p GROUP BY lang, pred ORDER BY lang, pred""".stripMargin
-      }),
+      Some(s"""WITH p AS (${duckLangId("lang", "documents", "pred")})
+             |SELECT lang, pred, CAST(count(*) AS BIGINT) AS cnt
+             |FROM p GROUP BY lang, pred ORDER BY lang, pred""".stripMargin)),
 
     // ── 43b. language ID, Cavnar-Trenkle char-n-gram rank profiles ─────
     // The REAL langid (VERDICT r9 task #3): per doc, build the ranked
@@ -2205,7 +2306,7 @@ ORDER BY feature"""
           .select(col("vec_id"), round(col("score"), 4).as("score"))
           .orderBy(col("score").desc, col("vec_id"))
       },
-      Some(s"""WITH $duckKmeans4x2,
+      Some(s"""WITH ${duckKmeans("TRUE", 2)},
              |probe AS (SELECT e AS pe FROM emb WHERE vec_id = 0),
              |pc AS (
              |  SELECT c.cid FROM c2 c, probe p
@@ -2278,15 +2379,7 @@ ORDER BY feature"""
           .select(col("vec_id"), col("ivf_cell").cast("int").as("cell"))
           .orderBy(col("vec_id"))
       },
-      Some(s"""WITH emb AS (
-             |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-             |  FROM embeddings
-             |  WHERE vec_id < 120 AND (vec_id % 7 <> 0 OR vec_id = 14)),
-             |c0 AS (
-             |  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INTEGER) - 1 AS cid, e
-             |  FROM (SELECT vec_id, e FROM emb ORDER BY vec_id LIMIT 4)),
-             |${duckLloydRound(1)},
-             |${duckLloydRound(2)},
+      Some(s"""WITH ${duckKmeans("vec_id < 120 AND (vec_id % 7 <> 0 OR vec_id = 14)", 2)},
              |af AS (
              |  ${duckAssign("emb", "c2")})
              |SELECT vec_id, cell FROM af ORDER BY vec_id""".stripMargin)),
@@ -2316,13 +2409,7 @@ ORDER BY feature"""
           .select(col("cell"), col("n"))
           .orderBy(col("cell"))
       },
-      Some(s"""WITH emb AS (
-             |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-             |  FROM embeddings WHERE vec_id < 120),
-             |c0 AS (
-             |  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INTEGER) - 1 AS cid, e
-             |  FROM (SELECT vec_id, e FROM emb ORDER BY vec_id LIMIT 4)),
-             |${duckLloydRound(1)},
+      Some(s"""WITH ${duckKmeans("vec_id < 120", 1)},
              |af AS (
              |  ${duckAssign("(SELECT * FROM emb WHERE vec_id % 7 <> 0 OR vec_id = 14)", "c1")})
              |SELECT cell, CAST(count(*) AS BIGINT) AS n
@@ -2353,7 +2440,7 @@ ORDER BY feature"""
             round(col("score"), 4).as("score"))
           .orderBy(col("probe_id"), col("score").desc, col("vec_id"))
       },
-      Some(s"""WITH $duckKmeans4x2,
+      Some(s"""WITH ${duckKmeans("TRUE", 2)},
              |af AS (
              |  ${duckAssign("(SELECT * FROM emb WHERE vec_id >= 3)", "c2")}),
              |cc AS (SELECT cell, count(*) AS n FROM af GROUP BY cell),
@@ -2557,49 +2644,10 @@ ORDER BY feature"""
           .groupBy(col("lang_pred"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("sum_words"))
           .orderBy(col("lang_pred")),
-      Some {
-        val langs = TextAnalysis.stopwords.keys.toSeq.sorted
-        val scores = langs.map(l =>
-          s"len(list_filter(string_split(text,' '), w -> list_contains(${duckStop(l)}, w))) AS s_$l")
-          .mkString(",\n")
-        val best = langs.map(l => s"s_$l").mkString("greatest(", ",", ")")
-        val cases = langs.map(l => s"WHEN best > 0 AND s_$l = best THEN '$l'").mkString(" ")
-        s"""WITH base AS (
-           |  SELECT doc_id, text, CAST(len(string_split(text,' ')) AS BIGINT) AS n_words
-           |  FROM documents WHERE len(string_split(text,' ')) >= 30),
-           |sc AS (SELECT doc_id, text, n_words, $scores FROM base),
-           |p AS (SELECT doc_id, text, n_words,
-           |      CASE $cases ELSE 'und' END AS lang_pred
-           |      FROM (SELECT *, $best AS best FROM sc)),
-           |ex AS (SELECT doc_id, text, n_words, lang_pred FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY ${duckCharHash64("text")}
-           |    ORDER BY doc_id) AS rn FROM p) WHERE rn = 1),
-           |w AS (SELECT doc_id, $duckWhs AS h FROM ex),
-           |sig AS (SELECT doc_id, list_transform(range(0,8),
-           |  i -> list_min(list_transform(h,
-             |    x -> (x*((2654435761*(i+1))%$duckP)+(40503*(i+1)+7))%$duckP))) AS s FROM w),
-           |bands AS (SELECT doc_id, $duckBandKeys FROM sig),
-           |bmin AS (SELECT band_key, min(doc_id) AS min_id FROM bands GROUP BY band_key),
-           |cand AS (SELECT DISTINCT doc_id, min_id FROM (
-           |  SELECT b.doc_id, min_id FROM bands b
-           |    JOIN bmin USING (band_key) WHERE b.doc_id > min_id
-           |  UNION ALL
-           |  SELECT doc_id, prev AS min_id FROM (
-           |    SELECT doc_id, lag(doc_id) OVER (
-           |      PARTITION BY band_key ORDER BY doc_id) AS prev FROM bands)
-           |  WHERE prev IS NOT NULL)),
-           |sh AS (SELECT doc_id, list_distinct(list_transform(range(0, len(h)-2),
-           |  i -> ((h[CAST(i+1 AS INT)]*31 + h[CAST(i+2 AS INT)])%$duckP*31
-           |        + h[CAST(i+3 AS INT)])%$duckP)) AS s FROM w),
-           |drops AS (SELECT DISTINCT c.doc_id FROM cand c
-           |  JOIN sh a ON a.doc_id = c.doc_id JOIN sh b ON b.doc_id = c.min_id
-           |  WHERE len(list_intersect(a.s, b.s)) * 1.0
-           |        / len(list_distinct(list_concat(a.s, b.s))) >= 0.8)
-           |SELECT lang_pred, CAST(count(*) AS BIGINT) AS n_docs,
-           |CAST(sum(n_words) AS BIGINT) AS sum_words
-           |FROM ex WHERE doc_id NOT IN (SELECT doc_id FROM drops)
-           |GROUP BY lang_pred ORDER BY lang_pred""".stripMargin
-      }),
+      Some(s"""WITH ${duckPrepFunnel("", "TRUE")}
+             |SELECT lang_pred, CAST(count(*) AS BIGINT) AS n_docs,
+             |CAST(sum(n_words) AS BIGINT) AS sum_words
+             |FROM acc GROUP BY lang_pred ORDER BY lang_pred""".stripMargin)),
 
     // ── 57b. capped signature-store verification (r15): bottom-16
     // shingle sketches (the KMV / bottom-k MinHash sketch of the
@@ -2631,17 +2679,13 @@ ORDER BY feature"""
           .orderBy(col("doc_id"), col("dup_of"))
       },
       Some(s"""WITH w AS (SELECT doc_id, $duckWhs AS h FROM documents),
-             |sig AS (SELECT doc_id, list_transform(range(0,8),
-             |  i -> list_min(list_transform(h,
-             |    x -> (x*((2654435761*(i+1))%$duckP)+(40503*(i+1)+7))%$duckP))) AS s FROM w),
+             |sig AS (SELECT doc_id, ${duckMinhashSig("h", 8)} AS s FROM w),
              |bands AS (SELECT doc_id, $duckBandKeys FROM sig),
              |bmin AS (SELECT band_key, min(doc_id) AS dup_of FROM bands GROUP BY band_key),
              |cand AS (SELECT DISTINCT b.doc_id, dup_of FROM bands b
              |  JOIN bmin USING (band_key) WHERE b.doc_id > dup_of),
-             |sk AS (SELECT doc_id, list_slice(list_sort(list_distinct(
-             |  list_transform(range(0, len(h)-2),
-             |    i -> ((h[CAST(i+1 AS INT)]*31 + h[CAST(i+2 AS INT)])%$duckP*31
-             |          + h[CAST(i+3 AS INT)])%$duckP))), 1, 16) AS sk FROM w),
+             |sk AS (SELECT doc_id, list_slice(list_sort(list_distinct($duckSh3)), 1, 16) AS sk
+             |  FROM w),
              |est AS (SELECT c.doc_id, c.dup_of,
              |  list_slice(list_sort(list_distinct(list_concat(a.sk, b.sk))), 1, 16) AS x,
              |  a.sk AS ska, b.sk AS skb, len(a.sk) AS m_a
@@ -2689,9 +2733,7 @@ ORDER BY feature"""
           .orderBy(col("doc_id"), col("dup_of"))
       },
       Some(s"""WITH w AS (SELECT doc_id, $duckWhs AS h FROM documents),
-             |sig AS (SELECT doc_id, list_transform(range(0,8),
-             |  i -> list_min(list_transform(h,
-             |    x -> (x*((2654435761*(i+1))%$duckP)+(40503*(i+1)+7))%$duckP))) AS s FROM w),
+             |sig AS (SELECT doc_id, ${duckMinhashSig("h", 8)} AS s FROM w),
              |bands AS (SELECT doc_id, $duckBandKeys FROM sig),
              |bmin AS (SELECT band_key, min(doc_id) AS m FROM bands GROUP BY band_key),
              |star AS (SELECT b.doc_id, m AS dup_of FROM bands b
@@ -2726,53 +2768,10 @@ ORDER BY feature"""
           .groupBy(col("lang_pred"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("sum_words"))
           .orderBy(col("lang_pred")),
-      Some {
-        val langs = TextAnalysis.stopwords.keys.toSeq.sorted
-        val scores = langs.map(l =>
-          s"len(list_filter(string_split(text,' '), w -> list_contains(${duckStop(l)}, w))) AS s_$l")
-          .mkString(",\n")
-        val best = langs.map(l => s"s_$l").mkString("greatest(", ",", ")")
-        val cases = langs.map(l => s"WHEN best > 0 AND s_$l = best THEN '$l'").mkString(" ")
-        s"""WITH base AS (
-           |  SELECT doc_id, text, CAST(len(string_split(text,' ')) AS BIGINT) AS n_words
-           |  FROM documents WHERE len(string_split(text,' ')) >= 30),
-           |sc AS (SELECT doc_id, text, n_words, $scores FROM base),
-           |p AS (SELECT doc_id, text, n_words,
-           |      CASE $cases ELSE 'und' END AS lang_pred
-           |      FROM (SELECT *, $best AS best FROM sc)),
-           |ex AS (SELECT doc_id, text, n_words, lang_pred FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY ${duckCharHash64("text")}
-           |    ORDER BY doc_id) AS rn FROM p) WHERE rn = 1),
-           |w AS (SELECT doc_id, $duckWhs AS h FROM ex),
-           |sig AS (SELECT doc_id, list_transform(range(0,8),
-           |  i -> list_min(list_transform(h,
-             |    x -> (x*((2654435761*(i+1))%$duckP)+(40503*(i+1)+7))%$duckP))) AS s FROM w),
-           |bands AS (SELECT doc_id, $duckBandKeys FROM sig),
-           |bmin AS (SELECT band_key, min(doc_id) AS min_id FROM bands GROUP BY band_key),
-           |cand AS (SELECT DISTINCT doc_id, min_id FROM (
-           |  SELECT b.doc_id, min_id FROM bands b
-           |    JOIN bmin USING (band_key) WHERE b.doc_id > min_id
-           |  UNION ALL
-           |  SELECT doc_id, prev AS min_id FROM (
-           |    SELECT doc_id, lag(doc_id) OVER (
-           |      PARTITION BY band_key ORDER BY doc_id) AS prev FROM bands)
-           |  WHERE prev IS NOT NULL)),
-           |sh AS (SELECT doc_id, list_slice(list_sort(list_distinct(
-           |  list_transform(range(0, len(h)-2),
-           |  i -> ((h[CAST(i+1 AS INT)]*31 + h[CAST(i+2 AS INT)])%$duckP*31
-           |        + h[CAST(i+3 AS INT)])%$duckP))), 1, 16) AS s FROM w),
-           |drops AS (SELECT DISTINCT c.doc_id FROM cand c
-           |  JOIN sh a ON a.doc_id = c.doc_id JOIN sh b ON b.doc_id = c.min_id
-           |  WHERE len(list_intersect(
-           |          list_slice(list_sort(list_distinct(list_concat(a.s, b.s))), 1, 16),
-           |          list_intersect(a.s, b.s))) * 1.0
-           |        / len(list_slice(list_sort(list_distinct(list_concat(a.s, b.s))), 1, 16))
-           |        >= 0.8)
-           |SELECT lang_pred, CAST(count(*) AS BIGINT) AS n_docs,
-           |CAST(sum(n_words) AS BIGINT) AS sum_words
-           |FROM ex WHERE doc_id NOT IN (SELECT doc_id FROM drops)
-           |GROUP BY lang_pred ORDER BY lang_pred""".stripMargin
-      }),
+      Some(s"""WITH ${duckPrepFunnel("", "TRUE", maxShingles = 16)}
+             |SELECT lang_pred, CAST(count(*) AS BIGINT) AS n_docs,
+             |CAST(sum(n_words) AS BIGINT) AS sum_words
+             |FROM acc GROUP BY lang_pred ORDER BY lang_pred""".stripMargin)),
 
     // ── 57d. incremental dedup vs a persisted signature store (r15):
     // the store is built from half the corpus (prepare → signatures on
@@ -2883,23 +2882,11 @@ ORDER BY feature"""
           t(s, d, "embeddings"), "vec_id", "embedding", dim = 64, bits = 4)
           .select(col("vec_id"), col("dup_of"), e4(col("cos")).as("cos_e4"))
           .orderBy(col("vec_id"), col("dup_of")),
-      Some(s"""WITH b AS (SELECT vec_id, embedding,
-             |  CAST(list_sum(list_transform(range(0,4), j ->
-             |    CASE WHEN list_sum(list_transform(range(0,64), i ->
-             |      CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) *
-             |      ${duckPlane("j*64+i+1")})) > 0
-             |    THEN CAST(pow(2,j) AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
-             |  FROM embeddings),
+      Some(s"""WITH $duckLshBuckets,
              |cand AS (SELECT DISTINCT l.vec_id AS lo, h.vec_id AS hi FROM b l
              |  JOIN b h ON l.bucket = h.bucket AND l.vec_id < h.vec_id)
              |SELECT c.hi AS vec_id, c.lo AS dup_of,
-             |CAST(floor(
-             |  list_sum(list_transform(range(1, len(a.embedding)+1),
-             |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE)))
-             |  / (sqrt(list_sum(list_transform(range(1, len(a.embedding)+1),
-             |       i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
-             |   * sqrt(list_sum(list_transform(range(1, len(x.embedding)+1),
-             |       i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE)))))
+             |CAST(floor(${duckCosine("a.embedding", "x.embedding")}
              |  * 10000.0 + 0.5) AS BIGINT) AS cos_e4
              |FROM cand c JOIN b a ON a.vec_id = c.hi JOIN b x ON x.vec_id = c.lo
              |ORDER BY vec_id, dup_of""".stripMargin)),
@@ -2919,18 +2906,11 @@ ORDER BY feature"""
           .select(col("probe_id"), col("vec_id"), round(col("score"), 4).as("dot"))
           .orderBy(col("probe_id"), col("vec_id"))
       },
-      Some(s"""WITH b AS (SELECT vec_id, embedding,
-             |  CAST(list_sum(list_transform(range(0,4), j ->
-             |    CASE WHEN list_sum(list_transform(range(0,64), i ->
-             |      CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) *
-             |      ${duckPlane("j*64+i+1")})) > 0
-             |    THEN CAST(pow(2,j) AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
-             |  FROM embeddings),
+      Some(s"""WITH $duckLshBuckets,
              |p AS (SELECT vec_id AS probe_id, embedding AS pe, bucket AS pb
              |      FROM b WHERE vec_id < 10),
              |j AS (SELECT p.probe_id, c.vec_id,
-             |  list_sum(list_transform(range(1, len(c.embedding)+1),
-             |    i -> CAST(c.embedding[i] AS DOUBLE) * CAST(p.pe[i] AS DOUBLE))) AS dot
+             |  ${duckDot("c.embedding", "p.pe")} AS dot
              |  FROM b c JOIN p ON c.bucket = p.pb WHERE c.vec_id >= 10),
              |r AS (SELECT probe_id, vec_id, dot,
              |  row_number() OVER (PARTITION BY probe_id ORDER BY dot DESC, vec_id) AS rn FROM j)
@@ -2957,13 +2937,11 @@ ORDER BY feature"""
             col("neg_rank").cast("long").as("neg_rank"))
           .orderBy(col("qid"), col("neg_rank"))
       },
-      Some("""WITH q AS (SELECT vec_id AS qid, embedding AS qe
+      Some(s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe
              |  FROM embeddings WHERE vec_id < 5),
              |pos AS (SELECT qid, qid*7 + 20 AS vec_id FROM q),
              |j AS (SELECT q.qid, c.vec_id,
-             |  list_sum(list_transform(range(1, len(c.embedding)+1),
-             |    i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)))
-             |    AS dot
+             |  ${duckDot("c.embedding", "q.qe")} AS dot
              |  FROM embeddings c, q WHERE c.vec_id >= 10),
              |f AS (SELECT j.* FROM j LEFT JOIN pos
              |  ON pos.qid = j.qid AND pos.vec_id = j.vec_id
@@ -2995,26 +2973,18 @@ ORDER BY feature"""
           .select(col("probe_id"), round(col("recall"), 4).as("recall"))
           .orderBy(col("probe_id"))
       },
-      Some(s"""WITH b AS (SELECT vec_id, embedding,
-             |  CAST(list_sum(list_transform(range(0,4), j ->
-             |    CASE WHEN list_sum(list_transform(range(0,64), i ->
-             |      CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) *
-             |      ${duckPlane("j*64+i+1")})) > 0
-             |    THEN CAST(pow(2,j) AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
-             |  FROM embeddings),
+      Some(s"""WITH $duckLshBuckets,
              |p AS (SELECT vec_id AS probe_id, embedding AS pe, bucket AS pb
              |      FROM b WHERE vec_id < 10),
              |j AS (SELECT p.probe_id, c.vec_id,
-             |  list_sum(list_transform(range(1, len(c.embedding)+1),
-             |    i -> CAST(c.embedding[i] AS DOUBLE) * CAST(p.pe[i] AS DOUBLE))) AS dot
+             |  ${duckDot("c.embedding", "p.pe")} AS dot
              |  FROM b c JOIN p ON c.bucket = p.pb WHERE c.vec_id >= 10),
              |approx AS (SELECT probe_id, vec_id FROM (
              |  SELECT probe_id, vec_id,
              |    row_number() OVER (PARTITION BY probe_id ORDER BY dot DESC, vec_id) AS rn
              |  FROM j) WHERE rn <= 3),
              |t0 AS (SELECT p.probe_id, c.vec_id,
-             |  list_sum(list_transform(range(1, len(c.embedding)+1),
-             |    i -> CAST(c.embedding[i] AS DOUBLE) * CAST(p.pe[i] AS DOUBLE))) AS dot
+             |  ${duckDot("c.embedding", "p.pe")} AS dot
              |  FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10) c
              |  CROSS JOIN p),
              |truth AS (SELECT probe_id, vec_id FROM (
@@ -3267,10 +3237,7 @@ ORDER BY feature"""
           .orderBy(col("doc_id"))
       },
       Some {
-        val sh5 = s"list_distinct(list_transform(range(0, len(h)-4), i -> " +
-          s"((((h[CAST(i+1 AS INT)]*31 + h[CAST(i+2 AS INT)])%$duckP*31 " +
-          s"+ h[CAST(i+3 AS INT)])%$duckP*31 + h[CAST(i+4 AS INT)])%$duckP*31 " +
-          s"+ h[CAST(i+5 AS INT)])%$duckP))"
+        val sh5 = s"list_distinct(list_transform(range(0, len(h)-4), i -> $duckSh5))"
         s"""WITH wt AS (SELECT doc_id, $duckWhs AS h FROM documents WHERE doc_id % 17 <> 0),
            |wb AS (SELECT doc_id, $duckWhs AS h FROM documents WHERE doc_id % 17 = 0),
            |st AS (SELECT doc_id, unnest($sh5) AS sh FROM wt),
@@ -4113,7 +4080,7 @@ ORDER BY feature"""
           .select(col("vec_id"))
           .orderBy(col("vec_id"))
       },
-      Some(s"""WITH $duckKmeans4x2,
+      Some(s"""WITH ${duckKmeans("TRUE", 2)},
              |af AS (
              |  ${duckAssign("emb", "c2")}),
              |dup AS (
@@ -4146,7 +4113,7 @@ ORDER BY feature"""
           .select(col("vec_id"))
           .orderBy(col("vec_id"))
       },
-      Some(s"""WITH $duckKmeans4x2,
+      Some(s"""WITH ${duckKmeans("TRUE", 2)},
              |afd AS (SELECT vec_id, cell, d2 FROM (
              |  SELECT v.vec_id, c.cid AS cell,
              |    list_sum(list_transform(range(1, 65),
@@ -4186,10 +4153,7 @@ ORDER BY feature"""
           .orderBy(col("doc_id")),
       Some(s"""WITH w AS (SELECT doc_id, $duckWhs AS h FROM documents),
              |s AS (SELECT doc_id, CASE WHEN len(h) >= 5 THEN list_distinct(
-             |  list_transform(range(0, len(h)-4), i ->
-             |    ((((h[CAST(i+1 AS INT)]*31 + h[CAST(i+2 AS INT)])%$duckP*31
-             |      + h[CAST(i+3 AS INT)])%$duckP*31 + h[CAST(i+4 AS INT)])%$duckP*31
-             |      + h[CAST(i+5 AS INT)])%$duckP))
+             |  list_transform(range(0, len(h)-4), i -> $duckSh5))
              |  ELSE [] END AS gs FROM w),
              |e AS (SELECT doc_id, unnest(gs) AS g FROM s),
              |dfq AS (SELECT g, CAST(count(*) AS BIGINT) AS df FROM e GROUP BY g),
@@ -4219,12 +4183,7 @@ ORDER BY feature"""
       Some(s"""WITH aug AS (SELECT doc_id, text FROM documents
              |  UNION ALL SELECT 9000001, '$spanOracleA'
              |  UNION ALL SELECT 9000002, '$spanOracleB'),
-             |w AS (SELECT doc_id, $duckWhs AS h FROM aug),
-             |sg AS (SELECT doc_id, CASE WHEN len(h) >= 5 THEN
-             |  list_transform(range(0, len(h)-4), i -> $duckSh5)
-             |  ELSE [] END AS gs FROM w),
-             |e AS (SELECT doc_id, unnest(gs) AS sh,
-             |  unnest(range(0, len(gs))) AS p FROM sg),
+             |$duckSpanShingles,
              |rep AS (SELECT sh FROM (SELECT DISTINCT doc_id, sh FROM e)
              |  GROUP BY sh HAVING count(*) >= 2),
              |runs AS (SELECT doc_id, p,
@@ -4253,13 +4212,7 @@ ORDER BY feature"""
       Some(s"""WITH aug AS (SELECT doc_id, text FROM documents
              |  UNION ALL SELECT 9000001, '$spanOracleA'
              |  UNION ALL SELECT 9000002, '$spanOracleB'),
-             |w AS (SELECT doc_id, $duckWhs AS h,
-             |  string_split(text, ' ') AS tk FROM aug),
-             |sg AS (SELECT doc_id, CASE WHEN len(h) >= 5 THEN
-             |  list_transform(range(0, len(h)-4), i -> $duckSh5)
-             |  ELSE [] END AS gs FROM w),
-             |e AS (SELECT doc_id, unnest(gs) AS sh,
-             |  unnest(range(0, len(gs))) AS p FROM sg),
+             |$duckSpanShingles,
              |dfw AS (SELECT sh, CAST(count(*) AS BIGINT) AS df,
              |    min(doc_id) AS win
              |  FROM (SELECT DISTINCT doc_id, sh FROM e) GROUP BY sh),
@@ -4270,18 +4223,7 @@ ORDER BY feature"""
              |sp AS (SELECT doc_id, min(p) AS st, max(p) + 4 AS en
              |  FROM cut GROUP BY doc_id, grp
              |  HAVING max(p) + 4 - min(p) + 1 >= 20),
-             |tok AS (SELECT doc_id, unnest(tk) AS tkn,
-             |  unnest(range(0, len(tk))) AS i FROM w),
-             |cutpos AS (SELECT DISTINCT t.doc_id, t.i FROM tok t
-             |  JOIN sp ON t.doc_id = sp.doc_id AND t.i BETWEEN sp.st AND sp.en),
-             |kept AS (SELECT t.doc_id,
-             |    CAST(count(*) AS BIGINT) AS n_tot,
-             |    CAST(count(*) FILTER (WHERE c.i IS NULL) AS BIGINT) AS n_kept,
-             |    string_agg(CASE WHEN c.i IS NULL THEN t.tkn END, ' '
-             |      ORDER BY t.i) AS txt
-             |  FROM tok t LEFT JOIN cutpos c
-             |    ON t.doc_id = c.doc_id AND t.i = c.i
-             |  GROUP BY t.doc_id)
+             |${duckSpanCut("sp")}
              |SELECT doc_id, CAST(n_tot - n_kept AS BIGINT) AS n_removed,
              |  nullif(txt, '') AS text_kept
              |FROM kept ORDER BY doc_id""".stripMargin)),
@@ -4317,18 +4259,7 @@ ORDER BY feature"""
           .orderBy(col("doc_id")),
       Some(s"""WITH aug AS ($spanExactAugSql),
              |${duckExactSpans("a.doc_id > b.doc_id")},
-             |tok AS (SELECT doc_id, unnest(tk) AS tkn,
-             |  unnest(range(0, len(tk))) AS i FROM w),
-             |cutpos AS (SELECT DISTINCT t.doc_id, t.i FROM tok t
-             |  JOIN cov ON t.doc_id = cov.doc_id AND t.i BETWEEN cov.st AND cov.en),
-             |kept AS (SELECT t.doc_id,
-             |    CAST(count(*) AS BIGINT) AS n_tot,
-             |    CAST(count(*) FILTER (WHERE c.i IS NULL) AS BIGINT) AS n_kept,
-             |    string_agg(CASE WHEN c.i IS NULL THEN t.tkn END, ' '
-             |      ORDER BY t.i) AS txt
-             |  FROM tok t LEFT JOIN cutpos c
-             |    ON t.doc_id = c.doc_id AND t.i = c.i
-             |  GROUP BY t.doc_id)
+             |${duckSpanCut("cov")}
              |SELECT doc_id, CAST(n_tot - n_kept AS BIGINT) AS n_removed,
              |  nullif(txt, '') AS text_kept
              |FROM kept ORDER BY doc_id""".stripMargin)),
@@ -4412,13 +4343,7 @@ ORDER BY feature"""
           .orderBy(col("doc_id")),
       Some(s"""WITH aug AS (SELECT doc_id, text FROM documents
              |  UNION ALL SELECT 9000201, '$intraOracleDoc'),
-             |w AS (SELECT doc_id, $duckWhs AS h,
-             |  string_split(text, ' ') AS tk FROM aug),
-             |sg AS (SELECT doc_id, CASE WHEN len(h) >= 5 THEN
-             |  list_transform(range(0, len(h)-4), i -> $duckSh5)
-             |  ELSE [] END AS gs FROM w),
-             |e AS (SELECT doc_id, unnest(gs) AS sh,
-             |  unnest(range(0, len(gs))) AS p FROM sg),
+             |$duckSpanShingles,
              |fst AS (SELECT doc_id, sh, min(p) AS fp
              |  FROM e GROUP BY doc_id, sh),
              |cut AS (SELECT e.doc_id, e.p,
@@ -4428,18 +4353,7 @@ ORDER BY feature"""
              |sp AS (SELECT doc_id, min(p) AS st, max(p) + 4 AS en
              |  FROM cut GROUP BY doc_id, grp
              |  HAVING max(p) + 4 - min(p) + 1 >= 20),
-             |tok AS (SELECT doc_id, unnest(tk) AS tkn,
-             |  unnest(range(0, len(tk))) AS i FROM w),
-             |cutpos AS (SELECT DISTINCT t.doc_id, t.i FROM tok t
-             |  JOIN sp ON t.doc_id = sp.doc_id AND t.i BETWEEN sp.st AND sp.en),
-             |kept AS (SELECT t.doc_id,
-             |    CAST(count(*) AS BIGINT) AS n_tot,
-             |    CAST(count(*) FILTER (WHERE c.i IS NULL) AS BIGINT) AS n_kept,
-             |    string_agg(CASE WHEN c.i IS NULL THEN t.tkn END, ' '
-             |      ORDER BY t.i) AS txt
-             |  FROM tok t LEFT JOIN cutpos c
-             |    ON t.doc_id = c.doc_id AND t.i = c.i
-             |  GROUP BY t.doc_id)
+             |${duckSpanCut("sp")}
              |SELECT doc_id, CAST(n_tot - n_kept AS BIGINT) AS n_removed,
              |  nullif(txt, '') AS text_kept
              |FROM kept ORDER BY doc_id""".stripMargin)),
@@ -4722,9 +4636,7 @@ ORDER BY feature"""
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH w AS (SELECT doc_id, $duckWhs AS h FROM documents),
-             |sh AS (SELECT doc_id, list_distinct(list_transform(range(0, len(h)-2),
-             |  i -> ((h[CAST(i+1 AS INT)]*31 + h[CAST(i+2 AS INT)])%$duckP*31
-             |        + h[CAST(i+3 AS INT)])%$duckP)) AS s FROM w)
+             |sh AS (SELECT doc_id, list_distinct($duckSh3) AS s FROM w)
              |SELECT a.doc_id AS doc_id,
              |CAST(floor(len(list_intersect(a.s, b.s))*1.0/len(a.s)*10000.0 + 0.5)
              |  AS BIGINT) AS c_ab_e4,
@@ -5119,23 +5031,7 @@ ORDER BY feature"""
             when(col("ibs_den") === 0, lit(null).cast("long"))
               .otherwise(e4(col("ibs_num").cast("double") / col("ibs_den"))).as("ibs_e4"))
           .orderBy(col("si"), col("sj")),
-      Some(s"""WITH g AS ($duckGt),
-             |dos AS (SELECT vid, list_transform(gt, x ->
-             |  CASE WHEN list_contains(x, -1) THEN -1 ELSE x[1] + x[2] END) AS d FROM g),
-             |pr AS (SELECT vid, d, r1.i AS si, r2.j AS sj
-             |  FROM dos, range(0, 12) r1(i), range(0, 12) r2(j) WHERE r2.j > r1.i),
-             |terms AS (SELECT si, sj,
-             |  CASE WHEN d[CAST(si+1 AS INT)] >= 0 AND d[CAST(sj+1 AS INT)] >= 0
-             |    THEN 2 - abs(d[CAST(si+1 AS INT)] - d[CAST(sj+1 AS INT)]) ELSE 0 END AS num,
-             |  CASE WHEN d[CAST(si+1 AS INT)] >= 0 AND d[CAST(sj+1 AS INT)] >= 0
-             |    THEN 2 ELSE 0 END AS den
-             |  FROM pr)
-             |SELECT CAST(si AS BIGINT) AS si, CAST(sj AS BIGINT) AS sj,
-             |CAST(sum(num) AS BIGINT) AS ibs_num, CAST(sum(den) AS BIGINT) AS ibs_den,
-             |CASE WHEN CAST(sum(den) AS BIGINT) = 0 THEN NULL
-             |  ELSE CAST(floor(CAST(sum(num) AS BIGINT)*1.0/CAST(sum(den) AS BIGINT)
-             |    *10000.0 + 0.5) AS BIGINT) END AS ibs_e4
-             |FROM terms GROUP BY si, sj ORDER BY si, sj""".stripMargin)),
+      Some(duckIbs)),
 
     // ── 89a. product-quantization encode + ADC scoring vs a FIXED
     // literal codebook (2 subspaces × 4 constant-vector centroids) —
@@ -5188,23 +5084,7 @@ ORDER BY feature"""
             when(col("ibs_den") === 0, lit(null).cast("long"))
               .otherwise(e4(col("ibs_num").cast("double") / col("ibs_den"))).as("ibs_e4"))
           .orderBy(col("si"), col("sj")),
-      Some(s"""WITH g AS ($duckGt),
-             |dos AS (SELECT vid, list_transform(gt, x ->
-             |  CASE WHEN list_contains(x, -1) THEN -1 ELSE x[1] + x[2] END) AS d FROM g),
-             |pr AS (SELECT vid, d, r1.i AS si, r2.j AS sj
-             |  FROM dos, range(0, 12) r1(i), range(0, 12) r2(j) WHERE r2.j > r1.i),
-             |terms AS (SELECT si, sj,
-             |  CASE WHEN d[CAST(si+1 AS INT)] >= 0 AND d[CAST(sj+1 AS INT)] >= 0
-             |    THEN 2 - abs(d[CAST(si+1 AS INT)] - d[CAST(sj+1 AS INT)]) ELSE 0 END AS num,
-             |  CASE WHEN d[CAST(si+1 AS INT)] >= 0 AND d[CAST(sj+1 AS INT)] >= 0
-             |    THEN 2 ELSE 0 END AS den
-             |  FROM pr)
-             |SELECT CAST(si AS BIGINT) AS si, CAST(sj AS BIGINT) AS sj,
-             |CAST(sum(num) AS BIGINT) AS ibs_num, CAST(sum(den) AS BIGINT) AS ibs_den,
-             |CASE WHEN CAST(sum(den) AS BIGINT) = 0 THEN NULL
-             |  ELSE CAST(floor(CAST(sum(num) AS BIGINT)*1.0/CAST(sum(den) AS BIGINT)
-             |    *10000.0 + 0.5) AS BIGINT) END AS ibs_e4
-             |FROM terms GROUP BY si, sj ORDER BY si, sj""".stripMargin)),
+      Some(duckIbs)),
 
     // ── 89c. KING kinship screen (Manichaikul 2010): the four pairwise
     // integer counts + sum-denominator φ̂, exact on both engines — the
@@ -5219,8 +5099,7 @@ ORDER BY feature"""
               .otherwise(e4(col("phi"))).as("phi_e4"))
           .orderBy(col("si"), col("sj")),
       Some(s"""WITH g AS ($duckGt),
-             |dos AS (SELECT vid, list_transform(gt, x ->
-             |  CASE WHEN list_contains(x, -1) THEN -1 ELSE x[1] + x[2] END) AS d FROM g),
+             |$duckDosages,
              |pr AS (SELECT vid, d[CAST(r1.i+1 AS INT)] AS di,
              |    d[CAST(r2.j+1 AS INT)] AS dj, r1.i AS si, r2.j AS sj
              |  FROM dos, range(0, 12) r1(i), range(0, 12) r2(j) WHERE r2.j > r1.i),
@@ -5278,8 +5157,7 @@ ORDER BY feature"""
               .otherwise(e4(col("error_rate"))).as("rate_e4"))
           .orderBy(col("trio_idx")),
       Some(s"""WITH g AS ($duckGt),
-             |dos AS (SELECT vid, list_transform(gt, x ->
-             |  CASE WHEN list_contains(x, -1) THEN -1 ELSE x[1] + x[2] END) AS d FROM g),
+             |$duckDosages,
              |tr AS (SELECT * FROM (VALUES (0,0,1,2),(1,3,4,5),(2,6,7,8),(3,9,10,11))
              |  t(ti, c, f, m)),
              |terms AS (SELECT ti, c, f, m,
@@ -5349,8 +5227,7 @@ ORDER BY feature"""
               .otherwise(e4(col("chi2"))).as("chi2_e4"))
           .orderBy(col("vid")),
       Some(s"""WITH g AS ($duckGt),
-             |dos AS (SELECT vid, list_transform(gt, x ->
-             |  CASE WHEN list_contains(x, -1) THEN -1 ELSE x[1] + x[2] END) AS d FROM g),
+             |$duckDosages,
              |cnt AS (SELECT vid,
              |  len(list_filter(d[1:6],  x -> x = 0)) AS r0,
              |  len(list_filter(d[1:6],  x -> x = 1)) AS r1,
@@ -5439,17 +5316,7 @@ ORDER BY feature"""
             col("sample_idx"), col("burden"))
           .orderBy(col("win_start"), col("sample_idx")),
       Some(s"""WITH g AS ($duckGt),
-             |cc AS (SELECT vid,
-             |  len(list_filter(flatten(gt), x -> x = 0)) AS c0,
-             |  len(list_filter(flatten(gt), x -> x = 1)) AS c1 FROM g),
-             |rare AS (SELECT vid FROM cc WHERE c0+c1 > 0
-             |  AND least(c0, c1) > 0
-             |  AND least(c0, c1)*10000 <= 2500*(c0+c1)),
-             |ex AS (SELECT g.vid, s.i AS si,
-             |  CASE WHEN list_contains(gt[CAST(s.i+1 AS INT)], -1) THEN 0
-             |    ELSE gt[CAST(s.i+1 AS INT)][1] + gt[CAST(s.i+1 AS INT)][2]
-             |    END AS d
-             |  FROM g JOIN rare USING (vid), range(0, 12) s(i))
+             |$duckRareDosages
              |SELECT CAST((vid // 16)*16 AS BIGINT) AS win_start,
              |CAST(count(*) AS BIGINT) AS n_rare,
              |CAST(si AS INT) AS sample_idx,
@@ -5472,17 +5339,7 @@ ORDER BY feature"""
               .otherwise(e4(col("t2"))).as("t2_e4"))
           .orderBy(col("win_start")),
       Some(s"""WITH g AS ($duckGt),
-             |cc AS (SELECT vid,
-             |  len(list_filter(flatten(gt), x -> x = 0)) AS c0,
-             |  len(list_filter(flatten(gt), x -> x = 1)) AS c1 FROM g),
-             |rare AS (SELECT vid FROM cc WHERE c0+c1 > 0
-             |  AND least(c0, c1) > 0
-             |  AND least(c0, c1)*10000 <= 2500*(c0+c1)),
-             |ex AS (SELECT g.vid, s.i AS si,
-             |  CASE WHEN list_contains(gt[CAST(s.i+1 AS INT)], -1) THEN 0
-             |    ELSE gt[CAST(s.i+1 AS INT)][1] + gt[CAST(s.i+1 AS INT)][2]
-             |    END AS d
-             |  FROM g JOIN rare USING (vid), range(0, 12) s(i)),
+             |$duckRareDosages,
              |bm AS (SELECT (vid // 16)*16 AS win, count(*) AS n_rare, si,
              |  sum(d) AS b,
              |  ([4200,980,3100,5050,120,2750,3990,610,4480,1830,2520,5200]
@@ -5880,20 +5737,8 @@ ORDER BY feature"""
               .otherwise(e4(col("fst"))).as("fst_e4"))
           .orderBy(col("win_start")),
       Some(s"""WITH g AS ($duckGt),
-             |cnt AS (SELECT vid,
-             |  len(list_filter(flatten(gt[1:6]),  a -> a = 0)) AS a0,
-             |  len(list_filter(flatten(gt[1:6]),  a -> a = 1)) AS a1,
-             |  len(list_filter(flatten(gt[7:12]), a -> a = 0)) AS b0,
-             |  len(list_filter(flatten(gt[7:12]), a -> a = 1)) AS b1
-             |  FROM g),
-             |fr AS (SELECT vid, a0+a1 AS na, b0+b1 AS nb,
-             |  a1*1.0/(a0+a1) AS pa, b1*1.0/(b0+b1) AS pb FROM cnt),
-             |fin AS (SELECT vid,
-             |  CASE WHEN na > 1 AND nb > 1 THEN
-             |    (pa-pb)*(pa-pb) - pa*(1.0-pa)/(na-1) - pb*(1.0-pb)/(nb-1) END AS num,
-             |  CASE WHEN na > 1 AND nb > 1 THEN
-             |    pa*(1.0-pb) + pb*(1.0-pa) END AS den
-             |  FROM fr),
+             |$duckPopCounts,
+             |$duckHudsonTerms,
              |win AS (SELECT vid // 16 * 16 AS win_start,
              |  CASE WHEN num IS NULL THEN NULL
              |    ELSE CAST(floor(num*1000000.0 + 0.5) AS BIGINT) END AS num_fp,
@@ -6076,20 +5921,8 @@ ORDER BY feature"""
               .otherwise(e4(col("fst"))).as("fst_e4"))
           .orderBy(col("vid")),
       Some(s"""WITH g AS ($duckGt),
-             |cnt AS (SELECT vid,
-             |  len(list_filter(flatten(gt[1:6]),  a -> a = 0)) AS a0,
-             |  len(list_filter(flatten(gt[1:6]),  a -> a = 1)) AS a1,
-             |  len(list_filter(flatten(gt[7:12]), a -> a = 0)) AS b0,
-             |  len(list_filter(flatten(gt[7:12]), a -> a = 1)) AS b1
-             |  FROM g),
-             |fr AS (SELECT vid, a0+a1 AS na, b0+b1 AS nb,
-             |  a1*1.0/(a0+a1) AS pa, b1*1.0/(b0+b1) AS pb FROM cnt),
-             |fin AS (SELECT vid,
-             |  CASE WHEN na > 1 AND nb > 1 THEN
-             |    (pa-pb)*(pa-pb) - pa*(1.0-pa)/(na-1) - pb*(1.0-pb)/(nb-1) END AS num,
-             |  CASE WHEN na > 1 AND nb > 1 THEN
-             |    pa*(1.0-pb) + pb*(1.0-pa) END AS den
-             |  FROM fr)
+             |$duckPopCounts,
+             |$duckHudsonTerms
              |SELECT vid,
              |CASE WHEN num IS NULL THEN NULL
              |  ELSE CAST(floor(num*10000.0 + 0.5) AS BIGINT) END AS num_e4,
@@ -6113,12 +5946,7 @@ ORDER BY feature"""
             e4(col("jxy")).as("jxy_e4"))
           .orderBy(col("vid")),
       Some(s"""WITH g AS ($duckGt),
-             |cnt AS (SELECT vid,
-             |  len(list_filter(flatten(gt[1:6]),  a -> a = 0)) AS a0,
-             |  len(list_filter(flatten(gt[1:6]),  a -> a = 1)) AS a1,
-             |  len(list_filter(flatten(gt[7:12]), a -> a = 0)) AS b0,
-             |  len(list_filter(flatten(gt[7:12]), a -> a = 1)) AS b1
-             |  FROM g),
+             |$duckPopCounts,
              |fr AS (SELECT vid,
              |  CASE WHEN a0+a1 > 0 THEN a1*1.0/(a0+a1) END AS pa,
              |  CASE WHEN b0+b1 > 0 THEN b1*1.0/(b0+b1) END AS pb FROM cnt)
@@ -6297,15 +6125,8 @@ ORDER BY feature"""
       "q_gt_tajima",
       (s, d) => {
         import graft.operators.Stats
-        val nn = 24.0
-        val (a1, a2) = Stats.tajimaConstants(24)
-        val b1 = (nn + 1.0) / (3.0 * (nn - 1.0))
-        val b2 = 2.0 * (nn * nn + nn + 3.0) / (9.0 * nn * (nn - 1.0))
-        val c1 = b1 - 1.0 / a1
-        val c2 = b2 - (nn + 2.0) / (a1 * nn) + a2 / (a1 * a1)
-        val e1 = c1 / a1
-        val e2 = c2 / (a1 * a1 + a2)
-        val pairs = nn * (nn - 1.0) / 2.0
+        val (a1, e1, e2) = Stats.tajimaNorm(24)
+        val pairs = 276.0 // C(24, 2) haplotype pairs
         val comp = Stats.tajimaComponents(fullGtTable(s, d), "gt")
         val sSeg = col("s_seg").cast("double")
         val pi = col("sum_c0c1").cast("double") / lit(pairs)
@@ -6320,14 +6141,7 @@ ORDER BY feature"""
             .otherwise(lit(null).cast("long")).as("d_e4"))
       },
       Some {
-        val nn = 24.0
-        val (a1, a2) = graft.operators.Stats.tajimaConstants(24)
-        val b1 = (nn + 1.0) / (3.0 * (nn - 1.0))
-        val b2 = 2.0 * (nn * nn + nn + 3.0) / (9.0 * nn * (nn - 1.0))
-        val c1 = b1 - 1.0 / a1
-        val c2 = b2 - (nn + 2.0) / (a1 * nn) + a2 / (a1 * a1)
-        val e1 = c1 / a1
-        val e2 = c2 / (a1 * a1 + a2)
+        val (a1, e1, e2) = graft.operators.Stats.tajimaNorm(24)
         s"""WITH g AS ($duckFullGt),
            |cnt AS (SELECT vid,
            |  len(list_filter(flatten(gt), a -> a = 0)) AS c0,
@@ -6395,14 +6209,7 @@ ORDER BY feature"""
       (s, d) => {
         import graft.functions.GenotypeKernels
         import graft.operators.Stats
-        val nn = 24.0
-        val (a1, a2) = Stats.tajimaConstants(24)
-        val b1 = (nn + 1.0) / (3.0 * (nn - 1.0))
-        val b2 = 2.0 * (nn * nn + nn + 3.0) / (9.0 * nn * (nn - 1.0))
-        val c1 = b1 - 1.0 / a1
-        val c2 = b2 - (nn + 2.0) / (a1 * nn) + a2 / (a1 * a1)
-        val e1 = c1 / a1
-        val e2 = c2 / (a1 * a1 + a2)
+        val (a1, e1, e2) = Stats.tajimaNorm(24)
         val comp = fullGtTable(s, d)
           .withColumn("_c", GenotypeKernels.alleleCounts(col("gt"), lit(2)))
           .withColumn("_c0", element_at(col("_c"), 1))
@@ -6422,14 +6229,7 @@ ORDER BY feature"""
           .orderBy(col("win"))
       },
       Some {
-        val nn = 24.0
-        val (a1, a2) = graft.operators.Stats.tajimaConstants(24)
-        val b1 = (nn + 1.0) / (3.0 * (nn - 1.0))
-        val b2 = 2.0 * (nn * nn + nn + 3.0) / (9.0 * nn * (nn - 1.0))
-        val c1 = b1 - 1.0 / a1
-        val c2 = b2 - (nn + 2.0) / (a1 * nn) + a2 / (a1 * a1)
-        val e1 = c1 / a1
-        val e2 = c2 / (a1 * a1 + a2)
+        val (a1, e1, e2) = graft.operators.Stats.tajimaNorm(24)
         s"""WITH g AS ($duckFullGt),
            |cnt AS (SELECT vid,
            |  CAST(len(list_filter(flatten(gt), a -> a = 0)) AS BIGINT) AS c0,

@@ -361,20 +361,14 @@ object Dedup {
     removeSpans(docs, idCol, textCol, spans)
   }
 
-  /** Append a k-component MinHash signature column.
-    *
-    * PERFORMANCE INVARIANT (all builders here): token hashes are
-    * materialized into a real column before any kernel references them.
-    * Lambda HOFs are interpreted (CodegenFallback), and passing the
-    * `wordHashes(text)` EXPRESSION into a k-reference kernel makes
-    * Catalyst inline the whole token-hash computation at every reference
-    * — measured as an O(words²)-ish 500× blowup at sf0.1. A separate
-    * Project is kept by CollapseProject because the expression is
-    * non-cheap and multiply-referenced. */
-  def withMinhashSignature(df: DataFrame, textCol: String, k: Int = 8, outCol: String = "minhash_sig"): DataFrame =
-    df.withColumn("_whs", wordHashes(col(textCol)))
-      .withColumn(outCol, minhashSignature(col("_whs"), k))
-      .drop("_whs")
+  // PERFORMANCE INVARIANT (all builders here): token hashes are
+  // materialized into a real column before any kernel references them.
+  // Lambda HOFs are interpreted (CodegenFallback), and passing the
+  // `wordHashes(text)` EXPRESSION into a k-reference kernel makes
+  // Catalyst inline the whole token-hash computation at every reference
+  // — measured as an O(words²)-ish 500× blowup at sf0.1. A separate
+  // Project is kept by CollapseProject because the expression is
+  // non-cheap and multiply-referenced.
 
   /** LSH banding: one output row per (doc, band); `band_key` combines the
     * band's signature components into a single group key. Downstream,
@@ -541,11 +535,6 @@ object Dedup {
         containment(col("_shb"), col("_sha")).as("c_of_other"))
       .filter(col("c_in_other") >= tau || col("c_of_other") >= tau)
   }
-
-  /** Embedding near-dup: cosine over candidate pairs (see Similarity for
-    * the LSH blocking that generates candidates at scale). */
-  def cosineNearDup(vecA: Column, vecB: Column, threshold: Double): Column =
-    Similarity.cosine(vecA, vecB) > threshold
 
   /** Corpus-wide embedding near-dup CANDIDATE pairs with their cosine —
     * the self-join analog of the text MinHash banding: map-side LSH

@@ -577,13 +577,6 @@ object DocPipeline {
         payload.as("shingles"))
   }
 
-  /** Persist a signature store bucketed on the fingerprint so repeated
-    * incremental batches anti-join against it with no exchange on the
-    * store side (BucketedStore — the shuffle happened once, at write). */
-  def saveSignatureStore(sigs: DataFrame, name: String, buckets: Int = 32,
-                         path: Option[String] = None): Unit =
-    graft.sources.BucketedStore.save(sigs, name, Seq("fp"), buckets, path = path)
-
   /** Incremental batch dedup against a persisted corpus: run the full
     * in-batch [[prepare]] on the NEW documents, then drop survivors that
     * duplicate the existing corpus — judged entirely from the corpus's
@@ -1969,6 +1962,10 @@ object DocPipeline {
                         maxAttempts: Int = 8): DataFrame = {
     require(maxAttempts >= 1, s"maxAttempts=$maxAttempts must be >= 1")
     val spark = vecs.sparkSession
+    // a missing store is a wrong path, not a torn read: fail before the
+    // retry loop would classify Spark's path-not-found as torn
+    if (!AtomicCommit.pathExists(spark, storePath))
+      sys.error(s"no embedding store at $storePath")
     val metaPath = metaDir(storePath, "emb")
     var attempt = 0
     var lastTorn: Throwable = null
@@ -2050,7 +2047,7 @@ object DocPipeline {
         // (reading the shard root raw would partition-discover v= dirs
         // and sweep uncommitted crash debris into the count); a plain
         // store counts its parquet directly.
-        readLive(spark, sp).count()
+        readLive(spark, sp).fold(0L)(_.count())
       })
     }.toMap
     val total = counts.values.sum
@@ -2138,12 +2135,11 @@ object DocPipeline {
                                  fp: Column): CrossShardDupAudit = {
     require(numShards >= 2, s"numShards=$numShards: need >= 2 to cross")
     require(sampleK >= 2, s"sampleK=$sampleK must be >= 2")
-    val frames = (0L until numShards.toLong).flatMap { s =>
-      val sp = shardPath(rootPath, s)
-      if (!AtomicCommit.pathExists(spark, sp)) None
-      else Some(readLive(spark, sp).select(lit(s).as("_shard"), fp.as("fp")))
-    }
-    if (frames.size < 2)
+    val present = (0L until numShards.toLong)
+      .filter(s => AtomicCommit.pathExists(spark, shardPath(rootPath, s)))
+    val frames = present.flatMap(s => readLive(spark, shardPath(rootPath, s))
+      .map(_.select(lit(s).as("_shard"), fp.as("fp"))))
+    if (present.size < 2 || frames.isEmpty)
       return CrossShardDupAudit(sampleK, Map.empty, Nil, 0L)
     val w = Window.partitionBy(col("_shard")).orderBy(col("fp"))
     val sampled = frames.reduce(_ unionByName _).distinct()
@@ -2412,12 +2408,15 @@ object DocPipeline {
 
   /** A hash shard's LIVE rows: an atomic store's live versions (not
     * every committed one — a grace-retained pre-fold version would
-    * count its rows twice), else the plain parquet. */
-  private def readLive(spark: SparkSession, sp: String): DataFrame = {
+    * count its rows twice), else the plain parquet; None when the shard
+    * holds neither (only the writer fence of a stream whose batches
+    * never committed a row). */
+  private def readLive(spark: SparkSession, sp: String): Option[DataFrame] = {
     val versions = AppendStore.liveVersions(spark, sp)
     if (versions.nonEmpty)
-      spark.read.parquet(versions.map(AtomicCommit.versionDir(sp, _)): _*)
-    else spark.read.parquet(sp)
+      Some(spark.read.parquet(versions.map(AtomicCommit.versionDir(sp, _)): _*))
+    else if (AppendStore.hasPlainData(spark, sp)) Some(spark.read.parquet(sp))
+    else None
   }
 
   /** A scoped writer's outlier table is its scope's slice of the

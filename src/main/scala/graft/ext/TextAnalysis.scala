@@ -48,10 +48,6 @@ object TextAnalysis {
   def langScoresOf(toks: Column, profiles: Map[String, Seq[String]] = stopwords): Column =
     TextHashExprs.langScores(toks, profiles.toSeq.sortBy(_._1))
 
-  /** Count of tokens belonging to `list`. */
-  def stopwordCount(text: Column, list: Seq[String]): Column =
-    stopwordCountOf(tokens(text), list)
-
   /** Language-ID heuristic over a token array: argmax of per-language
     * marker counts, lexicographically-first language on ties, 'und'
     * (undetermined) when every score is 0. One filter pass per profile,
@@ -102,9 +98,6 @@ object TextAnalysis {
     val all = profiles.values.flatten.toSeq.distinct
     stopwordCountOf(toks, all).cast("double") / wordCountOf(toks).cast("double")
   }
-
-  def stopwordRatio(text: Column, profiles: Map[String, Seq[String]] = stopwords): Column =
-    stopwordRatioOf(tokens(text), profiles)
 
   /** Composite quality score in [0,1]: length sweet-spot × (1 − punct
     * excess) × stopword presence. Heuristic, monotone, deterministic. */

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   */
 object TextHash {
 
-  val P = 1000000007L
+  val P: Long = TextHashLoops.P
 
   /** Polynomial rolling hash of a string, char code points base-31 —
     * codegen'd fused loop (TextHashExpr); `charHashHof` is the
@@ -48,16 +48,19 @@ object TextHash {
   def wordHashesHof(text: Column): Column = transform(split(text, " "), w => charHashHof(w))
 
   /** i-th universal-family rehash of a word-hash: (aᵢ·w + bᵢ) mod P,
-    * with LARGE mixing multipliers aᵢ = (2654435761·(i+1)) mod P
-    * (Knuth's ⌊2³²/φ⌋). The original aᵢ = 2i+3 family was broken in a
+    * with the coefficients of [[TextHashLoops.minhashCoef]] — LARGE
+    * mixing multipliers aᵢ = (2654435761·(i+1)) mod P (Knuth's
+    * ⌊2³²/φ⌋). The original aᵢ = 2i+3 family was broken in a
     * way that mattered at corpus scale: for a token with a small base
     * hash, w·aᵢ+bᵢ never wraps P, so that token stayed the minimum of
     * EVERY component simultaneously — one boilerplate token owned the
     * whole MinHash signature and LSH banding collapsed into hubs
     * (NearDupSpec boilerplate-hazard fixture pins the repair). Products
     * stay exact: w < P < 2³⁰ and aᵢ < P ⇒ w·aᵢ < 2⁶⁰. */
-  def rehash(w: Column, i: Int): Column =
-    (w * lit((2654435761L * (i + 1)) % P) + lit((40503L * (i + 1) + 7L) % P)) % P
+  def rehash(w: Column, i: Int): Column = {
+    val (a, b) = TextHashLoops.minhashCoef(i)
+    (w * lit(a) + lit(b)) % P
+  }
 
   /** MinHash component i: min over token hashes of rehash i. Null-safe:
     * empty texts yield P (an impossible hash) rather than null so

@@ -22,6 +22,14 @@ import org.apache.spark.unsafe.types.UTF8String
 object TextHashLoops {
   val P = 1000000007L
 
+  /** MinHash universal-family coefficients (aᵢ, bᵢ) of component `i`:
+    * aᵢ = 2654435761·(i+1) mod P, bᵢ = 40503·(i+1)+7 mod P. The one
+    * definition that the fused kernels ([[MinHashLoops]]), the HOF spec
+    * (`TextHash.rehash`) and the DuckDB oracle's literal coefficients
+    * all read. */
+  def minhashCoef(i: Int): (Long, Long) =
+    ((2654435761L * (i + 1)) % P, (40503L * (i + 1) + 7L) % P)
+
   def charHash(s: String): Long = {
     var acc = 0L
     var i = 0
@@ -397,8 +405,8 @@ object MinHashLoops {
   /** All k MinHash components in one pass over the token hashes —
     * replaces one interpreted transform+array_min HOF pass PER
     * component. Same universal-family arithmetic as TextHash.rehash:
-    * component i = min over w of (w·aᵢ + bᵢ) mod P with the large
-    * mixing multipliers aᵢ = (2654435761·(i+1)) mod P (see the
+    * component i = min over w of (w·aᵢ + bᵢ) mod P with the
+    * coefficients of [[TextHashLoops.minhashCoef]] (see the
     * TextHash.rehash scaladoc for why small multipliers collapsed
     * banding); empty input yields P per component (the HOF's coalesce
     * sentinel). */
@@ -407,9 +415,7 @@ object MinHashLoops {
   private val coefCache =
     new java.util.concurrent.ConcurrentHashMap[Int, (Array[Long], Array[Long])]()
   private def coefs(k: Int): (Array[Long], Array[Long]) =
-    coefCache.computeIfAbsent(k, k2 => (
-      Array.tabulate(k2)(j => (2654435761L * (j + 1)) % TextHashLoops.P),
-      Array.tabulate(k2)(j => (40503L * (j + 1) + 7L) % TextHashLoops.P)))
+    coefCache.computeIfAbsent(k, k2 => Array.tabulate(k2)(TextHashLoops.minhashCoef).unzip)
 
   def signature(whs: ArrayData, k: Int): GenericArrayData = {
     val P = TextHashLoops.P

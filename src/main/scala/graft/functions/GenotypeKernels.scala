@@ -77,11 +77,6 @@ object GenotypeKernels {
       .otherwise(array_max(counts).cast("double") / total.cast("double"))
   }
 
-  /** Major (= max) allele frequency from GT — what the reference's
-    * `calc_maf_by_gt` returns. NaN when no calls. */
-  def majorAlleleFreq(gt: Column, nAlleles: Column): Column =
-    majorFreqFromCounts(alleleCounts(gt, nAlleles))
-
   /** MAC from a counts histogram: count of the SECOND-most-frequent
     * allele (the reference's biallelic definition, pinned for
     * multi-allelic sites too — FIXTURES.md §B.2 footnote). */
@@ -120,10 +115,6 @@ object GenotypeKernels {
       acc + c.cast("double") * c.cast("double"))
     when(t <= 1, nan).otherwise((lit(1.0) - sumSq / (t * t)) * t / (t - 1))
   }
-
-  /** Nei's unbiased expected heterozygosity from GT. */
-  def expHetUnbiased(gt: Column, nAlleles: Column): Column =
-    expHetFromCounts(alleleCounts(gt, nAlleles))
 
   /** Genotype-class counts for a biallelic diploid variant among called
     * samples: struct(n_hom_ref, n_het, n_hom_alt) — the sufficient

@@ -49,19 +49,4 @@ object Fuzzy {
       .select(col("id_a"), col("id_b"), col("s_a"), col("s_b"),
         col("dist").cast("long").as("dist"))
   }
-
-  /** Fuzzy vocabulary dedup: map every string to the representative of
-    * its fuzzy-pair component — the smallest string within edit budget
-    * via [[fuzzyPairs]] star blocking (chains beyond one hop keep their
-    * own representative; feed the pairs to `Dedup.transitiveClusters`
-    * when full chain collapse matters). Returns (string, canonical). */
-  def canonicalize(df: DataFrame, strCol: String,
-                   block: Column => Column, maxDist: Int): DataFrame = {
-    val vocab = df.select(col(strCol)).distinct()
-    val pairs = fuzzyPairs(vocab, strCol, strCol, block, maxDist)
-    val repr = pairs.groupBy(col("id_b").as(strCol))
-      .agg(min(col("id_a")).as("canonical"))
-    vocab.join(repr, Seq(strCol), "left")
-      .select(col(strCol), coalesce(col("canonical"), col(strCol)).as("canonical"))
-  }
 }

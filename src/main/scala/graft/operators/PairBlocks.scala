@@ -188,20 +188,4 @@ object PairBlocks {
       ibsFromBlocks(df.sparkSession, path)
     }
   }
-
-  /** [[Stats.kingPairs]] with the same width auto-switch as
-    * [[ibsAuto]]. */
-  def kingAuto(df: DataFrame, gtCol: String = "gt",
-               maxExplodedSamples: Int = 1024, maxDriverSamples: Int = 9000,
-               blockSize: Int = 1024, tmpPath: Option[String] = None): DataFrame = {
-    val s = df.select(size(col(gtCol))).head().getInt(0)
-    if (s <= maxExplodedSamples) Stats.kingPairs(df, gtCol)
-    else if (s <= maxDriverSamples) Stats.kingGramian(df, gtCol)
-    else {
-      val path = tmpPath.getOrElse(
-        java.nio.file.Files.createTempDirectory("pair_blocks").toString)
-      write(df, path, gtCol, blockSize)
-      kingFromBlocks(df.sparkSession, path)
-    }
-  }
 }

@@ -660,6 +660,20 @@ object Stats {
     (a1, a2)
   }
 
+  /** Tajima 1989 normalisation for `nHap` haplotypes: (a1, e1, e2), so
+    * that θ_W = S/a1 and Var(π − θ_W) = e1·S + e2·S·(S−1). The one
+    * definition the engine and the DuckDB oracle (which inlines the
+    * three as `Double.toString` literals) both read. */
+  def tajimaNorm(nHap: Int): (Double, Double, Double) = {
+    val (a1, a2) = tajimaConstants(nHap)
+    val nn = nHap.toDouble
+    val b1 = (nn + 1.0) / (3.0 * (nn - 1.0))
+    val b2 = 2.0 * (nn * nn + nn + 3.0) / (9.0 * nn * (nn - 1.0))
+    val c1 = b1 - 1.0 / a1
+    val c2 = b2 - (nn + 2.0) / (a1 * nn) + a2 / (a1 * a1)
+    (a1, c1 / a1, c2 / (a1 * a1 + a2))
+  }
+
   /** Tajima's D (Tajima 1989 eq. 38) from the one-pass components;
     * None when no site segregates (D undefined). */
   def tajimaD(df: DataFrame, gtCol: String): Option[Double] = {
@@ -668,15 +682,9 @@ object Stats {
     if (r.isNullAt(0) || r.getLong(2) == 0) return None
     val n = r.getLong(0).toInt
     val s = r.getLong(2)
-    val (a1, a2) = tajimaConstants(n)
+    val (a1, e1, e2) = tajimaNorm(n)
     val nn = n.toDouble
     val pi = r.getLong(3).toDouble / (nn * (nn - 1.0) / 2.0)
-    val b1 = (nn + 1.0) / (3.0 * (nn - 1.0))
-    val b2 = 2.0 * (nn * nn + nn + 3.0) / (9.0 * nn * (nn - 1.0))
-    val c1 = b1 - 1.0 / a1
-    val c2 = b2 - (nn + 2.0) / (a1 * nn) + a2 / (a1 * a1)
-    val e1 = c1 / a1
-    val e2 = c2 / (a1 * a1 + a2)
     Some((pi - s / a1) / math.sqrt(e1 * s + e2 * s * (s - 1.0)))
   }
 

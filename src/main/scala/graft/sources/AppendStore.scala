@@ -27,13 +27,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * committed version into one new version and vacuums the rest. */
 object AppendStore {
 
-  /** The store's live content, or `empty` when nothing is committed
-    * (the caller owns the schema — an absent store has none). Fails
-    * fast when `root` holds a PLAIN parquet store (data files but no
-    * commit log) — flipping a stream from `atomicStore = false` to
-    * `true` over the same path would otherwise silently read an empty
-    * history, forget every accepted hash, and re-admit old duplicates
-    * while writing `v=` dirs into the mixed layout. */
   /** The committed versions a reader must union — committedVersions
     * minus everything a fold supersedes (r17: `folds:` manifest lines,
     * [[AtomicCommit.encodeFoldsLine]]). A store that never compacted
@@ -67,16 +60,29 @@ object AppendStore {
     out.get
   }
 
+  /** True iff `root` holds plain parquet data: any entry that is not a
+    * `_` sidecar (commit log, writer fence), a `v=` version dir or
+    * hidden. */
+  private[graft] def hasPlainData(spark: SparkSession, root: String): Boolean = {
+    val f = AtomicCommit.fs(spark, root)
+    val p = new org.apache.hadoop.fs.Path(root)
+    f.exists(p) && f.listStatus(p).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith("v=") && !n.startsWith(".")
+    }
+  }
+
+  /** The store's live content, or `empty` when nothing is committed
+    * (the caller owns the schema — an absent store has none). Fails
+    * fast when `root` holds a PLAIN parquet store (data files but no
+    * commit log) — flipping a stream from `atomicStore = false` to
+    * `true` over the same path would otherwise silently read an empty
+    * history, forget every accepted hash, and re-admit old duplicates
+    * while writing `v=` dirs into the mixed layout. */
   def readOr(spark: SparkSession, root: String, empty: => DataFrame): DataFrame = {
     val versions = liveVersions(spark, root)
     if (versions.isEmpty) {
-      val f = AtomicCommit.fs(spark, root)
-      val p = new org.apache.hadoop.fs.Path(root)
-      val plainData = f.exists(p) && f.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith("v=") && !n.startsWith(".")
-      }
-      require(!plainData,
+      require(!hasPlainData(spark, root),
         s"$root holds a non-atomic parquet store (data files, no _commits/) — " +
           "it cannot be read as an atomic AppendStore; migrate it first " +
           "(read the plain store, append it as v=1, commit) or keep " +

@@ -1145,15 +1145,29 @@ class NearDupSpec extends SparkTestBase {
     // torn reads that exhaust maxAttempts — including one on the FINAL
     // attempt (VERDICT r17 #1: the last attempt used to propagate the
     // raw FileNotFound instead) — emit the curated quiesce message,
-    // with the raw cause attached for forensics
-    val gone = tmp.resolve("never-built").toString
+    // with the raw cause attached for forensics. A store root whose
+    // meta sidecar never lands reads as torn on every attempt.
+    val torn = java.nio.file.Files.createDirectory(tmp.resolve("meta-less")).toString
     val ex = intercept[IllegalStateException] {
-      DocPipeline.embeddingDupProbe(probe, gone, maxAttempts = 2)
+      DocPipeline.embeddingDupProbe(probe, torn, maxAttempts = 2)
     }
     assert(ex.getMessage.contains("no stable committed snapshot"), ex.getMessage)
     assert(ex.getMessage.contains("quiesce maintenance"), ex.getMessage)
     assert(ex.getCause != null, "raw torn cause must ride along")
     org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
+  test("embeddingDupProbe on a store path that does not exist fails at " +
+      "once with the missing-store message, not the torn-read exhaustion") {
+    val tmp = java.nio.file.Files.createTempDirectory("embprobe-missing")
+    try {
+      val gone = tmp.resolve("never-built").toString
+      val probe = plantedCorpus(4, Nil)
+      val ex = intercept[RuntimeException] {
+        DocPipeline.embeddingDupProbe(probe, gone, maxAttempts = 8)
+      }
+      assert(ex.getMessage === s"no embedding store at $gone", ex.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
   test("auditCrossShardEmbDups: planted cross-shard VECTOR copies measured " +

@@ -594,6 +594,50 @@ class StreamingSpec extends SparkTestBase {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(root)
   }
 
+  test("adviseShardCount and both cross-shard audits read an atomic shard " +
+      "that holds only its writer fence as empty") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("fenceonly").toFile
+    root.delete()
+    val route = (0 until 16).map(i => s"t$i").toDF("k")
+      .select(col("k"), graft.ext.DocPipeline.shardOf(col("k"), 2).as("s"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val kA = route.head._1
+    val kB = route.find(_._2 != route(kA)).get._1
+    val in = MemoryStream[(Long, String, String)]
+    val q = graft.ext.DocPipeline.streamIncrementalSharded(
+      in.toDF().toDF("doc_id", "tenant", "text"),
+      root.getAbsolutePath, col("tenant"), numShards = 2, minWords = 4,
+      atomicStore = true) { (_, _) => () }
+    try {
+      // every doc is below minWords: both shards claim their fence,
+      // no batch commits a row
+      in.addData((1L, kA, "too short"), (2L, kB, "also short"))
+      q.processAllAvailable()
+      q.stop()
+      (0L to 1L).foreach { s =>
+        assert(new java.io.File(root, s"shard=$s").isDirectory)
+        assert(graft.sources.AppendStore.liveVersions(spark,
+          graft.ext.DocPipeline.shardPath(root.getAbsolutePath, s)).isEmpty)
+      }
+      val adv = graft.ext.DocPipeline.adviseShardCount(spark,
+        root.getAbsolutePath, numShards = 2)
+      assert(adv.shardDocs === Map(0L -> 0L, 1L -> 0L) && !adv.reshard, s"got $adv")
+      for (audit <- Seq(graft.ext.DocPipeline.auditCrossShardDups _,
+                        graft.ext.DocPipeline.auditCrossShardEmbDups _)) {
+        val a = audit(spark, root.getAbsolutePath, 2, 4096)
+        assert(a.pairs.isEmpty && a.estTotalCrossShardDups === 0L, s"got $a")
+      }
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(root)
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(root.getPath + "_shard_meta"))
+    }
+  }
+
   test("sharded atomic stores under a sustained FAILOVER CHAIN: A fenced " +
       "by B fenced by C on the same shard across multiple batches each — " +
       "every zombie dies loudly at its shard fence, every successor keeps " +
@@ -2114,6 +2158,8 @@ class StreamingSpec extends SparkTestBase {
     } finally {
       q3.stop()
       org.apache.commons.io.FileUtils.deleteQuietly(root)
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(root.getPath + "_shard_meta"))
     }
   }
 
@@ -2122,64 +2168,70 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     val storeDir = java.nio.file.Files.createTempDirectory("vecstore").toFile
     storeDir.delete()
-    def v(x: Double, y: Double, z: Double, w: Double) = Seq(x, y, z, w).map(_.toFloat)
-    val base = v(1, 0.2, -0.5, 0.7)
-    val near = v(1.001, 0.2, -0.5, 0.7)     // cosine ≈ 1 with base
-    val far = v(-0.9, 0.8, 0.3, -0.2)
-    val far2 = v(0.1, -0.7, 0.9, 0.4)
-    val accepted = scala.collection.mutable.Map[Long, Seq[Long]]()
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = graft.ext.DocPipeline.streamEmbeddingDedup(
-      input.toDF().toDF("vec_id", "embedding"), storeDir.getAbsolutePath,
-      dim = 4, bits = 6, bands = 2, tau = 0.98) { (df, bid) =>
-      accepted(bid) = df.select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
-    }
     try {
-      // batch 0: base + its near-dup + one far vector → near-dup collapses
-      input.addData((1L, base), (2L, near), (3L, far)); q.processAllAvailable()
-      // batch 1: replay of base (historical dup) + a genuinely new vector
-      input.addData((4L, base), (5L, far2)); q.processAllAvailable()
-    } finally q.stop()
-    assert(accepted(0L) === Seq(1L, 3L)) // 2 dropped in-batch (min id wins)
-    assert(accepted(1L) === Seq(5L))     // 4 dropped against history
-    // the store holds only acceptees: 3 vectors x 2 bands
-    assert(spark.read.parquet(storeDir.getAbsolutePath)
-      .select("id").distinct().count() === 3L)
-
-    // geometry is persisted: a restart with DIFFERENT (bits, bands)
-    // would compute mismatched bucket keys and silently miss every
-    // cross-run near-dup — it must die loudly instead
-    val wrong = MemoryStream[(Long, Seq[Float])]
-    val qw = graft.ext.DocPipeline.streamEmbeddingDedup(
-      wrong.toDF().toDF("vec_id", "embedding"), storeDir.getAbsolutePath,
-      dim = 4, bits = 8, bands = 2, tau = 0.98) { (_, _) => () }
-    try {
-      wrong.addData((6L, far2))
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        qw.processAllAvailable()
+      def v(x: Double, y: Double, z: Double, w: Double) = Seq(x, y, z, w).map(_.toFloat)
+      val base = v(1, 0.2, -0.5, 0.7)
+      val near = v(1.001, 0.2, -0.5, 0.7)     // cosine ≈ 1 with base
+      val far = v(-0.9, 0.8, 0.3, -0.2)
+      val far2 = v(0.1, -0.7, 0.9, 0.4)
+      val accepted = scala.collection.mutable.Map[Long, Seq[Long]]()
+      val input = MemoryStream[(Long, Seq[Float])]
+      val q = graft.ext.DocPipeline.streamEmbeddingDedup(
+        input.toDF().toDF("vec_id", "embedding"), storeDir.getAbsolutePath,
+        dim = 4, bits = 6, bands = 2, tau = 0.98) { (df, bid) =>
+        accepted(bid) = df.select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
       }
-      assert(ex.getMessage.contains("bits=6") || ex.getCause != null)
-    } finally qw.stop()
+      try {
+        // batch 0: base + its near-dup + one far vector → near-dup collapses
+        input.addData((1L, base), (2L, near), (3L, far)); q.processAllAvailable()
+        // batch 1: replay of base (historical dup) + a genuinely new vector
+        input.addData((4L, base), (5L, far2)); q.processAllAvailable()
+      } finally q.stop()
+      assert(accepted(0L) === Seq(1L, 3L)) // 2 dropped in-batch (min id wins)
+      assert(accepted(1L) === Seq(5L))     // 4 dropped against history
+      // the store holds only acceptees: 3 vectors x 2 bands
+      assert(spark.read.parquet(storeDir.getAbsolutePath)
+        .select("id").distinct().count() === 3L)
 
-    // rebucket: re-key the SAME history at a new geometry in one pass
-    // (vectors ride in the store — nothing re-embedded), then a
-    // restart at the new geometry still rejects historical dups
-    graft.ext.DocPipeline.rebucketEmbeddingStore(
-      spark, storeDir.getAbsolutePath, dim = 4, bits = 8, bands = 3)
-    assert(spark.read.parquet(storeDir.getAbsolutePath)
-      .select("id").distinct().count() === 3L) // history preserved
-    val input2 = MemoryStream[(Long, Seq[Float])]
-    val accepted2 = scala.collection.mutable.Map[Long, Seq[Long]]()
-    val q2 = graft.ext.DocPipeline.streamEmbeddingDedup(
-      input2.toDF().toDF("vec_id", "embedding"), storeDir.getAbsolutePath,
-      dim = 4, bits = 8, bands = 3, tau = 0.98) { (df, bid) =>
-      accepted2(bid) = df.select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
+      // geometry is persisted: a restart with DIFFERENT (bits, bands)
+      // would compute mismatched bucket keys and silently miss every
+      // cross-run near-dup — it must die loudly instead
+      val wrong = MemoryStream[(Long, Seq[Float])]
+      val qw = graft.ext.DocPipeline.streamEmbeddingDedup(
+        wrong.toDF().toDF("vec_id", "embedding"), storeDir.getAbsolutePath,
+        dim = 4, bits = 8, bands = 2, tau = 0.98) { (_, _) => () }
+      try {
+        wrong.addData((6L, far2))
+        val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          qw.processAllAvailable()
+        }
+        assert(ex.getMessage.contains("bits=6") || ex.getCause != null)
+      } finally qw.stop()
+
+      // rebucket: re-key the SAME history at a new geometry in one pass
+      // (vectors ride in the store — nothing re-embedded), then a
+      // restart at the new geometry still rejects historical dups
+      graft.ext.DocPipeline.rebucketEmbeddingStore(
+        spark, storeDir.getAbsolutePath, dim = 4, bits = 8, bands = 3)
+      assert(spark.read.parquet(storeDir.getAbsolutePath)
+        .select("id").distinct().count() === 3L) // history preserved
+      val input2 = MemoryStream[(Long, Seq[Float])]
+      val accepted2 = scala.collection.mutable.Map[Long, Seq[Long]]()
+      val q2 = graft.ext.DocPipeline.streamEmbeddingDedup(
+        input2.toDF().toDF("vec_id", "embedding"), storeDir.getAbsolutePath,
+        dim = 4, bits = 8, bands = 3, tau = 0.98) { (df, bid) =>
+        accepted2(bid) = df.select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
+      }
+      try {
+        input2.addData((7L, near), (8L, v(0.4, 0.9, -0.1, -0.6)))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      assert(accepted2(0L) === Seq(8L),
+        s"historical near-dup must still reject after rebucket: ${accepted2(0L)}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(storeDir)
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(storeDir.getPath + "_emb_meta"))
     }
-    try {
-      input2.addData((7L, near), (8L, v(0.4, 0.9, -0.1, -0.6)))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    assert(accepted2(0L) === Seq(8L),
-      s"historical near-dup must still reject after rebucket: ${accepted2(0L)}")
   }
 }
