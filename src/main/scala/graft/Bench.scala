@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: every declared query at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout.
@@ -23,7 +24,7 @@ object Bench {
     Seq("lineitem", "orders", "customer", "part", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet")
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // median of `reps` runs per query, all within this one JVM: the box
     // shares load (±50% run-to-run, SURVEY §7.1 #7), so a single sample
@@ -41,7 +42,7 @@ object Bench {
         .selectExpr("sum(l_quantity)", "sum(l_extendedprice)")
         .write.format("noop").mode("overwrite").save()
       catch {
-        case _: Throwable =>
+        case NonFatal(_) =>
           spark.range(100000000L).selectExpr("sum(id * 3)")
             .write.format("noop").mode("overwrite").save()
       }
@@ -68,7 +69,7 @@ object Bench {
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
+        catch { case NonFatal(e) => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
         (System.nanoTime() - t0) / 1e9
       }.sorted
       (name, times(times.length / 2), off)
@@ -119,7 +120,7 @@ object Bench {
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       }
-      catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
+      catch { case NonFatal(e) => System.err.println(s"[bench] file write failed: $e") }
     println(full)
     // Compact line LAST so it lands fully inside the driver's tail
     // window (json.loads-able). 2-decimal values; if the query count

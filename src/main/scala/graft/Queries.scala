@@ -135,6 +135,18 @@ object Queries {
       |    pa*(1.0-pb) + pb*(1.0-pa) END AS den
       |  FROM fr)"""
 
+  /** `dt`: the OLS D-terms dxx, dxy, dyy over the n/sx/sxx/sy/syy/sxy
+    * sums of `cells`, carrying `keys` through (q_gt_linreg,
+    * q_gt_burden_test). */
+  private def duckOlsTerms(keys: String): String =
+    s"""dt AS (SELECT $keys, n, sx, sxx, sy, syy, sxy,
+      |  CAST(n*sxx - sx*sx AS DOUBLE) AS dxx,
+      |  CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE)
+      |    - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE) AS dxy,
+      |  CAST(n AS DOUBLE)*CAST(syy AS DOUBLE)
+      |    - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE) AS dyy
+      |  FROM cells)"""
+
   /** `dos(vid, d)`: per-variant dosage list of `g`, -1 for a missing
     * call. */
   private val duckDosages =
@@ -295,6 +307,15 @@ object Queries {
 
   private def fmtTs(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
+  /** `edges`/`nodes` CTE prefix of the q_pagerank edge construction,
+    * shared by [[pageRankSql]], [[pprSql]] and [[hitsSql]]; ends with
+    * a comma and newline, ready for the next CTE. */
+  private val duckGraphCtes =
+    """WITH edges AS (SELECT DISTINCT l_orderkey % 500 AS src,
+      |  l_partkey % 500 AS dst FROM lineitem),
+      |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+      |""".stripMargin
+
   /** DuckDB twin of [[graft.ext.Graph.pageRank]] over the q_pagerank
     * edge construction: the fixed iteration count lets the integer
     * recurrence unroll into chained (non-recursive) CTEs — one
@@ -303,10 +324,7 @@ object Queries {
     * `div` on non-negatives). */
   private def pageRankSql(iters: Int): String = {
     val sb = new StringBuilder(
-      """WITH edges AS (SELECT DISTINCT l_orderkey % 500 AS src,
-        |  l_partkey % 500 AS dst FROM lineitem),
-        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
+      duckGraphCtes + """deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
         |nn AS (SELECT count(*) AS n FROM nodes),
         |r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rk FROM nodes)""".stripMargin)
     for (i <- 1 to iters) {
@@ -331,10 +349,7 @@ object Queries {
   private def pprSql(iters: Int, seeds: Seq[Long]): String = {
     val inSeeds = s"node IN (${seeds.mkString(", ")})"
     val sb = new StringBuilder(
-      """WITH edges AS (SELECT DISTINCT l_orderkey % 500 AS src,
-        |  l_partkey % 500 AS dst FROM lineitem),
-        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
+      duckGraphCtes + """deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
         |r0 AS (SELECT node, CAST(CASE WHEN """.stripMargin +
         inSeeds + """ THEN 1000000000 ELSE 0 END AS BIGINT) AS rk FROM nodes)""")
     for (i <- 1 to iters) {
@@ -416,10 +431,7 @@ object Queries {
     * hub/authority mutual recursion with integer max-norm rescales. */
   private def hitsSql(iters: Int): String = {
     val sb = new StringBuilder(
-      """WITH edges AS (SELECT DISTINCT l_orderkey % 500 AS src,
-        |  l_partkey % 500 AS dst FROM lineitem),
-        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        |s0 AS (SELECT node, CAST(1000000 AS BIGINT) AS hub,
+      duckGraphCtes + """s0 AS (SELECT node, CAST(1000000 AS BIGINT) AS hub,
         |  CAST(1000000 AS BIGINT) AS auth FROM nodes)""".stripMargin)
     for (i <- 1 to iters) {
       val p = s"s${i - 1}"
@@ -5286,13 +5298,7 @@ ORDER BY feature"""
              |  CAST(coalesce(sum(y*y)    FILTER (d <> -1), 0) AS BIGINT) AS syy,
              |  CAST(coalesce(sum(d*y)    FILTER (d <> -1), 0) AS BIGINT) AS sxy
              |  FROM ex GROUP BY vid),
-             |dt AS (SELECT vid, n, sx, sxx, sy, syy, sxy,
-             |  CAST(n*sxx - sx*sx AS DOUBLE) AS dxx,
-             |  CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE)
-             |    - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE) AS dxy,
-             |  CAST(n AS DOUBLE)*CAST(syy AS DOUBLE)
-             |    - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE) AS dyy
-             |  FROM cells)
+             |${duckOlsTerms("vid")}
              |SELECT vid, n AS n_called, sx AS sum_x, sxx AS sum_xx,
              |sy AS sum_y, syy AS sum_yy, sxy AS sum_xy,
              |CASE WHEN dxx > 0 THEN
@@ -5349,13 +5355,7 @@ ORDER BY feature"""
              |  count(*) AS n, sum(b) AS sx, sum(b*b) AS sxx,
              |  sum(y) AS sy, sum(y*y) AS syy, sum(b*y) AS sxy
              |  FROM bm GROUP BY win),
-             |dt AS (SELECT win, n_rare, n, sx, sxx, sy, syy, sxy,
-             |  CAST(n*sxx - sx*sx AS DOUBLE) AS dxx,
-             |  CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE)
-             |    - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE) AS dxy,
-             |  CAST(n AS DOUBLE)*CAST(syy AS DOUBLE)
-             |    - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE) AS dyy
-             |  FROM cells)
+             |${duckOlsTerms("win, n_rare")}
              |SELECT CAST(win AS BIGINT) AS win_start,
              |CAST(n_rare AS BIGINT) AS n_rare,
              |CAST(sx AS BIGINT) AS sum_x, CAST(sxx AS BIGINT) AS sum_xx,

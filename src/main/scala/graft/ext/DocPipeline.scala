@@ -644,20 +644,22 @@ object DocPipeline {
 
   /** Read one long metric from an observe-on-cut observation. The
     * eager checkpoint that materializes the observed plan fills the
-    * observation via the listener bus, which is asynchronous — poll
-    * briefly rather than block unboundedly (`Observation.get` would
-    * deadlock if a foreign cut implementation never ran the plan as an
-    * action); callers fall back to an explicit aggregate on None. */
-  private def observedLong(o: org.apache.spark.sql.Observation,
+    * observation via the listener bus, which is asynchronous: read it
+    * once, and only if it is still empty wait for the bus to drain —
+    * one bounded wait of at most 2 s (`Observation.get` would block
+    * forever if a foreign cut implementation never ran the plan as an
+    * action) — then read once more. A wait that times out gives None;
+    * callers fall back to an explicit aggregate on None. */
+  private def observedLong(spark: SparkSession, o: org.apache.spark.sql.Observation,
                            key: String): Option[Long] = {
-    import org.apache.spark.sql.graft.bridge.observedOrEmpty
-    val deadline = System.nanoTime() + 2000L * 1000 * 1000
-    var m = observedOrEmpty(o)
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(10)
-      m = observedOrEmpty(o)
-    }
-    m.get(key).map(v => v.asInstanceOf[Number].longValue)
+    import org.apache.spark.sql.graft.bridge.{observedOrEmpty, waitListenerBus}
+    val first = observedOrEmpty(o)
+    val m =
+      if (first.nonEmpty) Some(first)
+      else
+        try { waitListenerBus(spark.sparkContext, 2000L); Some(observedOrEmpty(o)) }
+        catch { case NonFatal(_) => None }
+    m.flatMap(_.get(key)).map(v => v.asInstanceOf[Number].longValue)
   }
 
   /** The NEW×STORED per-band-key candidate stage, shared by
@@ -891,7 +893,7 @@ object DocPipeline {
       case None =>
         if (thr <= 0) (Long.MaxValue, Long.MaxValue)
         else {
-          val n = observedLong(sigsObs, "n")
+          val n = observedLong(sigs.sparkSession, sigsObs, "n")
             .getOrElse(sigs.agg(count(lit(1)).as("n")).head().getLong(0))
           (n * 40L, n * bands * 40L)
         }
@@ -946,8 +948,8 @@ object DocPipeline {
       .observe(candObs, count(lit(1)).as("n"),
         coalesce(sum(size(col("_na"))), lit(0L)).as("s"))
       .cut
-    val candStats = observedLong(candObs, "n")
-      .map(n => (n, observedLong(candObs, "s").getOrElse(0L)))
+    val candStats = observedLong(candNa.sparkSession, candObs, "n")
+      .map(n => (n, observedLong(candNa.sparkSession, candObs, "s").getOrElse(0L)))
     // zero candidates → the verify stage has nothing to do, and
     // running it anyway would SCAN the store's shingle column — the
     // heaviest store column (the broadcast semi keeps that scan

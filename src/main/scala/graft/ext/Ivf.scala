@@ -1,8 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import graft.sources.AtomicCommit
 
 /** IVF (inverted-file) approximate nearest neighbor — the third
   * similarity path beside brute force and hyperplane LSH: a coarse
@@ -30,13 +32,22 @@ object Ivf {
       org.apache.spark.sql.graft.bridge.expression(a),
       org.apache.spark.sql.graft.bridge.expression(b)))
 
-  /** Nearest centroid id for `vec` given a driver-side centroid list. */
-  private def nearest(vec: Column, centroids: Seq[(Int, Array[Double])]): Column = {
-    val ds = centroids.map { case (cid, c) =>
-      struct(dist2(vec, lit(c)).as("d"), lit(cid).as("cid"))
-    }
-    array_min(array(ds: _*)).getField("cid")
-  }
+  /** One `(d, cid)` struct per centroid — squared L2 distance from
+    * `vec`, then the cell id — as one array column: the builder every
+    * nearest-cell expression orders (struct order: distance first,
+    * lower cid on ties). `counts`, when given, adds each cell's census
+    * rows as a third field `n` (cells absent from it weigh 0). */
+  private def centroidDists(vec: Column, centroids: Seq[(Int, Array[Double])],
+                            counts: Option[Map[Int, Long]] = None): Column =
+    array(centroids.map { case (cid, c) =>
+      struct(dist2(vec, lit(c)).as("d") +: lit(cid).as("cid") +:
+        counts.map(m => lit(m.getOrElse(cid, 0L)).as("n")).toSeq: _*)
+    }: _*)
+
+  /** Nearest centroid id for `vec` given a driver-side centroid list
+    * (ties toward the lower cell id; [[Pq.encode]] picks codes with it). */
+  private[ext] def nearest(vec: Column, centroids: Seq[(Int, Array[Double])]): Column =
+    array_min(centroidDists(vec, centroids)).getField("cid")
 
   /** Train the coarse quantizer: returns (cell id, centroid) pairs.
     * Centroid count is `k`; `iters` Lloyd rounds (2-3 suffice for a
@@ -121,17 +132,14 @@ object Ivf {
                    centroids: Seq[(Int, Array[Double])],
                    cellCol: String = "ivf_cell",
                    distCol: String = "ivf_dist2"): DataFrame = {
-    val ds = centroids.map { case (cid, c) =>
-      struct(dist2(col(vecCol), lit(c)).as("d"), lit(cid).as("cid"))
-    }
-    corpus.withColumn("_mind", array_min(array(ds: _*)))
+    corpus.withColumn("_mind", array_min(centroidDists(col(vecCol), centroids)))
       .withColumn(cellCol, col("_mind").getField("cid"))
       .withColumn(distCol, col("_mind").getField("d"))
       .drop("_mind")
   }
 
-  /** Cluster an index frame by its cell column before a
-    * `partitionBy(cellCol)` write. Without it, every writer task opens
+  /** Write an index frame with its cell id as the PARTITION column,
+    * clustered by cell first. Without the clustering, every writer task opens
     * a file in every cell directory it sees rows for — file count ≈
     * upstream partitions × cells (a 32-partition build over 1,024
     * cells lands ~32k near-empty files), and every later read pays
@@ -147,8 +155,9 @@ object Ivf {
     * for every read — the index trade this store makes everywhere.
     * Without AQE the hint degrades to a plain hash repartition by
     * cell: same file counts, no skew split. */
-  private def byCell(df: DataFrame, cellCol: String): DataFrame =
+  private def writeCells(df: DataFrame, cellCol: String, path: String): Unit =
     df.hint("rebalance", col(cellCol))
+      .write.mode("overwrite").partitionBy(cellCol).parquet(path)
 
   /** Persist the corpus as an IVF index: the cell id becomes a PARTITION
     * column, so a probe's `isin(cells)` filter prunes whole cells at the
@@ -157,15 +166,14 @@ object Ivf {
   def saveIndex(
       corpus: DataFrame, vecCol: String, centroids: Seq[(Int, Array[Double])],
       path: String, cellCol: String = "ivf_cell"): Unit =
-    byCell(withCell(corpus, vecCol, centroids, cellCol), cellCol)
-      .write.mode("overwrite").partitionBy(cellCol).parquet(path)
+    writeCells(withCell(corpus, vecCol, centroids, cellCol), cellCol, path)
 
   /** Persist the trained centroids next to the index data (underscore
     * dir — invisible to the partitioned scan), so a DIFFERENT job can
     * probe a saved index without retraining: the centroid list is the
     * quantizer, and until now it lived only in the building driver's
     * memory. */
-  def saveCentroids(spark: org.apache.spark.sql.SparkSession,
+  def saveCentroids(spark: SparkSession,
                     centroids: Seq[(Int, Array[Double])], path: String): Unit = {
     import spark.implicits._
     centroids.map { case (cid, c) => (cid, c.toSeq) }
@@ -175,12 +183,69 @@ object Ivf {
 
   /** Load the quantizer written by [[saveCentroids]], cell order
     * restored. */
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession,
+  def loadCentroids(spark: SparkSession,
                     path: String): Seq[(Int, Array[Double])] =
     spark.read.parquet(s"$path/_centroids")
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).toSeq
+
+  /** Latest committed (version, manifest body) under `root` — the one
+    * resolver every index reader and LSM writer starts from; `what`
+    * completes the failure message for writers. */
+  private def latestIndex(spark: SparkSession, root: String,
+                          what: String = ""): (Long, String) =
+    AtomicCommit.latest(spark, root)
+      .getOrElse(sys.error(s"no committed IVF index under $root$what"))
+
+  /** Publish one index version — the commit step of every atomic
+    * writer: next version → `write` lands the data in the fresh
+    * `v=<N>/` dir → `_centroids` (every segment carries the quantizer)
+    * → `_census` → one commit, fenced when the caller holds an epoch.
+    * `write` returns the segment's census delta when it is not the
+    * counts of its own rows (a delete's negative counts). `prev` is
+    * the composition an LSM segment extends (its segment versions and
+    * total census, folded into the manifest); None publishes a
+    * single-segment rebuild. Returns (version, data dir). */
+  private def publish(spark: SparkSession, root: String, cellCol: String,
+                      centroids: Seq[(Int, Array[Double])], fenceEpoch: Option[Long],
+                      prev: Option[(Seq[Long], Map[Int, Long])] = None)
+                     (write: String => Option[Seq[(Int, Long)]]): (Long, String) = {
+    val v = AtomicCommit.nextVersion(spark, root)
+    val dir = AtomicCommit.versionDir(root, v)
+    val delta = write(dir)
+    saveCentroids(spark, centroids, dir)
+    val own = delta.getOrElse(dirCensus(spark, dir, cellCol))
+    writeCensus(spark, dir, own)
+    val manifest = prev match {
+      case None => AtomicCommit.encodeCensusLine(own)
+      case Some((segs, total)) =>
+        AtomicCommit.encodeSegments(segs :+ v) + "\n" +
+          AtomicCommit.encodeCensusLine(mergeCensus(total, own))
+    }
+    AtomicCommit.commitOrFail(spark, root, v, manifest, fenceEpoch)
+    (v, dir)
+  }
+
+  /** Append one LSM segment to the committed composition — the shared
+    * step of [[appendToIndexAtomic]] and [[deleteFromIndexAtomic]]:
+    * fence check (before the data write), manifest resolve, quantizer
+    * reload from the oldest segment, then [[publish]] with the extended
+    * segment list and the merged census. `write` gets (new dir,
+    * previous segment dirs, centroids). Returns (version, segment dirs). */
+  private def appendSegment(spark: SparkSession, root: String, cellCol: String,
+                            fenceEpoch: Option[Long], what: String)
+                           (write: (String, Seq[String], Seq[(Int, Array[Double])]) =>
+                             Option[Seq[(Int, Long)]]): (Long, Seq[String]) = {
+    fenceEpoch.foreach(AtomicCommit.checkFence(spark, root, _)) // before the data write
+    val (pv, body) = latestIndex(spark, root, what)
+    val prev = AtomicCommit.decodeSegments(body).getOrElse(Seq(pv))
+    val prevDirs = prev.map(AtomicCommit.versionDir(root, _))
+    val centroids = loadCentroids(spark, prevDirs.head)
+    val (v, dir) = publish(spark, root, cellCol, centroids, fenceEpoch,
+      Some((prev, bodyCensus(spark, root, pv, body, cellCol))))(write(_, prevDirs, centroids))
+    (v, prevDirs :+ dir)
+  }
 
   /** [[saveIndex]] under the [[graft.sources.AtomicCommit]] protocol:
     * index data + centroid sidecar land in a fresh `v=<N>/` directory
@@ -193,46 +258,30 @@ object Ivf {
                       cellCol: String = "ivf_cell",
                       spreadInit: Boolean = true,
                       maxTrainRows: Option[Long] = None): (Long, String) = {
-    import graft.sources.AtomicCommit
-    val spark = corpus.sparkSession
-    val v = AtomicCommit.nextVersion(spark, root)
-    val dir = AtomicCommit.versionDir(root, v)
     val centroids = train(corpus, idCol, vecCol, k, iters, spreadInit, maxTrainRows)
-    saveIndex(corpus, vecCol, centroids, dir, cellCol)
-    saveCentroids(spark, centroids, dir)
-    val census = writeCensusOfDir(spark, dir, cellCol)
-    require(AtomicCommit.commit(spark, root, v,
-        AtomicCommit.encodeCensusLine(census)),
-      s"version $v already committed under $root — concurrent writer?")
-    (v, dir)
+    publish(corpus.sparkSession, root, cellCol, centroids, None) { dir =>
+      saveIndex(corpus, vecCol, centroids, dir, cellCol); None
+    }
   }
 
   /** Data directory of the latest committed index version. */
-  def latestIndexPath(spark: org.apache.spark.sql.SparkSession, root: String): String = {
-    import graft.sources.AtomicCommit
-    val (v, _) = AtomicCommit.latest(spark, root)
-      .getOrElse(sys.error(s"no committed IVF index under $root"))
-    AtomicCommit.versionDir(root, v)
-  }
+  def latestIndexPath(spark: SparkSession, root: String): String =
+    AtomicCommit.versionDir(root, latestIndex(spark, root)._1)
 
   /** Segment data directories composing committed version `v` (oldest
     * first): a full rebuild's manifest is empty — its own dir is the
     * whole index; an [[appendToIndexAtomic]] manifest lists every
     * composed version. */
-  def indexSegmentsAt(spark: org.apache.spark.sql.SparkSession,
-                      root: String, v: Long, body: String): Seq[String] = {
-    import graft.sources.AtomicCommit
+  def indexSegmentsAt(spark: SparkSession,
+                      root: String, v: Long, body: String): Seq[String] =
     AtomicCommit.decodeSegments(body)
       .getOrElse(Seq(v))
       .map(AtomicCommit.versionDir(root, _))
-  }
 
   /** Segment dirs of the LATEST committed index version. */
-  def indexSegments(spark: org.apache.spark.sql.SparkSession,
+  def indexSegments(spark: SparkSession,
                     root: String): Seq[String] = {
-    import graft.sources.AtomicCommit
-    val (v, body) = AtomicCommit.latest(spark, root)
-      .getOrElse(sys.error(s"no committed IVF index under $root"))
+    val (v, body) = latestIndex(spark, root)
     indexSegmentsAt(spark, root, v, body)
   }
 
@@ -244,7 +293,7 @@ object Ivf {
     * payload columns; an append ships whatever the new batch had) —
     * the union aligns by name and null-fills the gaps, the
     * [[graft.sources.ShardStore.readShardsAtEvolved]] convention. */
-  def readIndex(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame =
+  def readIndex(spark: SparkSession, root: String): DataFrame =
     readSegments(spark, indexSegments(spark, root))
 
   /** One committed serving view: version, segment dirs, index frame,
@@ -267,15 +316,30 @@ object Ivf {
     * serve read a committed snapshot by construction; a vacuum racing
     * the lazy segment scan still fails LOUDLY (missing files — retry
     * and resolve the next snapshot), never silently. */
-  def indexSnapshot(spark: org.apache.spark.sql.SparkSession, root: String,
+  def indexSnapshot(spark: SparkSession, root: String,
                     cellCol: String = "ivf_cell"): IndexSnapshot = {
-    import graft.sources.AtomicCommit
-    val (v, body) = AtomicCommit.latest(spark, root)
-      .getOrElse(sys.error(s"no committed IVF index under $root"))
+    val (v, body) = latestIndex(spark, root)
     val segs = indexSegmentsAt(spark, root, v, body)
     IndexSnapshot(v, segs, readSegments(spark, segs),
       loadCentroids(spark, segs.head),
       bodyCensus(spark, root, v, body, cellCol).filter(_._2 > 0L))
+  }
+
+  /** A segment dir holds data iff it has a non-hidden entry (partition
+    * dirs or part files); a tombstone-only segment, or an append of an
+    * empty frame, leaves only underscore sidecars. */
+  private def hasData(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Union the given segment dirs as one frame, tombstones applied —
@@ -288,29 +352,12 @@ object Ivf {
     * map-side, no extra shuffle, tombstone sets stay driver-small by
     * the GDPR-removal use case (compaction is the pressure valve when
     * they grow). */
-  private def readSegments(spark: org.apache.spark.sql.SparkSession,
+  private def readSegments(spark: SparkSession,
                            segs: Seq[String]): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    def tombPath(dir: String) = new Path(s"$dir/$TombstoneDir")
-    def hasTombs(dir: String) = {
-      val p = tombPath(dir); p.getFileSystem(conf).exists(p)
-    }
-    // a data segment has at least one non-hidden entry (partition dirs
-    // or part files); a tombstone-only segment has just _tombstones +
-    // _centroids and contributes no rows
-    def hasData(dir: String) = {
-      val p = new Path(dir)
-      val f = p.getFileSystem(conf)
-      f.exists(p) && f.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-    }
     val parts = segs.zipWithIndex
-    val masked = parts.collect { case (dir, i) if hasData(dir) =>
+    val masked = parts.collect { case (dir, i) if hasData(spark, dir) =>
       val later = parts.collect {
-        case (d, j) if j > i && hasTombs(d) =>
+        case (d, j) if j > i && exists(spark, s"$d/$TombstoneDir") =>
           spark.read.parquet(s"$d/$TombstoneDir")
       }
       val df = spark.read.parquet(dir)
@@ -318,7 +365,7 @@ object Ivf {
       else {
         val t = later.reduce(_.unionByName(_)).distinct()
         val key = t.schema.fields.head.name
-        df.join(org.apache.spark.sql.functions.broadcast(t), Seq(key), "left_anti")
+        df.join(broadcast(t), Seq(key), "left_anti")
       }
     }
     require(masked.nonEmpty, s"no data segments among ${segs.mkString(",")}")
@@ -350,42 +397,23 @@ object Ivf {
   def deleteFromIndexAtomic(ids: DataFrame, root: String,
                             fenceEpoch: Option[Long] = None,
                             cellCol: String = "ivf_cell"): (Long, Seq[String]) = {
-    import graft.sources.AtomicCommit
     val spark = ids.sparkSession
     require(ids.schema.fields.length == 1,
       s"ids frame must carry exactly the id column, got ${ids.columns.mkString(",")}")
-    fenceEpoch.foreach(AtomicCommit.checkFence(spark, root, _)) // before the write
-    val (pv, body) = AtomicCommit.latest(spark, root)
-      .getOrElse(sys.error(s"no committed IVF index under $root to delete from"))
-    val prevVersions = AtomicCommit.decodeSegments(body).getOrElse(Seq(pv))
-    val v = AtomicCommit.nextVersion(spark, root)
-    val dir = AtomicCommit.versionDir(root, v)
-    ids.distinct().coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/$TombstoneDir")
-    // every segment carries the quantizer (the segs.head invariant
-    // holds regardless — deletes append at the tail — but uniformity
-    // costs one tiny sidecar and keeps dir shapes self-describing)
-    val centroids = loadCentroids(
-      spark, AtomicCommit.versionDir(root, prevVersions.head))
-    saveCentroids(spark, centroids, dir)
-    // NEGATIVE census for the rows this delete NEWLY masks: the prior
-    // composition is resolved THROUGH readSegments, so earlier
-    // tombstones already hide their rows and a re-deleted id never
-    // double-subtracts. This one semi-join scan prices the rare
-    // GDPR-delete path so every serve-path census read stays a
-    // manifest sum (no index scan).
-    val key = ids.columns.head
-    val maskedCounts = readSegments(
-        spark, prevVersions.map(AtomicCommit.versionDir(root, _)))
-      .join(broadcast(ids.distinct()), Seq(key), "left_semi")
-      .groupBy(col(cellCol)).count()
-      .collect().map(r => r.getInt(0) -> -r.getLong(1)).toSeq
-    writeCensus(spark, dir, maskedCounts)
-    val total = mergeCensus(bodyCensus(spark, root, pv, body, cellCol), maskedCounts)
-    AtomicCommit.commitOrFail(spark, root, v,
-      AtomicCommit.encodeSegments(prevVersions :+ v) + "\n" +
-        AtomicCommit.encodeCensusLine(total), fenceEpoch)
-    (v, (prevVersions :+ v).map(AtomicCommit.versionDir(root, _)))
+    appendSegment(spark, root, cellCol, fenceEpoch, " to delete from") { (dir, prevDirs, _) =>
+      ids.distinct().coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/$TombstoneDir")
+      // NEGATIVE census for the rows this delete NEWLY masks: the prior
+      // composition is resolved THROUGH readSegments, so earlier
+      // tombstones already hide their rows and a re-deleted id never
+      // double-subtracts. This one semi-join scan prices the rare
+      // GDPR-delete path so every serve-path census read stays a
+      // manifest sum (no index scan).
+      Some(readSegments(spark, prevDirs)
+        .join(broadcast(ids.distinct()), Seq(ids.columns.head), "left_semi")
+        .groupBy(col(cellCol)).count()
+        .collect().map(r => r.getInt(0) -> -r.getLong(1)).toSeq)
+    }
   }
 
   /** Append new vectors to the committed index WITHOUT retraining: the
@@ -405,26 +433,10 @@ object Ivf {
     * single segment. Returns (version, segment dirs). */
   def appendToIndexAtomic(newVecs: DataFrame, vecCol: String, root: String,
                           cellCol: String = "ivf_cell",
-                          fenceEpoch: Option[Long] = None): (Long, Seq[String]) = {
-    import graft.sources.AtomicCommit
-    val spark = newVecs.sparkSession
-    fenceEpoch.foreach(AtomicCommit.checkFence(spark, root, _)) // before the data write
-    val (pv, body) = AtomicCommit.latest(spark, root)
-      .getOrElse(sys.error(s"no committed IVF index under $root to append to"))
-    val prevVersions = AtomicCommit.decodeSegments(body).getOrElse(Seq(pv))
-    val centroids = loadCentroids(
-      spark, AtomicCommit.versionDir(root, prevVersions.head))
-    val v = AtomicCommit.nextVersion(spark, root)
-    val dir = AtomicCommit.versionDir(root, v)
-    saveIndex(newVecs, vecCol, centroids, dir, cellCol)
-    saveCentroids(spark, centroids, dir) // every segment carries the quantizer
-    val own = writeCensusOfDir(spark, dir, cellCol)
-    val total = mergeCensus(bodyCensus(spark, root, pv, body, cellCol), own)
-    AtomicCommit.commitOrFail(spark, root, v,
-      AtomicCommit.encodeSegments(prevVersions :+ v) + "\n" +
-        AtomicCommit.encodeCensusLine(total), fenceEpoch)
-    (v, (prevVersions :+ v).map(AtomicCommit.versionDir(root, _)))
-  }
+                          fenceEpoch: Option[Long] = None): (Long, Seq[String]) =
+    appendSegment(newVecs.sparkSession, root, cellCol, fenceEpoch, " to append to") {
+      (dir, _, centroids) => saveIndex(newVecs, vecCol, centroids, dir, cellCol); None
+    }
 
   /** [[saveIndexQ]] (int8-quantized) under the atomic-commit protocol,
     * centroid sidecar included — the quantized twin of
@@ -434,18 +446,10 @@ object Ivf {
                        cellCol: String = "ivf_cell",
                        spreadInit: Boolean = true,
                        maxTrainRows: Option[Long] = None): (Long, String) = {
-    import graft.sources.AtomicCommit
-    val spark = corpus.sparkSession
-    val v = AtomicCommit.nextVersion(spark, root)
-    val dir = AtomicCommit.versionDir(root, v)
     val centroids = train(corpus, idCol, vecCol, k, iters, spreadInit, maxTrainRows)
-    saveIndexQ(corpus, idCol, vecCol, centroids, dir, cellCol)
-    saveCentroids(spark, centroids, dir)
-    val census = writeCensusOfDir(spark, dir, cellCol)
-    require(AtomicCommit.commit(spark, root, v,
-        AtomicCommit.encodeCensusLine(census)),
-      s"version $v already committed under $root — concurrent writer?")
-    (v, dir)
+    publish(corpus.sparkSession, root, cellCol, centroids, None) { dir =>
+      saveIndexQ(corpus, idCol, vecCol, centroids, dir, cellCol); None
+    }
   }
 
   /** [[saveIndexPQ]] under the atomic-commit protocol, with BOTH
@@ -457,20 +461,12 @@ object Ivf {
                         iters: Int = 2, cellCol: String = "ivf_cell",
                         spreadInit: Boolean = true,
                         maxTrainRows: Option[Long] = None): (Long, String) = {
-    import graft.sources.AtomicCommit
-    val spark = corpus.sparkSession
-    val v = AtomicCommit.nextVersion(spark, root)
-    val dir = AtomicCommit.versionDir(root, v)
     val centroids = train(corpus, idCol, vecCol, k, iters, spreadInit, maxTrainRows)
     val books = Pq.train(corpus, idCol, vecCol, m, ksub, iters, spreadInit, maxTrainRows)
-    saveIndexPQ(corpus, idCol, vecCol, centroids, books, dir, cellCol)
-    saveCentroids(spark, centroids, dir)
-    val census = writeCensusOfDir(spark, dir, cellCol)
-    Pq.saveCodebooks(spark, books, s"$dir/_codebooks")
-    require(AtomicCommit.commit(spark, root, v,
-        AtomicCommit.encodeCensusLine(census)),
-      s"version $v already committed under $root — concurrent writer?")
-    (v, dir)
+    publish(corpus.sparkSession, root, cellCol, centroids, None) { dir =>
+      saveIndexPQ(corpus, idCol, vecCol, centroids, books, dir, cellCol)
+      Pq.saveCodebooks(corpus.sparkSession, books, s"$dir/_codebooks"); None
+    }
   }
 
   /** Compact an append-fragmented index back to ONE segment WITHOUT
@@ -482,22 +478,14 @@ object Ivf {
     * the expensive one that also re-trains the quantizer. Old
     * compositions stay time-travelable until vacuumed. Returns
     * (version, data dir). */
-  def compactIndexAtomic(spark: org.apache.spark.sql.SparkSession,
+  def compactIndexAtomic(spark: SparkSession,
                          root: String, cellCol: String = "ivf_cell",
                          fenceEpoch: Option[Long] = None): (Long, String) = {
-    import graft.sources.AtomicCommit
     fenceEpoch.foreach(AtomicCommit.checkFence(spark, root, _)) // before the data write
     val segs = indexSegments(spark, root)
-    val centroids = loadCentroids(spark, segs.head)
-    val v = AtomicCommit.nextVersion(spark, root)
-    val dir = AtomicCommit.versionDir(root, v)
-    byCell(readSegments(spark, segs), cellCol)
-      .write.mode("overwrite").partitionBy(cellCol).parquet(dir)
-    saveCentroids(spark, centroids, dir)
-    val census = writeCensusOfDir(spark, dir, cellCol)
-    AtomicCommit.commitOrFail(spark, root, v,
-      AtomicCommit.encodeCensusLine(census), fenceEpoch)
-    (v, dir)
+    publish(spark, root, cellCol, loadCentroids(spark, segs.head), fenceEpoch) { dir =>
+      writeCells(readSegments(spark, segs), cellCol, dir); None
+    }
   }
 
   /** Re-train the coarse quantizer FROM THE COMMITTED SEGMENTS and
@@ -519,26 +507,19 @@ object Ivf {
     * spread init exactly as a from-scratch build would, so refresh vs
     * rebuild parity holds row-for-row (IvfSpec pins it). Returns
     * (version, data dir). */
-  def retrainAtomic(spark: org.apache.spark.sql.SparkSession,
+  def retrainAtomic(spark: SparkSession,
                     root: String, idCol: String, vecCol: String, k: Int,
                     iters: Int = 2, cellCol: String = "ivf_cell",
                     spreadInit: Boolean = true,
                     fenceEpoch: Option[Long] = None,
                     maxTrainRows: Option[Long] = None): (Long, String) = {
-    import graft.sources.AtomicCommit
     fenceEpoch.foreach(AtomicCommit.checkFence(spark, root, _)) // before the write
-    val segs = indexSegments(spark, root)
     // drop the stale assignment — the whole point is that it moves
-    val corpus = readSegments(spark, segs).drop(cellCol)
+    val corpus = readSegments(spark, indexSegments(spark, root)).drop(cellCol)
     val centroids = train(corpus, idCol, vecCol, k, iters, spreadInit, maxTrainRows)
-    val v = AtomicCommit.nextVersion(spark, root)
-    val dir = AtomicCommit.versionDir(root, v)
-    saveIndex(corpus, vecCol, centroids, dir, cellCol)
-    saveCentroids(spark, centroids, dir)
-    val census = writeCensusOfDir(spark, dir, cellCol)
-    AtomicCommit.commitOrFail(spark, root, v,
-      AtomicCommit.encodeCensusLine(census), fenceEpoch)
-    (v, dir)
+    publish(spark, root, cellCol, centroids, fenceEpoch) { dir =>
+      saveIndex(corpus, vecCol, centroids, dir, cellCol); None
+    }
   }
 
   /** Streaming ANN ingestion: every non-empty micro-batch appends to
@@ -613,30 +594,22 @@ object Ivf {
       .foreachBatch { (b: DataFrame, batchId: Long) =>
         if (!b.isEmpty) {
           val spark = b.sparkSession
-          val (v, body) = graft.sources.AtomicCommit.latest(spark, root)
-            .getOrElse(sys.error(s"no committed IVF index under $root"))
+          val (v, body) = latestIndex(spark, root)
           val segs = indexSegmentsAt(spark, root, v, body)
-          val centroids = loadCentroids(spark, segs.head)
-          val indexed = readSegments(spark, segs)
-          val result = scanBudget match {
-            case Some(budget) =>
-              val counts = censusCache match {
-                case Some((cv, m)) if cv == v => m
-                case _ =>
-                  val m = bodyCensus(spark, root, v, body, cellCol)
-                    .filter(_._2 > 0L)
-                  censusCache = Some((v, m))
-                  m
-              }
-              topKJoinBudget(indexed, vecCol, centroids, counts,
-                b, probeIdCol, probeVecCol,
-                k, budget, cellCol, tieBreak = tieBreak)
-            case None =>
-              topKJoin(indexed, vecCol, centroids, b,
-                probeIdCol, probeVecCol, k, nprobe, cellCol,
-                tieBreak = tieBreak)
+          val budget = scanBudget.map { rows =>
+            val counts = censusCache match {
+              case Some((cv, m)) if cv == v => m
+              case _ =>
+                val m = bodyCensus(spark, root, v, body, cellCol).filter(_._2 > 0L)
+                censusCache = Some((v, m))
+                m
+            }
+            (counts, rows)
           }
-          onBatch(result, batchId)
+          val cells = cellsOf(loadCentroids(spark, segs.head), nprobe, budget)
+          onBatch(cellTopK(readSegments(spark, segs), b, probeIdCol, probeVecCol, cells,
+            cellCol, Similarity.dot(col(vecCol), col(probeVecCol)), "score",
+            tieBreak.map(col), k).drop(probeVecCol), batchId)
         }
       }
       .start()
@@ -674,11 +647,40 @@ object Ivf {
     * structs sorts by distance then lower cid, the same tie-break). */
   private def nearestCellsExpr(vec: Column, centroids: Seq[(Int, Array[Double])],
                                nprobe: Int): Column =
-    transform(
-      slice(array_sort(array(centroids.map { case (cid, c) =>
-        struct(dist2(vec, lit(c)).as("d"), lit(cid).as("cid"))
-      }: _*)), 1, nprobe),
+    transform(slice(array_sort(centroidDists(vec, centroids)), 1, nprobe),
       s => s.getField("cid"))
+
+  /** The cells a probe path explodes each probe vector to: row-budget
+    * probing ([[budgetCellsExpr]]) when `budget` holds (census,
+    * maxScanRows), else the `nprobe` nearest cells. */
+  private def cellsOf(centroids: Seq[(Int, Array[Double])], nprobe: Int,
+                      budget: Option[(Map[Int, Long], Long)]): Column => Column =
+    budget match {
+      case Some((counts, maxScanRows)) => budgetCellsExpr(_, centroids, counts, maxScanRows)
+      case None => nearestCellsExpr(_, centroids, nprobe)
+    }
+
+  /** The per-probe top-k join every batch probe path plans: each probe
+    * (id, vector and `extra` columns of `probes`) explodes to the cells
+    * `cells` picks from its vector (map-side arithmetic against the
+    * broadcast centroid list), broadcast-equi-joins the index on the
+    * cell id (on a cell-partitioned store only the probed cells'
+    * partitions are read), scores `score` into `scoreCol`, and keeps
+    * each probe's top `k` by (scoreCol desc, `order`) through a
+    * per-probe window. The cell column is dropped. */
+  private def cellTopK(indexed: DataFrame, probes: DataFrame,
+                       probeIdCol: String, probeVecCol: String, cells: Column => Column,
+                       cellCol: String, score: Column, scoreCol: String,
+                       order: Seq[Column], k: Int, extra: Seq[Column] = Nil): DataFrame = {
+    val pcells = probes.select(Seq(col(probeIdCol), col(probeVecCol)) ++ extra :+
+      explode(cells(col(probeVecCol).cast("array<double>"))).as(cellCol): _*)
+    val w = Window.partitionBy(col(probeIdCol)).orderBy(col(scoreCol).desc +: order: _*)
+    indexed.join(broadcast(pcells), Seq(cellCol))
+      .withColumn(scoreCol, score)
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") <= k)
+      .drop("_rn", cellCol)
+  }
 
   /** Batch ANN join over the IVF index: a whole DataFrame of probes
     * served in ONE plan — each probe explodes to its `nprobe` nearest
@@ -691,19 +693,10 @@ object Ivf {
   def topKJoin(indexed: DataFrame, vecCol: String, centroids: Seq[(Int, Array[Double])],
                probes: DataFrame, probeIdCol: String, probeVecCol: String,
                k: Int, nprobe: Int = 2, cellCol: String = "ivf_cell",
-               scoreCol: String = "score", tieBreak: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pcells = probes.select(col(probeIdCol), col(probeVecCol),
-      explode(nearestCellsExpr(col(probeVecCol).cast("array<double>"), centroids, nprobe))
-        .as(cellCol))
-    val w = Window.partitionBy(col(probeIdCol))
-      .orderBy(col(scoreCol).desc +: tieBreak.map(col): _*)
-    indexed.join(broadcast(pcells), Seq(cellCol))
-      .withColumn(scoreCol, Similarity.dot(col(vecCol), col(probeVecCol)))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k)
-      .drop("_rn", cellCol, probeVecCol)
-  }
+               scoreCol: String = "score", tieBreak: Seq[String] = Nil): DataFrame =
+    cellTopK(indexed, probes, probeIdCol, probeVecCol, nearestCellsExpr(_, centroids, nprobe),
+      cellCol, Similarity.dot(col(vecCol), col(probeVecCol)), scoreCol,
+      tieBreak.map(col), k).drop(probeVecCol)
 
   /** Per-cell row counts of an assigned corpus — the ≤k-row bounded
     * envelope [[topKJoinBudget]] plans with (k coarse cells by
@@ -722,36 +715,25 @@ object Ivf {
     * NEGATIVE counts for the rows their tombstones newly mask, so the
     * committed composition's census is always the plain SUM of its
     * segments' sidecars — no index scan at read time. */
-  private def writeCensus(spark: org.apache.spark.sql.SparkSession,
+  private def writeCensus(spark: SparkSession,
                           dir: String, counts: Seq[(Int, Long)]): Unit = {
     import spark.implicits._
     counts.toDF("cid", "n").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/$CensusDir")
   }
 
-  /** Census sidecar written after a data segment lands: counting the
-    * just-written segment groups by its PARTITION column, so the scan
-    * reads footers and directory names, not vector data — and only the
-    * new segment, never the composition. A data-less segment (an
-    * append of an empty frame leaves only sidecars) gets an empty
-    * census, not a schema-inference error. Returns the counts so the
-    * writer can fold the composition TOTAL into its commit manifest
-    * (r15 — the read path then needs zero extra file reads). */
-  private def writeCensusOfDir(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, cellCol: String): Seq[(Int, Long)] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) && fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    val counts =
-      if (!hasData) Seq.empty[(Int, Long)]
-      else cellCounts(spark.read.parquet(dir).select(cellCol), cellCol).toSeq
-    writeCensus(spark, dir, counts)
-    counts
-  }
+  /** Census of a just-written data segment: counting it groups by its
+    * PARTITION column, so the scan reads footers and directory names,
+    * not vector data — and only the new segment, never the
+    * composition. A data-less segment (an append of an empty frame
+    * leaves only sidecars) gets an empty census, not a schema-inference
+    * error. [[publish]] writes it as the sidecar and folds it into the
+    * composition TOTAL of the commit manifest (r15 — the read path then
+    * needs zero extra file reads). */
+  private def dirCensus(spark: SparkSession,
+                        dir: String, cellCol: String): Seq[(Int, Long)] =
+    if (!hasData(spark, dir)) Seq.empty
+    else cellCounts(spark.read.parquet(dir).select(cellCol), cellCol).toSeq
 
   /** Previous-composition total + a new segment's census delta — the
     * manifest-body census arithmetic (positive counts for data
@@ -765,20 +747,17 @@ object Ivf {
     * (zero extra reads), falling back to the per-segment sidecar sum
     * for pre-r15 commits. Unfiltered — callers that serve it filter
     * to positive cells. */
-  private def bodyCensus(spark: org.apache.spark.sql.SparkSession,
+  private def bodyCensus(spark: SparkSession,
                          root: String, v: Long, body: String,
                          cellCol: String): Map[Int, Long] =
     graft.sources.AtomicCommit.decodeCensus(body).getOrElse(
       censusOfSegments(spark, indexSegmentsAt(spark, root, v, body), cellCol))
 
-  private def readCensus(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): Option[Seq[(Int, Long)]] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$dir/$CensusDir")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+  private def readCensus(spark: SparkSession,
+                         dir: String): Option[Seq[(Int, Long)]] =
+    if (!exists(spark, s"$dir/$CensusDir")) None
     else Some(spark.read.parquet(s"$dir/$CensusDir")
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq)
-  }
 
   /** Per-cell census of the LATEST committed composition WITHOUT
     * scanning the index — and since r15 without touching ANY file
@@ -790,16 +769,14 @@ object Ivf {
     * chain for older indexes: per-segment `_census` sidecar sum
     * (pre-r15 commits; measured 92 ms/segment — one Spark job each,
     * CensusCostProbe (d521caa)), then the one column-pruned scan (pre-r14). */
-  def indexCellCounts(spark: org.apache.spark.sql.SparkSession,
+  def indexCellCounts(spark: SparkSession,
                       root: String,
                       cellCol: String = "ivf_cell"): Map[Int, Long] = {
-    import graft.sources.AtomicCommit
-    val (v, body) = AtomicCommit.latest(spark, root)
-      .getOrElse(sys.error(s"no committed IVF index under $root"))
+    val (v, body) = latestIndex(spark, root)
     bodyCensus(spark, root, v, body, cellCol).filter(_._2 > 0L)
   }
 
-  private def censusOfSegments(spark: org.apache.spark.sql.SparkSession,
+  private def censusOfSegments(spark: SparkSession,
                                segs: Seq[String],
                                cellCol: String): Map[Int, Long] = {
     val per = segs.map(readCensus(spark, _))
@@ -818,12 +795,9 @@ object Ivf {
     * probe over the sorted k-cell array, map-side. */
   private def budgetCellsExpr(vec: Column, centroids: Seq[(Int, Array[Double])],
                               counts: Map[Int, Long], maxScanRows: Long): Column = {
-    val cells = array_sort(array(centroids.map { case (cid, c) =>
-      struct(dist2(vec, lit(c)).as("d"), lit(cid).as("cid"),
-        lit(counts.getOrElse(cid, 0L)).as("n"))
-    }: _*))
+    require(maxScanRows >= 1, s"maxScanRows=$maxScanRows must be >= 1")
     aggregate(
-      cells,
+      array_sort(centroidDists(vec, centroids, Some(counts))),
       struct(lit(0L).as("s"), array().cast("array<int>").as("keep")),
       (acc, x) => struct(
         (acc.getField("s") + x.getField("n")).as("s"),
@@ -859,20 +833,10 @@ object Ivf {
                      centroids: Seq[(Int, Array[Double])], counts: Map[Int, Long],
                      probes: DataFrame, probeIdCol: String, probeVecCol: String,
                      k: Int, maxScanRows: Long, cellCol: String = "ivf_cell",
-                     scoreCol: String = "score", tieBreak: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(maxScanRows >= 1, s"maxScanRows=$maxScanRows must be >= 1")
-    val pcells = probes.select(col(probeIdCol), col(probeVecCol),
-      explode(budgetCellsExpr(col(probeVecCol).cast("array<double>"), centroids,
-        counts, maxScanRows)).as(cellCol))
-    val w = Window.partitionBy(col(probeIdCol))
-      .orderBy(col(scoreCol).desc +: tieBreak.map(col): _*)
-    indexed.join(broadcast(pcells), Seq(cellCol))
-      .withColumn(scoreCol, Similarity.dot(col(vecCol), col(probeVecCol)))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k)
-      .drop("_rn", cellCol, probeVecCol)
-  }
+                     scoreCol: String = "score", tieBreak: Seq[String] = Nil): DataFrame =
+    cellTopK(indexed, probes, probeIdCol, probeVecCol,
+      budgetCellsExpr(_, centroids, counts, maxScanRows), cellCol, Similarity.dot(col(vecCol), col(probeVecCol)), scoreCol,
+      tieBreak.map(col), k).drop(probeVecCol)
 
   /** Persist the QUANTIZED IVF index: (idCol, scale, q8, cell) with the
     * int8 codes stored as `array<tinyint>` — the index artifact is ~4×
@@ -885,10 +849,9 @@ object Ivf {
   def saveIndexQ(corpus: DataFrame, idCol: String, vecCol: String,
                  centroids: Seq[(Int, Array[Double])], path: String,
                  cellCol: String = "ivf_cell"): Unit =
-    byCell(Quantize.quantizeInt8(withCell(corpus, vecCol, centroids, cellCol), vecCol, "_q")
+    writeCells(Quantize.quantizeInt8(withCell(corpus, vecCol, centroids, cellCol), vecCol, "_q")
       .select(col(idCol), col("_q.scale").as("scale"),
-        transform(col("_q.q"), x => x.cast("byte")).as("q8"), col(cellCol)), cellCol)
-      .write.mode("overwrite").partitionBy(cellCol).parquet(path)
+        transform(col("_q.q"), x => x.cast("byte")).as("q8"), col(cellCol)), cellCol, path)
 
   /** Batch ANN join over a [[saveIndexQ]] store: candidate scoring runs
     * entirely on int8 codes (exact integer folds — Quantize.dotQParts),
@@ -915,30 +878,30 @@ object Ivf {
                 k: Int, nprobe: Int = 2,
                 rerank: Option[(DataFrame, String)] = None, rerankFactor: Int = 4,
                 cellCol: String = "ivf_cell", scoreCol: String = "score",
-                scanBudget: Option[(Map[Int, Long], Long)] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                scanBudget: Option[(Map[Int, Long], Long)] = None): DataFrame =
+    codedTopK(indexedQ, idCol,
+      Quantize.quantizeInt8(probes.select(col(probeIdCol), col(probeVecCol)),
+        probeVecCol, "_pq"),
+      probeIdCol, probeVecCol, cellsOf(centroids, nprobe, scanBudget),
+      Quantize.dotQParts(col("q8"), col("scale"), col("_pq8"), col("_pscale")),
+      k, rerank, rerankFactor, cellCol, scoreCol,
+      Seq(col("_pq.scale").as("_pscale"), col("_pq.q").as("_pq8")))
+
+  /** The two-stage coded search of [[topKJoinQ]] and [[topKJoinPQ]]:
+    * [[cellTopK]] keeps each probe's top k·rerankFactor candidates by
+    * the coded score `qscore` (ties toward lower idCol); `rerank`, when
+    * given, re-scores those candidates alone exactly against the
+    * full-precision corpus and cuts to k, else the coded scores are
+    * final. Output: (probeIdCol, idCol, scoreCol). */
+  private def codedTopK(indexed: DataFrame, idCol: String, probes: DataFrame,
+                        probeIdCol: String, probeVecCol: String, cells: Column => Column,
+                        qscore: Column, k: Int, rerank: Option[(DataFrame, String)],
+                        rerankFactor: Int, cellCol: String, scoreCol: String,
+                        extra: Seq[Column] = Nil): DataFrame = {
     require(rerankFactor >= 1, s"rerankFactor=$rerankFactor must be >= 1")
-    val pq = Quantize.quantizeInt8(
-      probes.select(col(probeIdCol), col(probeVecCol)), probeVecCol, "_pq")
-    val cellsOf = scanBudget match {
-      case Some((census, budget)) =>
-        require(budget >= 1, s"maxScanRows=$budget must be >= 1")
-        budgetCellsExpr(col(probeVecCol).cast("array<double>"), centroids,
-          census, budget)
-      case None =>
-        nearestCellsExpr(col(probeVecCol).cast("array<double>"), centroids, nprobe)
-    }
-    val pcells = pq.select(col(probeIdCol), col(probeVecCol),
-      col("_pq.scale").as("_pscale"), col("_pq.q").as("_pq8"),
-      explode(cellsOf).as(cellCol))
-    val wq = Window.partitionBy(col(probeIdCol))
-      .orderBy(col("_qscore").desc, col(idCol))
     val kq = if (rerank.isDefined) k * rerankFactor else k
-    val candidates = indexedQ.join(broadcast(pcells), Seq(cellCol))
-      .withColumn("_qscore",
-        Quantize.dotQParts(col("q8"), col("scale"), col("_pq8"), col("_pscale")))
-      .withColumn("_rn", row_number().over(wq))
-      .filter(col("_rn") <= kq)
+    val candidates = cellTopK(indexed, probes, probeIdCol, probeVecCol, cells, cellCol,
+      qscore, "_qscore", Seq(col(idCol)), kq, extra)
     rerank match {
       case None =>
         candidates.select(col(probeIdCol), col(idCol), col("_qscore").as(scoreCol))
@@ -962,9 +925,8 @@ object Ivf {
   def saveIndexPQ(corpus: DataFrame, idCol: String, vecCol: String,
                   centroids: Seq[(Int, Array[Double])], books: Pq.Codebooks,
                   path: String, cellCol: String = "ivf_cell"): Unit =
-    byCell(withCell(corpus, vecCol, centroids, cellCol)
-      .select(col(idCol), Pq.encode(col(vecCol), books).as("codes"), col(cellCol)), cellCol)
-      .write.mode("overwrite").partitionBy(cellCol).parquet(path)
+    writeCells(withCell(corpus, vecCol, centroids, cellCol)
+      .select(col(idCol), Pq.encode(col(vecCol), books).as("codes"), col(cellCol)), cellCol, path)
 
   /** Batch ANN join over a [[saveIndexPQ]] store: candidates score by
     * asymmetric PQ lookup (probe full-precision, corpus coded —
@@ -978,33 +940,11 @@ object Ivf {
                  probes: DataFrame, probeIdCol: String, probeVecCol: String,
                  k: Int, nprobe: Int = 2,
                  rerank: Option[(DataFrame, String)] = None, rerankFactor: Int = 4,
-                 cellCol: String = "ivf_cell", scoreCol: String = "score"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(rerankFactor >= 1, s"rerankFactor=$rerankFactor must be >= 1")
-    val pcells = probes.select(col(probeIdCol), col(probeVecCol),
-      explode(nearestCellsExpr(col(probeVecCol).cast("array<double>"), centroids, nprobe))
-        .as(cellCol))
-    val wq = Window.partitionBy(col(probeIdCol))
-      .orderBy(col("_qscore").desc, col(idCol))
-    val kq = if (rerank.isDefined) k * rerankFactor else k
-    val candidates = indexedPQ.join(broadcast(pcells), Seq(cellCol))
-      .withColumn("_qscore", Pq.adcScoreCol(col("codes"), books, col(probeVecCol)))
-      .withColumn("_rn", row_number().over(wq))
-      .filter(col("_rn") <= kq)
-    rerank match {
-      case None =>
-        candidates.select(col(probeIdCol), col(idCol), col("_qscore").as(scoreCol))
-      case Some((corpus, vecCol)) =>
-        val we = Window.partitionBy(col(probeIdCol))
-          .orderBy(col(scoreCol).desc, col(idCol))
-        candidates.select(col(probeIdCol), col(probeVecCol), col(idCol))
-          .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-          .withColumn(scoreCol, Similarity.dot(col(vecCol), col(probeVecCol)))
-          .withColumn("_rn", row_number().over(we))
-          .filter(col("_rn") <= k)
-          .select(col(probeIdCol), col(idCol), col(scoreCol))
-    }
-  }
+                 cellCol: String = "ivf_cell", scoreCol: String = "score"): DataFrame =
+    codedTopK(indexedPQ, idCol, probes, probeIdCol, probeVecCol,
+      nearestCellsExpr(_, centroids, nprobe),
+      Pq.adcScoreCol(col("codes"), books, col(probeVecCol)),
+      k, rerank, rerankFactor, cellCol, scoreCol)
 
   /** One-shot convenience: assign + probe in a single plan. For repeated
     * probes, [[saveIndex]] + [[topKIndexed]] is the scale path. */

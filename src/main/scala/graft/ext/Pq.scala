@@ -80,24 +80,14 @@ object Pq {
     Codebooks(bySub.length, bySub.head.head.length, bySub)
   }
 
-  private def dist2(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.bridge.column(graft.functions.Dist2Expr(
-      org.apache.spark.sql.graft.bridge.expression(a),
-      org.apache.spark.sql.graft.bridge.expression(b)))
-
-  /** Nearest-centroid code for one subvector (ties toward the lower
-    * code, like Ivf.nearest). */
-  private def nearestCode(sub: Column, book: Seq[Array[Double]]): Column =
-    array_min(array(book.zipWithIndex.map { case (c, i) =>
-      struct(dist2(sub, lit(c)).as("d"), lit(i).as("cid"))
-    }: _*)).getField("cid")
-
-  /** Encode `vecCol` into m one-byte codes (array<tinyint>). Map-only;
-    * the codebooks ride the plan as literals. */
+  /** Encode `vecCol` into m one-byte codes (array<tinyint>): each
+    * subvector's nearest-centroid code ([[Ivf.nearest]] over the code
+    * indices, ties toward the lower code). Map-only; the codebooks ride
+    * the plan as literals. */
   def encode(vec: Column, books: Codebooks): Column =
     array((0 until books.m).map { s =>
-      nearestCode(slice(vec.cast("array<double>"), s * books.dsub + 1, books.dsub),
-        books.centroids(s)).cast("byte")
+      Ivf.nearest(slice(vec.cast("array<double>"), s * books.dsub + 1, books.dsub),
+        books.centroids(s).zipWithIndex.map(_.swap)).cast("byte")
     }: _*)
 
   /** Reconstruct the (lossy) vector a code array stands for. */

@@ -102,7 +102,7 @@ object Merge {
           val mode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
           spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
           // rebalance clusters rows by bucket before the partitioned
-          // write (Ivf.byCell's argument): without it every writer
+          // write (Ivf.writeCells' argument): without it every writer
           // task opens a file in every touched bucket dir — file count
           // grows with traffic, reads pay per-file metadata forever
           try merged.hint("rebalance", col("_bucket"))

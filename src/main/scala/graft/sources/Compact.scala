@@ -41,7 +41,7 @@ object Compact {
     * round-robined: `repartition(n)` scatters every partition value
     * across all n tasks, so `partitionBy` would re-explode the output
     * into n × values files — compaction that manufactures the very
-    * small files it exists to remove (the Ivf.byCell argument). The
+    * small files it exists to remove (the Ivf.writeCells argument). The
     * rebalance clusters rows by partition value while AQE sizes the
     * shuffle output to `targetBytes` (scoped advisory), splitting
     * skewed values instead of bottlenecking one writer. */

@@ -46,7 +46,7 @@ object ShardStore {
     // pins one writer task per shard regardless of skew. The REBALANCE
     // hint clusters rows by shard while AQE sizes writer tasks — small
     // shards share a task, a hot shard splits across several (same
-    // one-file-per-shard-per-task layout; the [[graft.ext.Ivf]] byCell /
+    // one-file-per-shard-per-task layout; the [[graft.ext.Ivf]] writeCells /
     // [[Compact.compactTo]] argument). Without AQE it degrades to the
     // old hash repartition. Manifest content is order-independent
     // (bit_xor), so the layout change is invisible to every reader.

@@ -56,14 +56,21 @@ object bridge {
 
   /** Drain the async listener bus so a profiler reading listener-fed
     * counters right after an action sees every event of that action
-    * (r19 QueryProfile — measurement only, never on a query path). */
+    * (r19 QueryProfile — measurement only; query paths use the bounded
+    * form below). */
   def waitListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** [[waitListenerBus]] bounded by `timeoutMs`: throws
+    * `java.util.concurrent.TimeoutException` when the bus has not
+    * drained by then. */
+  def waitListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 
   /** Non-blocking read of an [[org.apache.spark.sql.Observation]]
     * (`getOrEmpty` is private[sql]; the public `get` blocks forever if
     * the observed plan never runs as an action) — the observe-on-cut
-    * pricing pattern (r20) polls this instead. */
+    * pricing pattern (r20) reads this instead. */
   def observedOrEmpty(o: org.apache.spark.sql.Observation): Map[String, Any] =
     o.getOrEmpty
 

@@ -135,6 +135,8 @@ class IvfSpec extends SparkTestBase {
     val rootQ = java.nio.file.Files.createTempDirectory("ivfq-atomic")
       .resolve("idx").toString
     val (_, dirQ) = Ivf.saveIndexQAtomic(emb, "vec_id", "embedding", rootQ, k = 8)
+    // the manifest census ≡ a fresh scan of the committed dir
+    assert(Ivf.indexCellCounts(spark, rootQ) === Ivf.cellCounts(spark.read.parquet(dirQ)))
     val centsQ = Ivf.loadCentroids(spark, dirQ)
     val trained = Ivf.train(emb, "vec_id", "embedding", k = 8)
     centsQ.zip(trained).foreach { case ((ci, a), (cj, b)) =>
@@ -150,6 +152,7 @@ class IvfSpec extends SparkTestBase {
       .resolve("idx").toString
     val (_, dirP) = Ivf.saveIndexPQAtomic(emb, "vec_id", "embedding", rootP,
       k = 4, m = 8, ksub = 16)
+    assert(Ivf.indexCellCounts(spark, rootP) === Ivf.cellCounts(spark.read.parquet(dirP)))
     val centsP = Ivf.loadCentroids(spark, dirP)
     val books = Pq.loadCodebooks(spark, s"$dirP/_codebooks")
     val viaPQ = Ivf.topKJoinPQ(spark.read.parquet(dirP), "vec_id", centsP, books,

@@ -104,6 +104,49 @@ class PqSpec extends SparkTestBase {
     assert(fine < coarse, s"ksub=16 mse $fine !< ksub=4 mse $coarse")
   }
 
+  test("topKJoinPQ without re-rank: at most k rows per probe, each score the " +
+      "ADC score of its (probe, id), ties toward the lower id") {
+    // ksub = 4 over m = 2 subspaces leaves 16 distinct codes, so many
+    // rows of a cell share a code and tie on score
+    val centroids = Ivf.train(emb, "vec_id", "embedding", k = 4, iters = 2)
+    val books = Pq.train(emb, "vec_id", "embedding", m = 2, ksub = 4)
+    val corpus = emb.filter(col("vec_id") >= 10)
+    val probes = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
+    val tmp = java.nio.file.Files.createTempDirectory("ivfpq-coded")
+    val path = tmp.resolve("idx").toString
+    try {
+      Ivf.saveIndexPQ(corpus, "vec_id", "embedding", centroids, books, path)
+      val indexed = spark.read.parquet(path)
+      val (k, nprobe) = (5, 2)
+      val got = Ivf.topKJoinPQ(indexed, "vec_id", centroids, books, probes,
+        "probe_id", "p_emb", k = k, nprobe = nprobe)
+      assert(got.columns.toSeq === Seq("probe_id", "vec_id", "score"))
+      val byProbe = got.collect().groupBy(_.getLong(0))
+        .map { case (p, rs) => p -> rs.map(r => (r.getLong(1), r.getDouble(2))).toSeq }
+      val probeVecs = probes.collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray.map(_.toDouble)).toMap
+      assert(byProbe.keySet === probeVecs.keySet)
+      var boundaryTies = 0
+      probeVecs.foreach { case (p, vec) =>
+        // candidates: every row of the probed cells, ADC-scored driver-side
+        val cands = indexed.filter(col("ivf_cell").isin(Ivf.probeCells(centroids, vec, nprobe): _*))
+          .select(col("vec_id"), Pq.adcScore(col("codes"), books, vec))
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        val adc = cands.toMap
+        val rows = byProbe(p)
+        assert(rows.size <= k && rows.map(_._1).distinct.size === rows.size, s"probe $p: $rows")
+        rows.foreach { case (id, s) => assertNear(s, adc(id), 1e-9) }
+        val expected = cands.sortBy { case (id, s) => (-s, id) }.take(k).map(_._1)
+        assert(rows.sortBy { case (id, s) => (-s, id) }.map(_._1) === expected, s"probe $p")
+        val edge = adc(expected.last)
+        if (cands.count(_._2 == edge) > expected.count(adc(_) == edge)) boundaryTies += 1
+      }
+      // the lower-id rule decided at least one cut, so it was exercised
+      assert(boundaryTies > 0, "no tie straddles any probe's top-k boundary")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
   test("IVF+PQ with exact re-rank: useful recall, exact final scores, deepest compression") {
     val centroids = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     val books = Pq.train(emb, "vec_id", "embedding", m = 8, ksub = 16)
