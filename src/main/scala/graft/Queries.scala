@@ -29,6 +29,15 @@ final case class QueryDef(
 
 object Queries {
 
+  /** A fresh temp root for a builder whose frame reads a store it
+    * writes there. The frame reads lazily, so the root cannot go before
+    * the builder returns: it is deleted recursively at JVM exit. */
+  private def scratchDir(prefix: String): java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -2343,7 +2352,7 @@ ORDER BY feature"""
       "q_ivf_delete",
       (s, d) => {
         import graft.ext.Ivf
-        val root = java.nio.file.Files.createTempDirectory("q-ivf-delete")
+        val root = scratchDir("q-ivf-delete")
           .resolve("index").toString
         val base = t(s, d, "embeddings").filter(col("vec_id") < 120)
         Ivf.saveIndexAtomic(base, "vec_id", "embedding", root, k = 4, iters = 1)
@@ -2377,7 +2386,7 @@ ORDER BY feature"""
       "q_ivf_retrain",
       (s, d) => {
         import graft.ext.Ivf
-        val root = java.nio.file.Files.createTempDirectory("q-ivf-retrain")
+        val root = scratchDir("q-ivf-retrain")
           .resolve("index").toString
         val base = t(s, d, "embeddings").filter(col("vec_id") < 120)
         Ivf.saveIndexAtomic(base, "vec_id", "embedding", root, k = 4, iters = 1,
@@ -2408,7 +2417,7 @@ ORDER BY feature"""
       "q_ivf_census",
       (s, d) => {
         import graft.ext.Ivf
-        val root = java.nio.file.Files.createTempDirectory("q-ivf-census")
+        val root = scratchDir("q-ivf-census")
           .resolve("index").toString
         val base = t(s, d, "embeddings").filter(col("vec_id") < 120)
         Ivf.saveIndexAtomic(base, "vec_id", "embedding", root, k = 4, iters = 1,
@@ -4286,7 +4295,7 @@ ORDER BY feature"""
       "q_store_diff",
       (s, d) => {
         import graft.sources.ShardStore
-        val root = java.nio.file.Files.createTempDirectory("q-store-diff")
+        val root = scratchDir("q-store-diff")
           .resolve("store").toString
         val base = t(s, d, "documents")
           .select(col("doc_id"), col("text")).filter(col("doc_id") < 20)
@@ -4324,7 +4333,7 @@ ORDER BY feature"""
       "q_store_evolve",
       (s, d) => {
         import graft.sources.ShardStore
-        val root = java.nio.file.Files.createTempDirectory("q-store-evolve")
+        val root = scratchDir("q-store-evolve")
           .resolve("store").toString
         val docs = t(s, d, "documents")
         ShardStore.writeShardsAtomic(

@@ -20,6 +20,21 @@ import graft.core.Checkpoints.CutOps
   * ranks are comparable within a run, not probabilities. */
 object Graph {
 
+  /** The ranking operators' prelude: the `(src, dst)` int64 edge
+    * projection and the distinct `node` universe of its endpoints,
+    * each cut ONCE — without the edge cut every iteration's join would
+    * re-derive the projection from the SOURCE (a full input scan per
+    * round at corpus scale, plus two more for `nodes` and out-degrees). */
+  private def edgesAndNodes(edges: DataFrame, srcCol: String,
+                            dstCol: String): (DataFrame, DataFrame) = {
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")).cut
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+      .cut
+    (e, nodes)
+  }
+
   /** Integer-exact damped PageRank over an edge list, `iters` fixed
     * iterations (the standard fixed-budget formulation for batch
     * ranking — convergence checks cost a driver action per round and
@@ -45,15 +60,7 @@ object Graph {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0, 100], got $dampingPct")
-    // edge list cut ONCE ([[hits]]' pattern — r19): without it every
-    // iteration's contribution join re-derives the projection from the
-    // SOURCE (a full input scan per round at corpus scale; nodes and
-    // deg below would re-scan it twice more)
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).cut
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .cut
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .cut
     val n = nodes.count()
@@ -104,11 +111,7 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).cut
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .cut
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
     var scores = nodes
       .withColumn("hub", lit(1000000L))
       .withColumn("auth", lit(1000000L))
@@ -171,12 +174,7 @@ object Graph {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0, 100], got $dampingPct")
     val seeds = sources.distinct
-    // cut once — [[pageRank]]'s r19 edge-materialization note
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).cut
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .cut
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .cut
     val teleport = (100L - dampingPct) * 10000000L
@@ -339,8 +337,8 @@ object Graph {
     require(sources.nonEmpty, "sources must be non-empty")
     val spark = edges.sparkSession
     import spark.implicits._
-    // cut once — [[pageRank]]'s r19 edge-materialization note (each
-    // hop's frontier join would otherwise re-scan the source)
+    // cut once, as in edgesAndNodes (each hop's frontier join would
+    // otherwise re-scan the source)
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).cut
     var visited = sources.distinct.toDF("node")

@@ -1,8 +1,8 @@
 package graft.ext
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.AtomicCommit
 
@@ -12,7 +12,7 @@ import graft.sources.AtomicCommit
   * only the `nprobe` nearest cells.
   *
   * Scale shape: training is `iters` rounds of (broadcast centroids →
-  * map-side assign → vector-sum Aggregator per cell) — no explode, one
+  * map-side assign → VecSumAgg + count per cell) — no explode, one
   * tiny shuffle per round (k buffers per partition). Search touches
   * ~nprobe/k of the corpus; with the cell id written into a partition
   * column, cells prune at the parquet scan.
@@ -105,16 +105,16 @@ object Ivf {
       .zipWithIndex.map { case (c, i) => (i, c) }.toSeq
 
     (0 until iters).foldLeft(init) { (centroids, _) =>
-      val agg = udaf(VecMeanAgg)
       val updated = trainSet
         .withColumn("_cell", nearest(col(vecCol), centroids))
         .groupBy("_cell")
-        .agg(agg(col(vecCol).cast("array<double>")).as("m"))
-        .select(col("_cell"), col("m.mean"))
+        .agg(graft.functions.VecSumAgg.of(col(vecCol).cast("array<double>")).as("_sum"),
+          count(col(vecCol)).as("_n"))
+        .filter(col("_n") > 0)
         .collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray.map(_ / r.getLong(2)))
         .toMap
-      // empty cells keep their previous centroid
+      // empty (or all-null) cells keep their previous centroid
       centroids.map { case (cid, c) => (cid, updated.getOrElse(cid, c)) }
     }
   }
@@ -954,35 +954,4 @@ object Ivf {
       scoreCol: String = "score"): DataFrame =
     topKIndexed(withCell(corpus, vecCol, centroids), vecCol, centroids,
       probeVec, k, nprobe, scoreCol = scoreCol)
-}
-
-final case class VecMeanBuf(sum: Array[Double], cnt: Long)
-final case class VecMeanOut(mean: Seq[Double])
-
-/** Element-wise mean of array<double> columns (same vector-buffer
-  * pattern as SampleDepthAgg: one buffer per partition, no explode). */
-object VecMeanAgg extends Aggregator[Seq[Double], VecMeanBuf, VecMeanOut] {
-  override def zero: VecMeanBuf = VecMeanBuf(Array.empty, 0L)
-
-  override def reduce(b: VecMeanBuf, v: Seq[Double]): VecMeanBuf = {
-    if (v == null) return b
-    val s = if (b.sum.length >= v.length) b.sum else java.util.Arrays.copyOf(b.sum, v.length)
-    var i = 0
-    while (i < v.length) { s(i) += v(i); i += 1 }
-    VecMeanBuf(s, b.cnt + 1)
-  }
-
-  override def merge(x: VecMeanBuf, y: VecMeanBuf): VecMeanBuf = {
-    val n = math.max(x.sum.length, y.sum.length)
-    val s = java.util.Arrays.copyOf(x.sum, n)
-    var i = 0
-    while (i < y.sum.length) { s(i) += y.sum(i); i += 1 }
-    VecMeanBuf(s, x.cnt + y.cnt)
-  }
-
-  override def finish(b: VecMeanBuf): VecMeanOut =
-    VecMeanOut(if (b.cnt == 0) b.sum.toSeq else b.sum.map(_ / b.cnt).toSeq)
-
-  override def bufferEncoder: Encoder[VecMeanBuf] = Encoders.product[VecMeanBuf]
-  override def outputEncoder: Encoder[VecMeanOut] = Encoders.product[VecMeanOut]
 }

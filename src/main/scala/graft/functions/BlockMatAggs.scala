@@ -1,13 +1,10 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types._
 
 /** Σ over rows of the OUTER PRODUCT left·rightᵀ — the off-diagonal
   * block kernel of the blocked gramian ([[graft.operators.Kinship]]
@@ -29,16 +26,11 @@ case class OuterSumAgg(
     right: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Double]] {
+    extends DenseSumAgg {
 
   override def children: Seq[Expression] = Seq(left, right)
-  override def nullable: Boolean = true
   override def prettyName: String = "outer_sum"
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Double] = Array.emptyDoubleArray
-
-  @transient private lazy val blas = dev.ludovic.netlib.blas.BLAS.getInstance()
+  override protected def headerWidth: Int = 2
 
   override def update(b: Array[Double], input: InternalRow): Array[Double] = {
     val lRaw = left.eval(input)
@@ -58,39 +50,6 @@ case class OuterSumAgg(
     buf
   }
 
-  override def merge(x: Array[Double], y: Array[Double]): Array[Double] = {
-    if (x.isEmpty) return y
-    if (y.isEmpty) return x
-    require(x.length == y.length, s"outer_sum: buffer ${y.length} != ${x.length}")
-    // total length alone admits TRANSPOSED shapes (2x3 and 3x2 both
-    // carry 8 doubles) — merging them element-wise would silently
-    // corrupt the block; the [nl, nr] header must match too
-    require(x(0) == y(0) && x(1) == y(1),
-      s"outer_sum: block shape (${y(0).toInt},${y(1).toInt}) != " +
-        s"established (${x(0).toInt},${x(1).toInt})")
-    blas.daxpy(x.length - 2, 1.0, y, 2, 1, x, 2, 1)
-    x
-  }
-
-  override def eval(b: Array[Double]): Any =
-    if (b.isEmpty) null else new GenericArrayData(b)
-
-  override def serialize(b: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * b.length)
-    bb.putInt(b.length)
-    b.foreach(bb.putDouble)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt()
-    val b = new Array[Double](n)
-    var i = 0
-    while (i < n) { b(i) = bb.getDouble(); i += 1 }
-    b
-  }
-
   override def withNewMutableAggBufferOffset(newOffset: Int): OuterSumAgg =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): OuterSumAgg =
@@ -105,6 +64,12 @@ object OuterSumAgg {
   def of(left: Column, right: Column): Column =
     bridge.column(
       OuterSumAgg(bridge.expression(left), bridge.expression(right)).toAggregateExpression())
+
+  /** (nl, nr) from a buffer's header. */
+  def shape(buf: Array[Double]): (Int, Int) = (buf(0).toInt, buf(1).toInt)
+
+  /** Entry (r, c) of the column-major nl×nr block behind the header. */
+  def entry(buf: Array[Double], r: Int, c: Int): Double = buf(2 + c * buf(0).toInt + r)
 }
 
 /** Σ over rows of z·(zᵀQ) for a CONSTANT projection matrix Q — one
@@ -127,18 +92,13 @@ case class ProjOuterAgg(
     m: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Double]] {
+    extends DenseSumAgg {
 
   require(q.length == s * m, s"proj_outer: |Q|=${q.length} != s*m=${s * m}")
 
   override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
   override def prettyName: String = "proj_outer"
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  override def createAggregationBuffer(): Array[Double] = Array.emptyDoubleArray
-
-  @transient private lazy val blas = dev.ludovic.netlib.blas.BLAS.getInstance()
   @transient private lazy val w = new Array[Double](m)
 
   override def update(b: Array[Double], input: InternalRow): Array[Double] = {
@@ -150,32 +110,6 @@ case class ProjOuterAgg(
     blas.dgemv("T", s, m, 1.0, q, 0, s, v, 0, 1, 0.0, w, 0, 1)
     blas.dger(s, m, 1.0, v, 0, 1, w, 0, 1, buf, 0, s)
     buf
-  }
-
-  override def merge(x: Array[Double], y: Array[Double]): Array[Double] = {
-    if (x.isEmpty) return y
-    if (y.isEmpty) return x
-    blas.daxpy(x.length, 1.0, y, 0, 1, x, 0, 1)
-    x
-  }
-
-  override def eval(b: Array[Double]): Any =
-    if (b.isEmpty) null else new GenericArrayData(b)
-
-  override def serialize(b: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * b.length)
-    bb.putInt(b.length)
-    b.foreach(bb.putDouble)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt()
-    val b = new Array[Double](n)
-    var i = 0
-    while (i < n) { b(i) = bb.getDouble(); i += 1 }
-    b
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): ProjOuterAgg =

@@ -28,6 +28,23 @@ object GenotypeKernels {
   /** True per sample-call: no ploidy entry is the missing sentinel. */
   private def calledSample(s: Column): Column = !exists(s, a => a === Missing)
 
+  /** Per-sample dosage (alt-allele sum; −1 for a missing call) from a
+    * `gt: array<array<int>>` column — the one missing-call convention
+    * of the pairwise statistics (IBS, KING, GRM, LD, association). */
+  def dosages(gt: Column): Column =
+    transform(gt, s =>
+      when(exists(s, a => a === -1), lit(-1))
+        .otherwise(aggregate(s, lit(0), (acc, a) => acc + a)))
+
+  /** Dosage-class indicator vectors (1.0 / 0.0) of a [[dosages]]
+    * column, in the order R = 1[dos = 0], H = 1[dos = 1],
+    * A = 1[dos = 2], C = 1[called] — the operands whose gramian and
+    * outer-product matrices every IBS / KING / concordance count is a
+    * linear combination of. */
+  def classIndicators(dos: Column): Seq[Column] =
+    Seq[Column => Column](_ === 0, _ === 1, _ === 2, _ >= 0)
+      .map(p => transform(dos, d => when(p(d), 1.0).otherwise(0.0)))
+
   /** Number of samples with a fully-called genotype. */
   def calledGtCount(gt: Column): Column =
     size(filter(gt, s => calledSample(s))).cast("long")

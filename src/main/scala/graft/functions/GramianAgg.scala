@@ -1,16 +1,13 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types._
 
 /** Upper-triangular gramian accumulator (Σ over rows of v·vᵀ) as a
-  * `TypedImperativeAggregate` — the tall-skinny matrix product behind
+  * [[DenseSumAgg]] — the tall-skinny matrix product behind
   * kinship/GRM and sample-covariance estimation: billions of variant
   * rows, each carrying one length-S vector, reduced to ONE S(S+1)/2
   * buffer.
@@ -42,25 +39,14 @@ case class GramianAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Double]] {
+    extends DenseSumAgg {
 
   override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
   override def prettyName: String = "gramian"
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  // empty = "no rows seen yet"; sized lazily by the first vector
-  override def createAggregationBuffer(): Array[Double] = Array.emptyDoubleArray
-
-  private def sFromBuf(len: Int): Int = ((math.sqrt(8.0 * len + 1) - 1) / 2).round.toInt
-
-  // vectorized kernels (netlib's pure-JVM BLAS, same dependency Spark
-  // MLlib uses): the accumulate is a packed symmetric rank-1 update —
-  // our row-major upper triangle of a symmetric matrix IS BLAS
-  // 'L'-packed storage, entry (i, j≥i) at i·s − i(i−1)/2 + (j−i) both
-  // ways — and the merge is one daxpy
-  @transient private lazy val blas = dev.ludovic.netlib.blas.BLAS.getInstance()
-
+  // the accumulate is a packed symmetric rank-1 update — our row-major
+  // upper triangle of a symmetric matrix IS BLAS 'L'-packed storage
+  // (GramianAgg.index)
   override def update(b: Array[Double], input: InternalRow): Array[Double] = {
     val raw = child.eval(input)
     if (raw == null) return b
@@ -69,37 +55,10 @@ case class GramianAgg(
     val v = raw.asInstanceOf[ArrayData].toDoubleArray()
     val s = v.length
     val buf = if (b.isEmpty) new Array[Double](s * (s + 1) / 2) else b
-    require(sFromBuf(buf.length) == s,
-      s"gramian: vector length $s != established ${sFromBuf(buf.length)}")
+    val established = GramianAgg.width(buf.length)
+    require(established == s, s"gramian: vector length $s != established $established")
     blas.dspr("L", s, 1.0, v, 1, buf)
     buf
-  }
-
-  override def merge(x: Array[Double], y: Array[Double]): Array[Double] = {
-    if (x.isEmpty) return y
-    if (y.isEmpty) return x
-    require(x.length == y.length, s"gramian: buffer ${y.length} != ${x.length}")
-    blas.daxpy(x.length, 1.0, y, 1, x, 1)
-    x
-  }
-
-  override def eval(b: Array[Double]): Any =
-    if (b.isEmpty) null else new GenericArrayData(b)
-
-  override def serialize(b: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * b.length)
-    bb.putInt(b.length)
-    b.foreach(bb.putDouble)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt()
-    val b = new Array[Double](n)
-    var i = 0
-    while (i < n) { b(i) = bb.getDouble(); i += 1 }
-    b
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): GramianAgg =
@@ -115,4 +74,12 @@ object GramianAgg {
     * upper triangle (row-major, diagonal included) of Σ v·vᵀ. */
   def of(vec: Column): Column =
     bridge.column(GramianAgg(bridge.expression(vec)).toAggregateExpression())
+
+  /** Matrix width S of a packed triangle of S(S+1)/2 doubles. */
+  def width(len: Int): Int = ((math.sqrt(8.0 * len + 1) - 1) / 2).round.toInt
+
+  /** Offset of entry (i, j≥i) in the packed triangle of an S-wide
+    * matrix: i·S − i(i−1)/2 + (j−i). */
+  def index(s: Int, i: Int, j: Int): Int =
+    (i.toLong * s - i.toLong * (i - 1) / 2 + (j - i)).toInt
 }

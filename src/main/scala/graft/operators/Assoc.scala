@@ -95,9 +95,7 @@ object Assoc {
     // called (dosage, y) pairs materialized ONCE (house rule: HOF
     // results are multiply-referenced only through a column)
     val base = df
-      .withColumn("_dos", transform(col(gtCol), s =>
-        when(exists(s, a => a === -1), lit(-1))
-          .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))))
+      .withColumn("_dos", dosages(col(gtCol)))
       .withColumn("_p", filter(
         zip_with(col("_dos"), ph, (d, y) => struct(d.as("d"), y.as("y"))),
         p => p.getField("d") =!= -1))
@@ -218,9 +216,7 @@ object Assoc {
     * only the final ratio is float. */
   def trendTest(df: DataFrame, gtCol: String,
                 cases: Seq[Int], controls: Seq[Int]): DataFrame = {
-    val dosed = df.withColumn("_dos", transform(col(gtCol), s =>
-      when(exists(s, a => a === -1), lit(-1))
-        .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))))
+    val dosed = df.withColumn("_dos", dosages(col(gtCol)))
       .withColumn("_dc", selectSamples(col("_dos"), cases))
       .withColumn("_dt", selectSamples(col("_dos"), controls))
     def cnt(c: Column, g: Int) =

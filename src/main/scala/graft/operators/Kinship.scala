@@ -1,11 +1,12 @@
 package graft.operators
 
 import breeze.linalg.{eigSym, DenseMatrix}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.GramianAgg
+import graft.functions.{GramianAgg, OuterSumAgg}
+import graft.functions.GenotypeKernels.dosages
 
 /** Genetic relationship matrix (GRM / kinship) and PCA over it — the
   * population-structure pair every variant pipeline runs after LD
@@ -27,19 +28,12 @@ import graft.functions.GramianAgg
   */
 object Kinship {
 
-  /** Per-sample dosage (alt-allele sum; −1 for a missing call) from a
-    * `gt: array<array<int>>` column — `Stats.ibsPairs` convention. */
-  def dosagesFromGt(gt: Column): Column =
-    transform(gt, s =>
-      when(exists(s, a => a === -1), lit(-1))
-        .otherwise(aggregate(s, lit(0), (acc, a) => acc + a)))
-
   /** Dosage table with the per-variant sufficient statistics:
     * `_dos` (array<int>), `_n` called count, `_t` called dosage sum.
     * Columns are materialized ONCE (multiply-referenced lambda HOFs
     * re-evaluate at every reference — house rule). */
   private def withDosStats(df: DataFrame, gtCol: String): DataFrame =
-    df.withColumn("_dos", dosagesFromGt(col(gtCol)))
+    df.withColumn("_dos", dosages(col(gtCol)))
       .withColumn("_cal", filter(col("_dos"), d => d >= 0))
       .withColumn("_n", size(col("_cal")).cast("long"))
       .withColumn("_t", aggregate(col("_cal"), lit(0L), (acc, d) => acc + d))
@@ -134,8 +128,7 @@ object Kinship {
       .head()
     require(!row.isNullAt(0), "grm: no variants with called genotypes")
     val tri = row.getSeq[Double](0).toArray
-    val s = ((math.sqrt(8.0 * tri.length + 1) - 1) / 2).round.toInt
-    (s, tri, row.getDouble(1))
+    (GramianAgg.width(tri.length), tri, row.getDouble(1))
   }
 
   /** VanRaden GRM, long form (si ≤ sj, kin = [ZZᵀ]ᵢⱼ / Σ2p(1−p)).
@@ -145,7 +138,7 @@ object Kinship {
     val (s, tri, den) = grmTriangle(df, gtCol)
     val spark = df.sparkSession
     val rows = for { i <- 0 until s; j <- i until s } yield
-      Row(i.toLong, j.toLong, tri(i * s - i * (i - 1) / 2 + (j - i)) / den)
+      Row(i.toLong, j.toLong, tri(GramianAgg.index(s, i, j)) / den)
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1),
       StructType(Seq(
@@ -211,7 +204,7 @@ object Kinship {
   def pcaProjectNew(newDf: DataFrame, loadingsDf: DataFrame,
                     idCol: String, gtCol: String = "gt"): DataFrame = {
     import graft.functions.VecSumAgg
-    val dosed = newDf.select(col(idCol), dosagesFromGt(col(gtCol)).as("_dos"))
+    val dosed = newDf.select(col(idCol), dosages(col(gtCol)).as("_dos"))
       .join(loadingsDf, Seq(idCol))
       .select(posexplode(col("_dos")).as(Seq("sample_idx", "_d")),
         col("p"), col("loadings"))
@@ -377,29 +370,27 @@ object Kinship {
         math.min(blockSize, s - j * blockSize))
       val rows: java.util.List[Row] =
         if (i == j) {
-          // GramianAgg 'L'-packed triangle: row r's (r, c≥r) entries
-          // are the contiguous slice of length nl−r at r·nl − r(r−1)/2
+          // packed triangle: row r's (r, c≥r) entries are one
+          // contiguous slice of length nl−r
           val tri = z.agg(GramianAgg.of(col(s"zb_$i"))).head().getSeq[Double](0).toArray
           val out = new java.util.ArrayList[Row](nl)
           var r = 0
           while (r < nl) {
-            val off = (r.toLong * nl - r.toLong * (r - 1) / 2).toInt
+            val off = GramianAgg.index(nl, r, r)
             out.add(Row(i, j, r, r, blockSize, den,
               tri.slice(off, off + (nl - r)).toSeq))
             r += 1
           }
           out
         } else {
-          // OuterSumAgg col-major block (header [nl, nr] stripped):
-          // entry (r, c) at 2 + c·nl + r
-          val raw = z.agg(graft.functions.OuterSumAgg.of(col(s"zb_$i"), col(s"zb_$j")))
-            .head().getSeq[Double](0)
+          val raw = z.agg(OuterSumAgg.of(col(s"zb_$i"), col(s"zb_$j")))
+            .head().getSeq[Double](0).toArray
           val out = new java.util.ArrayList[Row](nl)
           var r = 0
           while (r < nl) {
             val rr = r
             out.add(Row(i, j, r, 0, blockSize, den,
-              Array.tabulate(nr)(c => raw(2 + c * nl + rr)).toSeq))
+              Array.tabulate(nr)(c => OuterSumAgg.entry(raw, rr, c)).toSeq))
             r += 1
           }
           out
@@ -448,11 +439,9 @@ object Kinship {
   private def triToMatrix(triangle: (Int, Array[Double], Double)): DenseMatrix[Double] = {
     val (s, tri, den) = triangle
     val m = DenseMatrix.zeros[Double](s, s)
-    var idx = 0
     for (i <- 0 until s; j <- i until s) {
-      m(i, j) = tri(idx) / den
+      m(i, j) = tri(GramianAgg.index(s, i, j)) / den
       m(j, i) = m(i, j)
-      idx += 1
     }
     m
   }

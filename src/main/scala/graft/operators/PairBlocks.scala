@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.OuterSumAgg
+import graft.functions.GenotypeKernels.{classIndicators, dosages}
 
 /** Blocked pairwise-count store — the biobank-width escalation for
   * [[Stats.ibsGramian]] and [[Stats.kingGramian]], whose ~3·s² doubles
@@ -59,14 +60,8 @@ object PairBlocks {
     val blocksPath = new org.apache.hadoop.fs.Path(s"$outPath/blocks")
     val fs = blocksPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(blocksPath)) fs.delete(blocksPath, true) // stale re-run
-    val dosed = df.select(transform(col(gtCol), s =>
-      when(exists(s, a => a === -1), lit(-1))
-        .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))).as("_dos"))
-    def ind(p: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      transform(col("_dos"), d => when(p(d), 1.0).otherwise(0.0))
-    val classes = Seq(
-      "r" -> ind(_ === 0), "h" -> ind(_ === 1),
-      "a" -> ind(_ === 2), "c" -> ind(_ >= 0))
+    val dosed = df.select(dosages(col(gtCol)).as("_dos"))
+    val classes = Seq("r", "h", "a", "c").zip(classIndicators(col("_dos")))
     val s = dosed.select(size(col("_dos"))).head().getInt(0)
     val nb = (s + blockSize - 1) / blockSize
     val blockCols = for ((name, c) <- classes; b <- 0 until nb) yield {
@@ -96,13 +91,12 @@ object PairBlocks {
         jobTerms.tail.map { case (t, (l, r)) =>
           OuterSumAgg.of(col(s"${l}_$i"), col(s"${r}_$j")).as(t) }: _*)
         .head()
-      // strip the [nl, nr] OuterSumAgg header; col-major (r, c) at c·nl + r
       val mats: Map[String, Array[Double]] = jobTerms.zipWithIndex.map {
-        case ((t, _), idx) => t -> row.getSeq[Double](idx).drop(2).toArray
+        case ((t, _), idx) => t -> row.getSeq[Double](idx).toArray
       }.toMap
       def entry(t: String, r: Int, c: Int): Double =
-        if (mats.contains(t)) mats(t)(c * nl + r)
-        else mats(diagTranspose(t))(r * nl + c) // diag: O_XYᵀ(r,c) = O_YX(c,r)
+        if (mats.contains(t)) OuterSumAgg.entry(mats(t), r, c)
+        else OuterSumAgg.entry(mats(diagTranspose(t)), c, r) // diag: O_XYᵀ(r,c) = O_YX(c,r)
       val rows = new java.util.ArrayList[Row](nl)
       var r = 0
       while (r < nl) {

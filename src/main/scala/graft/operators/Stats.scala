@@ -191,9 +191,7 @@ object Stats {
     // nS <= 1 (Spark defaults the step to -1 when start > stop),
     // emitting a bogus self-pair and an index-0 element_at that throws
     val dosed = df.filter(size(col(gtCol)) >= 2)
-      .withColumn("_dos", transform(col(gtCol), s =>
-      when(exists(s, a => a === -1), lit(-1))
-        .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))))
+      .withColumn("_dos", dosages(col(gtCol)))
     val nS = size(col("_dos"))
     val pairTerms = flatten(transform(sequence(lit(0), nS - 2), i =>
       transform(sequence(i + 1, nS - 1), j => {
@@ -233,14 +231,9 @@ object Stats {
     import graft.functions.{GramianAgg, OuterSumAgg}
     val spark = df.sparkSession
     import spark.implicits._
-    val dosed = df.withColumn("_dos", transform(col(gtCol), s =>
-      when(exists(s, a => a === -1), lit(-1))
-        .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))))
-    def ind(p: Column => Column) =
-      transform(col("_dos"), d => when(p(d), 1.0).otherwise(0.0))
-    val row = dosed.select(
-        ind(_ === 0).as("_i0"), ind(_ === 1).as("_i1"),
-        ind(_ === 2).as("_i2"), ind(_ >= 0).as("_ic"))
+    val dosed = df.withColumn("_dos", dosages(col(gtCol)))
+    val Seq(r, h, a, c) = classIndicators(col("_dos"))
+    val row = dosed.select(r.as("_i0"), h.as("_i1"), a.as("_i2"), c.as("_ic"))
       .agg(
         GramianAgg.of(col("_i0")).as("t00"),
         GramianAgg.of(col("_i1")).as("t11"),
@@ -256,17 +249,16 @@ object Stats {
         .limit(0)
     val Seq(t00, t11, t22, tcc) = (0 to 3).map(i => row.getSeq[Double](i).toArray)
     val Seq(o01, o12) = (4 to 5).map(i => row.getSeq[Double](i).toArray)
-    val s = o01(0).toInt // OuterSumAgg header [nl, nr]
+    val s = OuterSumAgg.shape(o01)._1
     val bc = spark.sparkContext.broadcast((t00, t11, t22, tcc, o01, o12))
     spark.range(0, math.max(0, s - 1)).as[Long].flatMap { iL =>
       val (a00, a11, a22, acc, b01, b12) = bc.value
       val i = iL.toInt
-      val triOff = i.toLong * s - i.toLong * (i - 1) / 2 - i // + j = packed (i, j≥i)
       (i + 1 until s).iterator.map { j =>
-        val t = (triOff + j).toInt
+        val t = GramianAgg.index(s, i, j)
         val num = 2.0 * (a00(t) + a11(t) + a22(t)) +
-          b01(2 + j * s + i) + b01(2 + i * s + j) +
-          b12(2 + j * s + i) + b12(2 + i * s + j)
+          OuterSumAgg.entry(b01, i, j) + OuterSumAgg.entry(b01, j, i) +
+          OuterSumAgg.entry(b12, i, j) + OuterSumAgg.entry(b12, j, i)
         (i, j, num.toLong, (2.0 * acc(t)).toLong)
       }
     }.toDF("si", "sj", "ibs_num", "ibs_den")
@@ -299,9 +291,7 @@ object Stats {
     // < 2 samples: no pairs — and sequence(0, nS-2) counts DOWN for
     // nS <= 1 (see ibsPairs)
     val dosed = df.filter(size(col(gtCol)) >= 2)
-      .withColumn("_dos", transform(col(gtCol), s =>
-        when(exists(s, a => a === -1), lit(-1))
-          .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))))
+      .withColumn("_dos", dosages(col(gtCol)))
     val nS = size(col("_dos"))
     val pairTerms = flatten(transform(sequence(lit(0), nS - 2), i =>
       transform(sequence(i + 1, nS - 1), j => {
@@ -343,14 +333,9 @@ object Stats {
     import graft.functions.{GramianAgg, OuterSumAgg}
     val spark = df.sparkSession
     import spark.implicits._
-    val dosed = df.withColumn("_dos", transform(col(gtCol), s =>
-      when(exists(s, a => a === -1), lit(-1))
-        .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))))
-    def ind(p: Column => Column) =
-      transform(col("_dos"), d => when(p(d), 1.0).otherwise(0.0))
-    val row = dosed.select(
-        ind(_ === 1).as("_ih"), ind(_ === 0).as("_ir"),
-        ind(_ === 2).as("_ia"), ind(_ >= 0).as("_ic"))
+    val dosed = df.withColumn("_dos", dosages(col(gtCol)))
+    val Seq(r, h, a, c) = classIndicators(col("_dos"))
+    val row = dosed.select(h.as("_ih"), r.as("_ir"), a.as("_ia"), c.as("_ic"))
       .agg(
         GramianAgg.of(col("_ih")).as("thh"),
         OuterSumAgg.of(col("_ir"), col("_ia")).as("ora"),
@@ -366,17 +351,16 @@ object Stats {
     val thh = row.getSeq[Double](0).toArray
     val ora = row.getSeq[Double](1).toArray
     val ohc = row.getSeq[Double](2).toArray
-    val s = ora(0).toInt // OuterSumAgg header [nl, nr]; entry (i,j) at 2 + j·nl + i
+    val s = OuterSumAgg.shape(ora)._1
     val bc = spark.sparkContext.broadcast((thh, ora, ohc))
     spark.range(0, math.max(0, s - 1)).as[Long].flatMap { iL =>
       val (ahh, bra, bhc) = bc.value
       val i = iL.toInt
-      val triOff = i.toLong * s - i.toLong * (i - 1) / 2 - i // + j = packed (i, j≥i)
       (i + 1 until s).iterator.map { j =>
-        val hh = ahh((triOff + j).toInt).toLong
-        val opp = (bra(2 + j * s + i) + bra(2 + i * s + j)).toLong
-        val hi = bhc(2 + j * s + i).toLong // O_HC(i,j) = Σ H_i·C_j
-        val hj = bhc(2 + i * s + j).toLong // O_HC(j,i) = Σ H_j·C_i
+        val hh = ahh(GramianAgg.index(s, i, j)).toLong
+        val opp = (OuterSumAgg.entry(bra, i, j) + OuterSumAgg.entry(bra, j, i)).toLong
+        val hi = OuterSumAgg.entry(bhc, i, j).toLong // O_HC(i,j) = Σ H_i·C_j
+        val hj = OuterSumAgg.entry(bhc, j, i).toLong // O_HC(j,i) = Σ H_j·C_i
         val phi = if (hi + hj > 0) (hh - 2.0 * opp) / (hi + hj) else Double.NaN
         (i, j, hh, opp, hi, hj, phi)
       }
@@ -515,9 +499,7 @@ object Stats {
     * top, null when no variant has the full trio called. */
   def mendelErrors(df: DataFrame, gtCol: String, trios: Seq[(Int, Int, Int)]): DataFrame = {
     require(trios.nonEmpty, "mendelErrors: at least one trio required")
-    val dosed = df.withColumn("_dos", transform(col(gtCol), s =>
-      when(exists(s, a => a === -1), lit(-1))
-        .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))))
+    val dosed = df.withColumn("_dos", dosages(col(gtCol)))
     val terms = array(trios.zipWithIndex.map { case ((c, f, m), ti) =>
       val dc = element_at(col("_dos"), c + 1)
       val dF = element_at(col("_dos"), f + 1)
@@ -713,10 +695,7 @@ object Stats {
     * arrays never ride the exchange. */
   def ldPairs(df: DataFrame, gtCol: String, posCol: String, maxDist: Long): DataFrame = {
     require(maxDist > 0, s"maxDist=$maxDist must be > 0")
-    val dosed = df.select(col(posCol).as("_pos"),
-      transform(col(gtCol), s =>
-        when(exists(s, a => a === -1), lit(-1))
-          .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))).as("_dos"))
+    val dosed = df.select(col(posCol).as("_pos"), dosages(col(gtCol)).as("_dos"))
     val bucket = floor(col("_pos") / maxDist)
     val left = dosed.select(col("_pos").as("pos_a"), col("_dos").as("_da"),
       explode(array(bucket, bucket + 1)).as("_bkt"))
@@ -1085,10 +1064,7 @@ object Stats {
     val fp = df
       .select(col(posCol).as("_pos"),
         (floor(col(posCol) / windowSize) * windowSize).cast("long").as("_win"),
-        posexplode(transform(col(gtCol), s =>
-          when(exists(s, a => a === -1), lit(-1))
-            .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))))
-          .as(Seq("sample_idx", "_dos")))
+        posexplode(dosages(col(gtCol))).as(Seq("sample_idx", "_dos")))
       .groupBy(col("_win"), col("sample_idx"))
       .agg(xxhash64(sort_array(collect_list(
         struct(col("_pos"), col("_dos"))))).as("_h"))
@@ -1256,18 +1232,13 @@ object Stats {
     import graft.functions.OuterSumAgg
     val spark = dfA.sparkSession
     import spark.implicits._
-    def dosed(df: DataFrame, out: String) = df.select(col(idCol).as("_id"),
-      transform(col(gtCol), s =>
-        when(exists(s, a => a === -1), lit(-1))
-          .otherwise(aggregate(s, lit(0), (acc, a) => acc + a))).as(out))
+    def dosed(df: DataFrame, out: String) =
+      df.select(col(idCol).as("_id"), dosages(col(gtCol)).as(out))
     val j = dosed(dfA, "_da").join(dosed(dfB, "_db"), "_id")
-    def ind(c: String, p: Column => Column) =
-      transform(col(c), d => when(p(d), 1.0).otherwise(0.0))
-    val row = j.select(
-        ind("_da", _ === 0).as("_ar"), ind("_da", _ === 1).as("_ah"),
-        ind("_da", _ === 2).as("_aa"), ind("_da", _ >= 0).as("_ac"),
-        ind("_db", _ === 0).as("_br"), ind("_db", _ === 1).as("_bh"),
-        ind("_db", _ === 2).as("_ba"), ind("_db", _ >= 0).as("_bc"))
+    def named(dos: String, names: Seq[String]) =
+      classIndicators(col(dos)).zip(names).map { case (c, n) => c.as(n) }
+    val row = j.select(named("_da", Seq("_ar", "_ah", "_aa", "_ac")) ++
+        named("_db", Seq("_br", "_bh", "_ba", "_bc")): _*)
       .agg(
         OuterSumAgg.of(col("_ar"), col("_br")).as("orr"),
         OuterSumAgg.of(col("_ah"), col("_bh")).as("ohh"),
@@ -1284,12 +1255,12 @@ object Stats {
     val (orr, ohh, oaa, occ) = (
       row.getSeq[Double](0).toArray, row.getSeq[Double](1).toArray,
       row.getSeq[Double](2).toArray, row.getSeq[Double](3).toArray)
-    val sa = orr(0).toInt; val sb = orr(1).toInt
+    val (sa, sb) = OuterSumAgg.shape(orr)
     val bc = spark.sparkContext.broadcast((orr, ohh, oaa, occ))
     spark.range(0, sa).as[Long].flatMap { iL =>
       val (mrr, mhh, maa, mcc) = bc.value
       val i = iL.toInt
-      def at(m: Array[Double], jj: Int) = m(2 + jj * sa + i).toLong
+      def at(m: Array[Double], jj: Int) = OuterSumAgg.entry(m, i, jj).toLong
       def cells(jj: Int) =
         (at(mrr, jj) + at(mhh, jj) + at(maa, jj), at(mcc, jj))
       // (ratio DESC, j ASC) — comparable-free columns never win

@@ -148,19 +148,54 @@ class GtStatsPropertySpec extends SparkTestBase {
   }
 
   test("OuterSumAgg merge rejects transposed block shapes (same length, different [nl,nr])") {
-    import graft.functions.OuterSumAgg
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.{DenseSumAgg, GramianAgg, OuterSumAgg, ProjOuterAgg, VecSumAgg}
+    val one = Literal(1)
     val a = Array(2.0, 3.0) ++ Array.fill(6)(1.0)
     val b = Array(3.0, 2.0) ++ Array.fill(6)(1.0)
-    val agg = OuterSumAgg(
-      org.apache.spark.sql.catalyst.expressions.Literal(1),
-      org.apache.spark.sql.catalyst.expressions.Literal(1))
+    val agg = OuterSumAgg(one, one)
     val e = intercept[IllegalArgumentException] {
       agg.merge(a.clone(), b.clone())
     }
-    assert(e.getMessage.contains("shape"), e.getMessage)
+    assert(e.getMessage.contains("outer_sum: block shape (3,2) != established (2,3)"), e.getMessage)
     // matching shapes merge fine
     val ok = agg.merge(a.clone(), a.clone())
     assert(ok.drop(2).forall(_ === 2.0))
+    // and every dense sum aggregate rejects a buffer of another length,
+    // naming itself
+    val table = Seq[(String, DenseSumAgg, Array[Double], Array[Double])](
+      ("vec_sum", VecSumAgg(one), Array.fill(2)(1.0), Array.fill(3)(1.0)),
+      ("gramian", GramianAgg(one), Array.fill(3)(1.0), Array.fill(6)(1.0)),
+      ("outer_sum", OuterSumAgg(one, one),
+        Array(2.0, 1.0) ++ Array.fill(2)(1.0), Array(2.0, 2.0) ++ Array.fill(4)(1.0)),
+      ("proj_outer", ProjOuterAgg(one, Array.fill(2)(1.0), 2, 1),
+        Array.fill(2)(1.0), Array.fill(4)(1.0)))
+    for ((name, dense, x, y) <- table) {
+      val err = intercept[IllegalArgumentException](dense.merge(x, y))
+      assert(err.getMessage.startsWith(s"requirement failed: $name: buffer "), err.getMessage)
+    }
+  }
+
+  test("GramianAgg / OuterSumAgg layout decoders ≡ a plain dense matrix product on ragged shapes") {
+    import graft.functions.{GramianAgg, OuterSumAgg}
+    import org.apache.spark.sql.functions.col
+    val rnd = new Random(11)
+    for ((nl, nr) <- Seq((1, 1), (1, 4), (3, 2), (5, 7))) {
+      // small integer entries: every product sum is exact in doubles
+      val rows = Seq.fill(6)((Seq.fill(nl)(rnd.nextInt(5) - 2.0), Seq.fill(nr)(rnd.nextInt(5) - 2.0)))
+      val agg = spark.createDataFrame(rows).toDF("l", "r")
+        .agg(GramianAgg.of(col("l")), OuterSumAgg.of(col("l"), col("r"))).head()
+      val tri = agg.getSeq[Double](0).toArray
+      val blk = agg.getSeq[Double](1).toArray
+      assert(GramianAgg.width(tri.length) === nl)
+      assert(OuterSumAgg.shape(blk) === ((nl, nr)))
+      for (i <- 0 until nl; j <- i until nl)
+        assert(tri(GramianAgg.index(nl, i, j)) === rows.map { case (l, _) => l(i) * l(j) }.sum,
+          s"gramian ($i,$j) of $nl")
+      for (i <- 0 until nl; j <- 0 until nr)
+        assert(OuterSumAgg.entry(blk, i, j) === rows.map { case (l, r) => l(i) * r(j) }.sum,
+          s"outer ($i,$j) of ${nl}x$nr")
+    }
   }
 
   test("invariant: filter stats partition the input (N_KEPT + N_OUT = N)") {

@@ -54,20 +54,22 @@ class PqSpec extends SparkTestBase {
 
   test("codebooks round-trip through parquet: exact centroids, identical codes") {
     val books = Pq.train(emb, "vec_id", "embedding", m = 8, ksub = 16)
-    val dir = java.nio.file.Files.createTempDirectory("pq-books").toString
-    Pq.saveCodebooks(spark, books, dir)
-    val loaded = Pq.loadCodebooks(spark, dir)
-    assert(loaded.m === books.m && loaded.dsub === books.dsub &&
-      loaded.ksub === books.ksub)
-    loaded.centroids.zip(books.centroids).foreach { case (x, y) =>
-      x.zip(y).foreach { case (cx, cy) => assert(cx.toSeq === cy.toSeq) }
+    withTempDir("pq-books") { tmp =>
+      val dir = tmp.toString
+      Pq.saveCodebooks(spark, books, dir)
+      val loaded = Pq.loadCodebooks(spark, dir)
+      assert(loaded.m === books.m && loaded.dsub === books.dsub &&
+        loaded.ksub === books.ksub)
+      loaded.centroids.zip(books.centroids).foreach { case (x, y) =>
+        x.zip(y).foreach { case (cx, cy) => assert(cx.toSeq === cy.toSeq) }
+      }
+      // a coder rebuilt from the loaded books encodes identically
+      val a = emb.select(Pq.encode(col("embedding"), books).as("c"))
+        .collect().map(_.getSeq[Byte](0).toSeq)
+      val b = emb.select(Pq.encode(col("embedding"), loaded).as("c"))
+        .collect().map(_.getSeq[Byte](0).toSeq)
+      assert(a.toSeq === b.toSeq)
     }
-    // a coder rebuilt from the loaded books encodes identically
-    val a = emb.select(Pq.encode(col("embedding"), books).as("c"))
-      .collect().map(_.getSeq[Byte](0).toSeq)
-    val b = emb.select(Pq.encode(col("embedding"), loaded).as("c"))
-      .collect().map(_.getSeq[Byte](0).toSeq)
-    assert(a.toSeq === b.toSeq)
   }
 
   test("ADC score ≡ dot(probe, decode(codes)); column form ≡ literal form") {
@@ -113,9 +115,8 @@ class PqSpec extends SparkTestBase {
     val corpus = emb.filter(col("vec_id") >= 10)
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
-    val tmp = java.nio.file.Files.createTempDirectory("ivfpq-coded")
-    val path = tmp.resolve("idx").toString
-    try {
+    withTempDir("ivfpq-coded") { tmp =>
+      val path = tmp.resolve("idx").toString
       Ivf.saveIndexPQ(corpus, "vec_id", "embedding", centroids, books, path)
       val indexed = spark.read.parquet(path)
       val (k, nprobe) = (5, 2)
@@ -144,7 +145,7 @@ class PqSpec extends SparkTestBase {
       }
       // the lower-id rule decided at least one cut, so it was exercised
       assert(boundaryTies > 0, "no tie straddles any probe's top-k boundary")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
   }
 
   test("IVF+PQ with exact re-rank: useful recall, exact final scores, deepest compression") {
@@ -154,40 +155,41 @@ class PqSpec extends SparkTestBase {
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
 
-    val base = java.nio.file.Files.createTempDirectory("ivfpq")
-    val pqPath = base.resolve("pq").toString
-    val qPath = base.resolve("int8").toString
-    Ivf.saveIndexPQ(corpus, "vec_id", "embedding", centroids, books, pqPath)
-    Ivf.saveIndexQ(corpus, "vec_id", "embedding", centroids, qPath)
-    assert(dirBytes(pqPath) < dirBytes(qPath),
-      s"PQ index ${dirBytes(pqPath)} B !< int8 index ${dirBytes(qPath)} B")
+    withTempDir("ivfpq") { base =>
+      val pqPath = base.resolve("pq").toString
+      val qPath = base.resolve("int8").toString
+      Ivf.saveIndexPQ(corpus, "vec_id", "embedding", centroids, books, pqPath)
+      Ivf.saveIndexQ(corpus, "vec_id", "embedding", centroids, qPath)
+      assert(dirBytes(pqPath) < dirBytes(qPath),
+        s"PQ index ${dirBytes(pqPath)} B !< int8 index ${dirBytes(qPath)} B")
 
-    val indexedPQ = spark.read.parquet(pqPath)
-    val got = Ivf.topKJoinPQ(indexedPQ, "vec_id", centroids, books, probes,
-      "probe_id", "p_emb", k = 5, nprobe = 3,
-      rerank = Some((corpus, "embedding")), rerankFactor = 8)
+      val indexedPQ = spark.read.parquet(pqPath)
+      val got = Ivf.topKJoinPQ(indexedPQ, "vec_id", centroids, books, probes,
+        "probe_id", "p_emb", k = 5, nprobe = 3,
+        rerank = Some((corpus, "embedding")), rerankFactor = 8)
 
-    // re-ranked scores are the exact float dots
-    val exact = Ivf.topKJoin(Ivf.withCell(corpus, "embedding", centroids),
-      "embedding", centroids, probes, "probe_id", "p_emb",
-      k = 1000000, nprobe = 3, tieBreak = Seq("vec_id"))
-      .select("probe_id", "vec_id", "score").collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    got.collect().foreach { r =>
-      assertNear(r.getDouble(2), exact((r.getLong(0), r.getLong(1))))
+      // re-ranked scores are the exact float dots
+      val exact = Ivf.topKJoin(Ivf.withCell(corpus, "embedding", centroids),
+        "embedding", centroids, probes, "probe_id", "p_emb",
+        k = 1000000, nprobe = 3, tieBreak = Seq("vec_id"))
+        .select("probe_id", "vec_id", "score").collect()
+        .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      got.collect().foreach { r =>
+        assertNear(r.getDouble(2), exact((r.getLong(0), r.getLong(1))))
+      }
+
+      // recall vs brute-force truth: PQ (coded candidates) must land a
+      // useful fraction of the true top-5, and the float-IVF recall at
+      // the same nprobe is its natural ceiling
+      val truth = Similarity.bruteForceTopKJoin(corpus, "embedding", probes,
+        "probe_id", "p_emb", k = 5, tieBreak = Seq("vec_id"))
+      val floatTop = Ivf.topKJoin(Ivf.withCell(corpus, "embedding", centroids),
+        "embedding", centroids, probes, "probe_id", "p_emb",
+        k = 5, nprobe = 3, tieBreak = Seq("vec_id"))
+      val rPq = Eval.meanRecallAtK(got, truth, "probe_id", "vec_id", 5)
+      val rFloat = Eval.meanRecallAtK(floatTop, truth, "probe_id", "vec_id", 5)
+      assert(rPq <= rFloat + 1e-9, s"PQ recall $rPq above its float ceiling $rFloat?")
+      assert(rPq >= 0.2, s"PQ recall@5 $rPq too low to be useful")
     }
-
-    // recall vs brute-force truth: PQ (coded candidates) must land a
-    // useful fraction of the true top-5, and the float-IVF recall at
-    // the same nprobe is its natural ceiling
-    val truth = Similarity.bruteForceTopKJoin(corpus, "embedding", probes,
-      "probe_id", "p_emb", k = 5, tieBreak = Seq("vec_id"))
-    val floatTop = Ivf.topKJoin(Ivf.withCell(corpus, "embedding", centroids),
-      "embedding", centroids, probes, "probe_id", "p_emb",
-      k = 5, nprobe = 3, tieBreak = Seq("vec_id"))
-    val rPq = Eval.meanRecallAtK(got, truth, "probe_id", "vec_id", 5)
-    val rFloat = Eval.meanRecallAtK(floatTop, truth, "probe_id", "vec_id", 5)
-    assert(rPq <= rFloat + 1e-9, s"PQ recall $rPq above its float ceiling $rFloat?")
-    assert(rPq >= 0.2, s"PQ recall@5 $rPq too low to be useful")
   }
 }

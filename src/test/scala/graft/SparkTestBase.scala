@@ -24,6 +24,13 @@ object SparkTestBase {
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
 
+  /** Runs `body` on a fresh temp dir named by `prefix`, then deletes
+    * the dir recursively, whether `body` passed or failed. */
+  def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir) finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   def assertNear(actual: Double, expected: Double, tol: Double = 1e-6): Unit = {
     if (expected.isNaN) assert(actual.isNaN, s"expected NaN, got $actual")
     else assert(math.abs(actual - expected) <= tol, s"expected $expected, got $actual")
