@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ext.{Dedup, Similarity, TextAnalysis, TextHash, TextHashLoops}
+import graft.core.Checkpoints.scratchDir
 
 /** One declared query: Spark builder + (optional) DuckDB oracle SQL.
   *
@@ -28,15 +29,6 @@ final case class QueryDef(
     oracle: Option[String])
 
 object Queries {
-
-  /** A fresh temp root for a builder whose frame reads a store it
-    * writes there. The frame reads lazily, so the root cannot go before
-    * the builder returns: it is deleted recursively at JVM exit. */
-  private def scratchDir(prefix: String): java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
-    root
-  }
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
@@ -3394,7 +3386,7 @@ ORDER BY feature"""
              |ORDER BY doc_id, dup_of""".stripMargin)),
 
     // ── 71. transitive near-dup clustering vs a recursive-CTE oracle:
-    // the REAL pointer-doubling hash-min operator (Dedup
+    // the REAL large-star/small-star operator (Dedup
     // .transitiveClusters) on a derived chain graph, checked against
     // DuckDB's WITH RECURSIVE reachability closure (comp = min
     // reachable id) — the component operator is SQL-expressible after

@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 
 /** Lineage-cut policy for iterative operators (PageRank / label
   * propagation / transitive clustering / LD clump / BPE rounds / …).
@@ -91,6 +93,40 @@ object Checkpoints {
         }
     }
     org.apache.spark.sql.graft.bridge.clampCheckpointStats(cp)
+  }
+
+  /** Read one long metric of an observe-on-cut observation: a
+    * `Dataset.observe` inside the plan that [[cut]] materializes fills
+    * during the cut's own job, so a round's driver-side facts (row
+    * counts, payload sizes, convergence flags, dangling mass) cost no
+    * extra action. The observation arrives through the listener bus,
+    * which is asynchronous: read it once, and only if it is still empty
+    * wait for the bus to drain — one bounded wait of at most 2 s
+    * (`Observation.get` would block forever if a foreign cut
+    * implementation never ran the plan as an action) — then read once
+    * more. An observation still empty after the wait, or filled
+    * without its metrics, gives None; callers then compute the same
+    * fact with an explicit aggregate, never assume a value. */
+  def observedLong(spark: SparkSession, o: Observation, key: String): Option[Long] = {
+    // `future.value` never blocks. A plan the optimizer folded to an
+    // empty relation fills the observation with a schema-less empty row.
+    def read(): Option[Row] =
+      o.future.value.flatMap(_.toOption).filter(_.schema != null)
+    val row = read().orElse(
+      try {
+        org.apache.spark.sql.graft.bridge.waitListenerBus(spark.sparkContext, 2000L)
+        read()
+      } catch { case NonFatal(_) => None })
+    row.flatMap(r => Option(r.getAs[Any](key))).map(_.asInstanceOf[Number].longValue)
+  }
+
+  /** A fresh local temp root for a store written by a frame that is
+    * read lazily — the root cannot go before the caller's last action,
+    * so it is deleted recursively at JVM exit. */
+  def scratchDir(prefix: String): java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
   }
 
   /** `.cut` suffix syntax so iterative pipelines read like the

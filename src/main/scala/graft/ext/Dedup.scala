@@ -1,8 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import graft.core.Checkpoints.CutOps
+import graft.core.Checkpoints.{CutOps, observedLong}
 import TextHash._
 
 /** Deduplication operators for document corpora.
@@ -729,97 +729,111 @@ object Dedup {
     *
     * Scale notes: the input is the VERIFIED candidate edge set — tiny
     * relative to the corpus (post-banding, post-threshold). Each round
-    * is two groupBy+join passes over the current edge set plus an
-    * exact fixpoint check (`except` on the canonical frame), and
-    * [[graft.core.Checkpoints.cut]] truncates lineage per round. If
-    * `maxIter` is hit before the fixpoint the result would be silently
-    * wrong (non-star edges left), so it THROWS instead.
+    * is one [[graft.core.Checkpoints.cut]] of three exchanges: a
+    * window over the symmetric edges keyed by vertex (large-star), a
+    * window keyed by the larger endpoint (small-star) and the
+    * `distinct` of the rewired edges. The large-star window also tests
+    * the round's INPUT for being a star forest, an observed metric on
+    * the same job, so convergence costs no action of its own: the
+    * round after the fixpoint confirms it (its output equals its input)
+    * and is not counted. If `maxIter` rounds pass without reaching the
+    * fixpoint the result would be silently wrong (non-star edges
+    * left), so it THROWS instead; at most `maxIter + 1` cuts run.
     *
-    * `onConverge` fires once with the round count on success —
-    * observability for sizing `maxIter` (rehearsals assert on it).
+    * `onConverge` fires once with the round count on success — the
+    * rounds whose output was not yet the star forest, i.e. the number
+    * of the round that produced it — observability for sizing
+    * `maxIter` (rehearsals assert on it).
     *
     * Returns one row per vertex appearing in `edges`: (id, comp),
     * comp = the component's smallest vertex id. */
   def transitiveClusters(edges: DataFrame, srcCol: String, dstCol: String,
                          maxIter: Int = 50,
                          onConverge: Int => Unit = _ => ()): DataFrame = {
+    val spark = edges.sparkSession
     // canonical undirected edges: u > v, no self-loops, distinct
     var e = edges.select(col(srcCol).as("_eu"), col(dstCol).as("_ev"))
       .filter(col("_eu") =!= col("_ev"))
       .select(greatest(col("_eu"), col("_ev")).as("u"),
         least(col("_eu"), col("_ev")).as("v"))
       .distinct().cut
-    // vertex universe from the ORIGINAL edge set — labels are emitted
-    // for every vertex even if rewiring leaves it only on the v side
-    val verts = e.select(col("u").as("id"))
-      .union(e.select(col("v").as("id"))).distinct().cut
+    // a self-loop's vertex is its own component unless an edge joins it
     val isolated = edges.select(col(srcCol).as("_eu"), col(dstCol).as("_ev"))
       .filter(col("_eu") === col("_ev"))
-      .select(col("_eu").as("id")).distinct()
+      .select(col("_eu").as("id"), col("_eu").as("comp"))
 
-    // large-star: each undirected edge, seen from its SMALLER endpoint
-    // x (y > x), is rewired to (y, min(Γ(x) ∪ {x})) — m ≤ x < y keeps
-    // the canonical orientation for free
-    def largeStar(frame: DataFrame): DataFrame = {
-      val sym = frame.select(col("u").as("x"), col("v").as("y"))
-        .union(frame.select(col("v").as("x"), col("u").as("y")))
-      val m = sym.groupBy("x").agg(min(col("y")).as("_my"))
-        .select(col("x"), least(col("_my"), col("x")).as("m"))
-      // no distinct here (r19): smallStar is duplicate-insensitive (its
-      // min ignores multiplicity; its own output IS distinct'd), so the
-      // intermediate dedup bought nothing but one (u,v)-keyed exchange
-      // per round. Self-loops cannot arise: m ≤ x < y ⇒ u > v always.
-      sym.join(m, Seq("x")).filter(col("y") > col("x"))
+    // star forest: every u appears exactly once (one root per leaf)
+    // and no vertex sits on both sides (roots are never leaves). Star
+    // forests are fixpoints of both steps (large-star rewires every
+    // leaf to its root m ≤ leaf; small-star's min is the root), and the
+    // algorithm's only fixpoints are star forests (Kiveris et al. §3).
+    // Per vertex x of the symmetric edge list, with su its u-side and
+    // n its total appearances, x breaks the forest iff this holds:
+    def branching(su: Column, n: Column): Column = su > 1 || (su >= 1 && n > su)
+    def sides(frame: DataFrame): DataFrame =
+      frame.select(col("u").as("x"), col("v").as("y"), lit(1L).as("iu"))
+        .union(frame.select(col("v").as("x"), col("u").as("y"), lit(0L).as("iu")))
+    // the explicit test, for an observation that never arrived
+    def isStarForest(frame: DataFrame): Boolean =
+      sides(frame).groupBy(col("x"))
+        .agg(sum(col("iu")).as("su"), count(lit(1)).as("n"))
+        .filter(branching(col("su"), col("n")))
+        .isEmpty
+    val byX = org.apache.spark.sql.expressions.Window.partitionBy("x")
+    val byU = org.apache.spark.sql.expressions.Window.partitionBy("u")
+    // one round; `obs` records whether `frame` itself was branching
+    def round(frame: DataFrame, obs: Observation): DataFrame = {
+      // large-star: each undirected edge, seen from its SMALLER
+      // endpoint x (y > x), is rewired to (y, min(Γ(x) ∪ {x})) —
+      // m ≤ x < y keeps the canonical orientation for free, and no
+      // self-loop can arise. No distinct here (r19): small-star is
+      // duplicate-insensitive (its min ignores multiplicity; its own
+      // output IS distinct'd).
+      val large = sides(frame)
+        .withColumn("m", least(min(col("y")).over(byX), col("x")))
+        .withColumn("su", sum(col("iu")).over(byX))
+        .withColumn("n", count(lit(1)).over(byX))
+        .observe(obs, coalesce(max(when(branching(col("su"), col("n")), 1L)
+          .otherwise(0L)), lit(0L)).as("branching"))
+        .filter(col("y") > col("x"))
         .select(col("y").as("u"), col("m").as("v"))
-    }
-    // small-star: each vertex u rewires its ≤-neighborhood (with the
-    // canonical frame that is ALL of u's v-side partners, plus u
-    // itself) onto its minimum
-    def smallStar(frame: DataFrame): DataFrame = {
-      val m = frame.groupBy("u").agg(min(col("v")).as("m"))
-      frame.join(m, Seq("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(m.select(col("u"), col("m").as("v")))
+      // small-star: each vertex u rewires its ≤-neighborhood (with the
+      // canonical frame that is ALL of u's v-side partners, plus u
+      // itself) onto its minimum
+      large.withColumn("m", min(col("v")).over(byU))
+        .select(explode(array(
+          struct(col("v").as("u"), col("m").as("v")),
+          struct(col("u").as("u"), col("m").as("v")))).as("r"))
+        .select(col("r.u").as("u"), col("r.v").as("v"))
         .filter(col("u") =!= col("v")).distinct()
     }
 
-    // convergence = the edge set IS a star forest (r19; replaces the
-    // next==e protocol): every u appears exactly once (one root per
-    // leaf) and no vertex sits on both sides (roots are never leaves).
-    // Star forests are fixpoints of both steps (largeStar rewires every
-    // leaf to its root m ≤ leaf; smallStar's min is the root), and the
-    // algorithm's only fixpoints are star forests (Kiveris et al. §3),
-    // so this is exactly the old stop state — detected ONE ROUND
-    // EARLIER (next==e needs an extra identical round to see itself)
-    // and tested by one u∪v-keyed aggregate + empty-probe instead of a
-    // per-round count() plus the two-sided except() on the final round.
-    def isStarForest(frame: DataFrame): Boolean = {
-      val sides = frame
-        .select(col("u").as("x"), lit(1L).as("iu"), lit(0L).as("iv"))
-        .union(frame
-          .select(col("v").as("x"), lit(0L).as("iu"), lit(1L).as("iv")))
-      sides.groupBy(col("x"))
-        .agg(sum(col("iu")).as("su"), max(col("iv")).as("mv"))
-        .filter(col("su") > 1 || (col("su") >= 1 && col("mv") >= 1))
-        .isEmpty
-    }
     var it = 0
-    var done = isStarForest(e) // empty/self-loop-only sets pass vacuously
-    while (!done && it < maxIter) {
-      e = smallStar(largeStar(e)).cut
-      it += 1
-      done = isStarForest(e)
+    var forest = false // empty/self-loop-only sets pass on the first cut
+    while (!forest) {
+      val obs = Observation()
+      val next = round(e, obs).cut
+      forest = observedLong(spark, obs, "branching").map(_ == 0L)
+        .getOrElse(isStarForest(e))
+      if (!forest) {
+        if (it >= maxIter)
+          throw new IllegalStateException(
+            s"transitiveClusters did not converge within maxIter=$maxIter rounds; " +
+            "the edge set is not yet a star forest — raise maxIter " +
+            "(the alternating algorithm's bound is O(log^2 n) rounds)")
+        e = next
+        it += 1
+      }
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"transitiveClusters did not converge within maxIter=$maxIter rounds; " +
-        "the edge set is not yet a star forest — raise maxIter " +
-        "(the alternating algorithm's bound is O(log^2 n) rounds)")
     onConverge(it)
-    // fixpoint edges are (leaf, root) stars; roots label themselves
-    verts.unionByName(isolated).distinct()
-      .join(e.select(col("u").as("id"), col("v").as("_root")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("_root"), col("id")).as("comp"))
+    // fixpoint edges are (leaf, root) stars: every vertex of a
+    // component with an edge is still on one (each step preserves
+    // connectivity) and every root sits on the v-side, so leaves take
+    // their root and roots label themselves
+    e.select(col("u").as("id"), col("v").as("comp"))
+      .union(e.select(col("v").as("id"), col("v").as("comp")))
+      .union(isolated)
+      .groupBy(col("id")).agg(min(col("comp")).as("comp"))
   }
 
   /** Intra-corpus SPAN dedup (the MassiveText/Gopher "remove repeated

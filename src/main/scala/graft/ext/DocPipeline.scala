@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StructField, StructType}
 import scala.util.control.NonFatal
-import graft.core.Checkpoints.CutOps
+import graft.core.Checkpoints.{CutOps, observedLong}
 import graft.sources.{AppendStore, AtomicCommit}
 
 /** One-call training-data document preparation: the composed form of the
@@ -641,26 +641,6 @@ object DocPipeline {
       maxShingles: Int = 0): DataFrame =
     prepareIncrementalWithHashes(newDocs, store, idCol, textCol, minWords,
       minhashK, bands, tau, maxStoreBandDf, maxShingles).drop("_fp", "_whs")
-
-  /** Read one long metric from an observe-on-cut observation. The
-    * eager checkpoint that materializes the observed plan fills the
-    * observation via the listener bus, which is asynchronous: read it
-    * once, and only if it is still empty wait for the bus to drain —
-    * one bounded wait of at most 2 s (`Observation.get` would block
-    * forever if a foreign cut implementation never ran the plan as an
-    * action) — then read once more. A wait that times out gives None;
-    * callers fall back to an explicit aggregate on None. */
-  private def observedLong(spark: SparkSession, o: org.apache.spark.sql.Observation,
-                           key: String): Option[Long] = {
-    import org.apache.spark.sql.graft.bridge.{observedOrEmpty, waitListenerBus}
-    val first = observedOrEmpty(o)
-    val m =
-      if (first.nonEmpty) Some(first)
-      else
-        try { waitListenerBus(spark.sparkContext, 2000L); Some(observedOrEmpty(o)) }
-        catch { case NonFatal(_) => None }
-    m.flatMap(_.get(key)).map(v => v.asInstanceOf[Number].longValue)
-  }
 
   /** The NEW×STORED per-band-key candidate stage, shared by
     * [[prepareIncrementalWithHashes]] and the hub-day measurement probe

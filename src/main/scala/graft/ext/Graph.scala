@@ -1,8 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import graft.core.Checkpoints.CutOps
+import graft.core.Checkpoints.{CutOps, observedLong}
 
 /** Link-graph operators for crawl curation — ranking a web corpus's
   * pages by link structure is the classic crawl-prioritization /
@@ -20,21 +20,6 @@ import graft.core.Checkpoints.CutOps
   * ranks are comparable within a run, not probabilities. */
 object Graph {
 
-  /** The ranking operators' prelude: the `(src, dst)` int64 edge
-    * projection and the distinct `node` universe of its endpoints,
-    * each cut ONCE — without the edge cut every iteration's join would
-    * re-derive the projection from the SOURCE (a full input scan per
-    * round at corpus scale, plus two more for `nodes` and out-degrees). */
-  private def edgesAndNodes(edges: DataFrame, srcCol: String,
-                            dstCol: String): (DataFrame, DataFrame) = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).cut
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .cut
-    (e, nodes)
-  }
-
   /** Integer-exact damped PageRank over an edge list, `iters` fixed
     * iterations (the standard fixed-budget formulation for batch
     * ranking — convergence checks cost a driver action per round and
@@ -47,46 +32,23 @@ object Graph {
     *
     * with `d = dampingPct` (default 85). All divisions are floor on
     * non-negatives — Spark's `div` and DuckDB's `//` agree exactly.
+    * An empty edge list gives an empty frame.
     *
-    * Scale shape: per iteration ONE src-keyed equi-join (ranks onto
-    * edges — the rank table is the small, N-row side; edges stay put)
-    * and ONE dst-keyed partial+final integer sum; the dangling pool is
-    * a scalar aggregate. Ranks [[graft.core.Checkpoints.cut]] each round (the
-    * iterative-plan house pattern — [[Dedup.transitiveClusters]]), so
-    * the lineage stays one round deep. Self-loops and parallel edges
-    * are honored as given; callers dedup upstream if unwanted. */
+    * Scale shape ([[rankRounds]], shared with [[personalizedPageRank]]):
+    * the round state is ONE node-keyed frame that carries each node's
+    * out-list, so an iteration is one node-keyed partial+final
+    * aggregate — no join, no broadcast — and one
+    * [[graft.core.Checkpoints.cut]]: two jobs. N and the dangling mass
+    * ride the cuts' own jobs as observed metrics. The adjacency
+    * therefore shuffles once per round; a cut frame keeps no
+    * partitioning, so a per-round join re-shuffled the edges every
+    * round anyway. A hub's out-list is one array row of 8 B per
+    * out-edge (a 10⁷-out-edge node is an 80 MB row), which bounds the
+    * out-degree this shape serves. Self-loops and parallel edges are
+    * honored as given; callers dedup upstream if unwanted. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, dampingPct: Int = 85): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"dampingPct must be in [0, 100], got $dampingPct")
-    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .cut
-    val n = nodes.count()
-    val teleport = (100L - dampingPct) * 10000000L
-    var ranks = nodes.withColumn("rk", lit(1000000000L))
-      .cut
-    for (_ <- 1 to iters) {
-      val withDeg = ranks.join(deg, ranks("node") === deg("src"), "left")
-      // dangling share stays IN the plan as a 1-row broadcast (a driver
-      // action per round would double the iteration's job count)
-      val share = withDeg.filter(col("d").isNull)
-        .agg(expr(s"coalesce(sum(rk), 0L) div ${n}L").as("_share"))
-      val in = withDeg.filter(col("d").isNotNull)
-        .select(col("node"), expr("rk div d").as("c"))
-        .join(e, col("node") === col("src"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("m"))
-      ranks = ranks.join(in, ranks("node") === in("dst"), "left")
-        .crossJoin(broadcast(share))
-        .select(col("node"),
-          (lit(teleport) +
-            expr(s"(coalesce(m, 0L) + _share) * $dampingPct div 100")
-          ).as("rk"))
-        .cut
-    }
-    ranks
-  }
+               iters: Int, dampingPct: Int = 85): DataFrame =
+    rankRounds(edges, srcCol, dstCol, None, iters, dampingPct)
 
   /** Integer-exact HITS hubs & authorities (Kleinberg 1999,
     * "Authoritative sources in a hyperlinked environment", JACM 46:5),
@@ -106,13 +68,18 @@ object Graph {
     * wider graphs by component first.
     *
     * Scale shape per iteration: two edge-keyed integer sums + two
-    * 1-row max broadcasts ([[pageRank]]'s in-plan scalar pattern),
+    * 1-row max broadcasts (in-plan scalars, no driver action),
     * [[graft.core.Checkpoints.cut]] lineage cuts. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
-    var scores = nodes
+    // the edge projection is cut ONCE: without it every iteration's
+    // joins would re-derive it from the SOURCE (a full input scan per
+    // round at corpus scale)
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")).cut
+    var scores = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
       .withColumn("hub", lit(1000000L))
       .withColumn("auth", lit(1000000L))
       .cut
@@ -161,24 +128,64 @@ object Graph {
     * teleport mass); when no seed is in the graph the call fails
     * loudly instead of returning an all-zero frame.
     *
-    * Scale shape: identical to [[pageRank]] — one src-keyed equi-join
-    * + one dst-keyed integer sum per iteration, dangling pool as a
-    * 1-row broadcast, seed membership as a map-side `isin` (a hashed
-    * `InSet` beyond the conversion threshold, so 10⁴⁺-seed sets cost
-    * one probe per row, not a linear scan). */
+    * Scale shape: [[pageRank]]'s round ([[rankRounds]]) — one
+    * node-keyed aggregate and one cut per iteration, |S∩V| and the
+    * dangling pool observed on the cuts, seed membership a map-side
+    * `isin` (a hashed `InSet` beyond the conversion threshold, so
+    * 10⁴⁺-seed sets cost one probe per row, not a linear scan). */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            sources: Seq[Long], iters: Int,
                            dampingPct: Int = 85): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
     require(sources.nonEmpty, "personalizedPageRank needs a non-empty seed set")
+    rankRounds(edges, srcCol, dstCol, Some(sources.distinct), iters, dampingPct)
+  }
+
+  /** The one round of [[pageRank]] (`seeds = None`: every node is a
+    * seed) and [[personalizedPageRank]].
+    *
+    * State: `(node, dsts, rk)`, `dsts` the node's out-list (empty for a
+    * dangling node). It is built by the same node-keyed aggregate that
+    * every round runs: each edge emits a `src` row holding `[dst]` and
+    * a `dst` row holding no list, so every endpoint gets exactly one
+    * state row. A round unions one `(dst, rk div |dsts|)` row per
+    * out-edge with each node's own row (contribution 0, its out-list),
+    * sums by node and applies the integer update. The sum and the list
+    * share one ObjectHashAggregate, whose map-side combine collapses a
+    * hot `dst`'s contributions before the exchange.
+    *
+    * Driver facts are observed on the cuts: |S∩V| and the first
+    * dangling mass on the initial cut, each later mass on its round's
+    * cut. An empty observation falls back to an aggregate over the cut
+    * state. */
+  private def rankRounds(edges: DataFrame, srcCol: String, dstCol: String,
+                         seeds: Option[Seq[Long]], iters: Int,
+                         dampingPct: Int): DataFrame = {
+    require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0, 100], got $dampingPct")
-    val seeds = sources.distinct
-    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    val spark = edges.sparkSession
+    // seed membership via isin (compiles to a hashed InSet above the
+    // conversion threshold) — interpolating the seed list into a SQL
+    // string would inline a |S|-element IN list per iteration
+    val isSeed = seeds.fold(lit(true))(s => col("node").isin(s: _*))
+    val noList = lit(null).cast("array<bigint>")
+    val dangling = size(col("dsts")) === 0
+    val massOf = coalesce(sum(when(dangling, col("rk"))), lit(0L)).as("mass")
+    def gather(rows: DataFrame): DataFrame = rows.groupBy(col("node"))
+      .agg(sum(col("c")).as("m"), flatten(collect_list(col("dsts"))).as("dsts"))
+
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+    var obs = Observation()
+    var state = gather(e
+        .select(explode(array(
+          struct(col("src").as("node"), array(col("dst")).as("dsts")),
+          struct(col("dst").as("node"), noList.as("dsts")))).as("r"))
+        .select(col("r.node").as("node"), lit(0L).as("c"), col("r.dsts").as("dsts")))
+      .select(col("node"), col("dsts"),
+        when(isSeed, lit(1000000000L)).otherwise(lit(0L)).as("rk"))
+      .observe(obs, count(when(isSeed, lit(1))).as("seeds"), massOf)
       .cut
-    val teleport = (100L - dampingPct) * 10000000L
-    val isSeed = col("node").isin(seeds: _*)
     // the node UNIVERSE is the edge list: a seed appearing in no edge
     // gets no rank row (its PPR would be pure teleport mass — compute
     // it trivially if needed). The dangling redistribution must
@@ -186,35 +193,30 @@ object Graph {
     // full seed count would permanently leak the absent seeds' share
     // of every iteration's dangling mass. Fail loudly when NO seed is
     // in the graph rather than return an all-zero frame.
-    val nSeedsIn = nodes.filter(isSeed).count()
-    require(nSeedsIn > 0,
+    val nSeedsIn = observedLong(spark, obs, "seeds")
+      .getOrElse(state.filter(isSeed).count())
+    require(nSeedsIn > 0 || seeds.isEmpty,
       "personalizedPageRank: no seed appears in the edge list (the node " +
         "universe is the edge list; isolated seeds receive no rank rows)")
-    var ranks = nodes
-      .withColumn("rk", when(isSeed, lit(1000000000L)).otherwise(lit(0L)))
-      .cut
-    for (_ <- 1 to iters) {
-      val withDeg = ranks.join(deg, ranks("node") === deg("src"), "left")
-      val share = withDeg.filter(col("d").isNull)
-        .agg(expr(s"coalesce(sum(rk), 0L) div ${nSeedsIn}L").as("_share"))
-      val in = withDeg.filter(col("d").isNotNull)
-        .select(col("node"), expr("rk div d").as("c"))
-        .join(e, col("node") === col("src"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("m"))
-      // seed membership via isin (compiles to a hashed InSet above the
-      // conversion threshold) — interpolating the seed list into a SQL
-      // string would inline a |S|-element IN list per iteration
-      ranks = ranks.join(in, ranks("node") === in("dst"), "left")
-        .crossJoin(broadcast(share))
-        .withColumn("_contrib",
-          coalesce(col("m"), lit(0L)) +
-            when(isSeed, col("_share")).otherwise(lit(0L)))
-        .select(col("node"),
+    // an empty graph has nothing to rank (and N = 0 would divide by 0)
+    val rounds = if (nSeedsIn == 0) 0 else iters
+    val teleport = (100L - dampingPct) * 10000000L
+    for (_ <- 1 to rounds) {
+      val pool = observedLong(spark, obs, "mass")
+        .getOrElse(state.agg(massOf).head().getLong(0))
+      val contribs = state.filter(!dangling)
+        .select(explode(col("dsts")).as("node"),
+          expr("rk div size(dsts)").as("c"), noList.as("dsts"))
+      obs = Observation()
+      state = gather(contribs.union(state.select(col("node"), lit(0L).as("c"), col("dsts"))))
+        .withColumn("_share", when(isSeed, lit(pool / nSeedsIn)).otherwise(lit(0L)))
+        .select(col("node"), col("dsts"),
           (when(isSeed, lit(teleport)).otherwise(lit(0L)) +
-            expr(s"_contrib * $dampingPct div 100")).as("rk"))
+            expr(s"(m + _share) * $dampingPct div 100")).as("rk"))
+        .observe(obs, massOf)
         .cut
     }
-    ranks
+    state.select(col("node"), col("rk"))
   }
 
   /** k-core peel, `rounds` fixed rounds (Seidman 1983, "Network
@@ -337,7 +339,7 @@ object Graph {
     require(sources.nonEmpty, "sources must be non-empty")
     val spark = edges.sparkSession
     import spark.implicits._
-    // cut once, as in edgesAndNodes (each hop's frontier join would
+    // cut once, as in hits (each hop's frontier join would
     // otherwise re-scan the source)
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).cut

@@ -422,16 +422,17 @@ object Kinship {
   /** [[grm]] with the driver-cap auto-switch: the one-pass driver
     * triangle while it fits (default 10k samples → 400 MB), the blocked
     * store + distributed long-form view beyond. `tmpPath` hosts the
-    * block store in blocked mode (a scratch dir is created when not
-    * given — production callers pass a real path and keep the store,
-    * which IS the reusable artifact at that scale). */
+    * block store in blocked mode (a scratch dir, deleted at JVM exit,
+    * is created when not given — production callers pass a real path
+    * and keep the store, which IS the reusable artifact at that
+    * scale). */
   def grmAuto(df: DataFrame, gtCol: String = "gt",
               maxDriverSamples: Int = 10000, blockSize: Int = 2048,
               tmpPath: Option[String] = None): DataFrame =
     if (cohortWidth(df, gtCol) <= maxDriverSamples) grm(df, gtCol)
     else {
       val path = tmpPath.getOrElse(
-        java.nio.file.Files.createTempDirectory("grm_blocks").toString)
+        graft.core.Checkpoints.scratchDir("grm_blocks").toString)
       grmBlocksWrite(df, path, gtCol, blockSize)
       grmFromBlocks(df.sparkSession, path)
     }

@@ -166,9 +166,9 @@ object PairBlocks {
 
   /** [[Stats.ibsPairs]] with the width auto-switch: exploded pairs for
     * narrow cohorts, one-pass gramian to the driver envelope, blocked
-    * store beyond (scratch dir unless `tmpPath` given — production
-    * callers pass a real path; the store IS the artifact at that
-    * width). */
+    * store beyond (a scratch dir deleted at JVM exit unless `tmpPath`
+    * is given — production callers pass a real path; the store IS the
+    * artifact at that width). */
   def ibsAuto(df: DataFrame, gtCol: String = "gt",
               maxExplodedSamples: Int = 1024, maxDriverSamples: Int = 9000,
               blockSize: Int = 1024, tmpPath: Option[String] = None): DataFrame = {
@@ -177,7 +177,7 @@ object PairBlocks {
     else if (s <= maxDriverSamples) Stats.ibsGramian(df, gtCol)
     else {
       val path = tmpPath.getOrElse(
-        java.nio.file.Files.createTempDirectory("pair_blocks").toString)
+        graft.core.Checkpoints.scratchDir("pair_blocks").toString)
       write(df, path, gtCol, blockSize)
       ibsFromBlocks(df.sparkSession, path)
     }

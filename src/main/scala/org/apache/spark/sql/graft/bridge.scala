@@ -17,7 +17,7 @@ object bridge {
     * origin's ESTIMATED `Statistics` on the resulting `LogicalRDD` so
     * broadcast decisions survive the cut — but in an iterative operator
     * whose per-round plan joins round-(r−1) cut frames on BOTH sides
-    * (`Dedup.transitiveClusters`: relax + two pointer chases), the
+    * (the first `Dedup.transitiveClusters`: relax + two pointer chases), the
     * estimate compounds MULTIPLICATIVELY across rounds (sizeInBytes_r ≈
     * sizeInBytes_{r−1}^j for j label-derived join sides) — doubly
     * exponential in the round count. The BigInt never touches
@@ -66,13 +66,6 @@ object bridge {
     * drained by then. */
   def waitListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
-
-  /** Non-blocking read of an [[org.apache.spark.sql.Observation]]
-    * (`getOrEmpty` is private[sql]; the public `get` blocks forever if
-    * the observed plan never runs as an action) — the observe-on-cut
-    * pricing pattern (r20) reads this instead. */
-  def observedOrEmpty(o: org.apache.spark.sql.Observation): Map[String, Any] =
-    o.getOrEmpty
 
   /** Java-serializable Hadoop conf for shipping the session's filesystem
     * settings (fs.s3a credentials, fs.defaultFS, …) from the driver into

@@ -23,8 +23,7 @@ class CheckpointSpec extends SparkTestBase {
     else Files.walk(root).iterator().asScala
       .filter(p => p.getFileName.toString.startsWith("rdd-")).toSeq
 
-  private def withReliable[A](body: Path => A): A = {
-    val dir = Files.createTempDirectory("graft-ckpt")
+  private def withReliable[A](body: Path => A): A = withTempDir("graft-ckpt") { dir =>
     spark.conf.set(Checkpoints.DirConf, dir.toString)
     try body(dir)
     finally spark.conf.unset(Checkpoints.DirConf)

@@ -169,61 +169,61 @@ class ContentionSpec extends SparkTestBase {
     // This is the executable form of the AtomicCommit scaladoc's
     // object-store claim (only the publication point needs a
     // primitive; everything else is write-once).
-    val root = java.nio.file.Files.createTempDirectory("contcreate")
-      .resolve("store").toString
-    spark.conf.set("spark.graft.casPublisher", "create")
-    try {
-      AtomicCommit.commit(spark, root, 1L, "base")
-      (0 until 10).foreach { round =>
-        val v = AtomicCommit.nextVersion(spark, root)
-        val barrier = new CyclicBarrier(4)
-        val wins = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-        val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-        val ts = (0 until 4).map { i =>
+    withTempDir("contcreate") { tmp =>
+      val root = tmp.resolve("store").toString
+      spark.conf.set("spark.graft.casPublisher", "create")
+      try {
+        AtomicCommit.commit(spark, root, 1L, "base")
+        (0 until 10).foreach { round =>
+          val v = AtomicCommit.nextVersion(spark, root)
+          val barrier = new CyclicBarrier(4)
+          val wins = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+          val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+          val ts = (0 until 4).map { i =>
+            new Thread(() => {
+              try {
+                barrier.await(120, TimeUnit.SECONDS)
+                if (AtomicCommit.commit(spark, root, v, s"writer-$i")) wins.add(i)
+              } catch { case t: Throwable => errs.add(t) }
+            })
+          }
+          ts.foreach(_.start()); ts.foreach(_.join(120000))
+          assert(errs.isEmpty, s"round $round: racing commit threw ${errs.peek()}")
+          assert(wins.size === 1,
+            s"round $round: exclusive create must have exactly one winner, got ${wins.size}")
+          val (latestV, body) = AtomicCommit.latest(spark, root).get
+          assert(latestV === v && body === s"writer-${wins.peek()}",
+            s"round $round: body '$body' is not the sole winner's")
+        }
+        assert(AtomicCommit.committedVersions(spark, root) === (1L to 11L))
+        // racing epoch claims through the same publisher: 4 threads all
+        // acquire, all epochs distinct (each create-exclusive is won once)
+        val eBarrier = new CyclicBarrier(4)
+        val epochs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+        val ets = (0 until 4).map { _ =>
           new Thread(() => {
-            try {
-              barrier.await(120, TimeUnit.SECONDS)
-              if (AtomicCommit.commit(spark, root, v, s"writer-$i")) wins.add(i)
-            } catch { case t: Throwable => errs.add(t) }
+            eBarrier.await(120, TimeUnit.SECONDS)
+            epochs.add(AtomicCommit.acquireEpoch(spark, root, "racer"))
           })
         }
-        ts.foreach(_.start()); ts.foreach(_.join(120000))
-        assert(errs.isEmpty, s"round $round: racing commit threw ${errs.peek()}")
-        assert(wins.size === 1,
-          s"round $round: exclusive create must have exactly one winner, got ${wins.size}")
-        val (latestV, body) = AtomicCommit.latest(spark, root).get
-        assert(latestV === v && body === s"writer-${wins.peek()}",
-          s"round $round: body '$body' is not the sole winner's")
-      }
-      assert(AtomicCommit.committedVersions(spark, root) === (1L to 11L))
-      // racing epoch claims through the same publisher: 4 threads all
-      // acquire, all epochs distinct (each create-exclusive is won once)
-      val eBarrier = new CyclicBarrier(4)
-      val epochs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val ets = (0 until 4).map { _ =>
-        new Thread(() => {
-          eBarrier.await(120, TimeUnit.SECONDS)
-          epochs.add(AtomicCommit.acquireEpoch(spark, root, "racer"))
-        })
-      }
-      ets.foreach(_.start()); ets.foreach(_.join(120000))
-      val es = epochs.toArray(Array.empty[java.lang.Long]).map(_.toLong).toSeq
-      assert(es.size === 4 && es.distinct.size === 4, s"epoch collision: $es")
-      // end-to-end: an AppendStore lifecycle (append/read/compact/vacuum)
-      // over the create publisher — no path in the protocol depends on
-      // rename semantics beyond the publisher
-      import spark.implicits._
-      val storeRoot = java.nio.file.Files.createTempDirectory("contcreate2")
-        .resolve("astore").toString
-      graft.sources.AppendStore.append((1L to 100L).toDF("id"), storeRoot)
-      graft.sources.AppendStore.append((101L to 200L).toDF("id"), storeRoot)
-      graft.sources.AppendStore.compact(spark, storeRoot)
-      AtomicCommit.vacuum(spark, storeRoot, keepVersions = 1)
-      val got = graft.sources.AppendStore
-        .readOr(spark, storeRoot, sys.error("missing"))
-        .select("id").collect().map(_.getLong(0)).sorted
-      assert(got === (1L to 200L).toArray, "lifecycle content drifted")
-    } finally spark.conf.unset("spark.graft.casPublisher")
+        ets.foreach(_.start()); ets.foreach(_.join(120000))
+        val es = epochs.toArray(Array.empty[java.lang.Long]).map(_.toLong).toSeq
+        assert(es.size === 4 && es.distinct.size === 4, s"epoch collision: $es")
+        // end-to-end: an AppendStore lifecycle (append/read/compact/vacuum)
+        // over the create publisher — no path in the protocol depends on
+        // rename semantics beyond the publisher
+        import spark.implicits._
+        val storeRoot = tmp.resolve("astore").toString
+        graft.sources.AppendStore.append((1L to 100L).toDF("id"), storeRoot)
+        graft.sources.AppendStore.append((101L to 200L).toDF("id"), storeRoot)
+        graft.sources.AppendStore.compact(spark, storeRoot)
+        AtomicCommit.vacuum(spark, storeRoot, keepVersions = 1)
+        val got = graft.sources.AppendStore
+          .readOr(spark, storeRoot, sys.error("missing"))
+          .select("id").collect().map(_.getLong(0)).sorted
+        assert(got === (1L to 200L).toArray, "lifecycle content drifted")
+      } finally spark.conf.unset("spark.graft.casPublisher")
+    }
   }
 
   test("exclusive-create publication is atomic WITH content: local wins " +

@@ -78,6 +78,9 @@ class EdgeCaseSpec extends SparkTestBase {
     // transitiveClusters on an empty edge set: empty result, no loop
     assert(graft.ext.Dedup.transitiveClusters(
       Seq.empty[(Long, Long)].toDF("a", "b"), "a", "b").count() === 0L)
+    // pageRank on an empty edge set: empty result (N = 0 divides nothing)
+    assert(graft.ext.Graph.pageRank(
+      Seq.empty[(Long, Long)].toDF("a", "b"), "a", "b", 3).count() === 0L)
   }
 
   test("depth-stats median on a sample with no called depths is null") {

@@ -175,27 +175,29 @@ class GenotypeKernelsSpec extends SparkTestBase {
     // the header-driven widths); ~5% missing, all dosage classes
     val synth = Synth.synthGt(spark, 40L, 12)
       .localCheckpoint()
-    val path = java.nio.file.Files.createTempDirectory("pair_blocks").toString
-    val (s, nb) = graft.operators.PairBlocks.write(synth, path, "gt", blockSize = 5)
-    assert(s === 12 && nb === 3)
-    def ibsMap(df: org.apache.spark.sql.DataFrame) =
-      df.select("si", "sj", "ibs_num", "ibs_den").as[(Int, Int, Long, Long)]
-        .collect().map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
-    val (bi, pi) = (ibsMap(graft.operators.PairBlocks.ibsFromBlocks(spark, path)),
-      ibsMap(Stats.ibsPairs(synth, "gt")))
-    assert(bi.keySet === pi.keySet && bi.keySet.size === 12 * 11 / 2)
-    assert(bi === pi)
-    def kingMap(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Int, Int, Long, Long, Long, Long, Option[Double])].collect()
-        .map(r => (r._1, r._2) -> ((r._3, r._4, r._5, r._6, r._7))).toMap
-    val (bk, pk) = (kingMap(graft.operators.PairBlocks.kingFromBlocks(spark, path)),
-      kingMap(Stats.kingPairs(synth, "gt")))
-    assert(bk === pk)
-    // auto-switch picks the exploded path at this width but the blocked
-    // path under a forced tiny envelope
-    val auto = ibsMap(graft.operators.PairBlocks.ibsAuto(synth, "gt",
-      maxExplodedSamples = 4, maxDriverSamples = 8, blockSize = 5))
-    assert(auto === pi)
+    withTempDir("pair_blocks") { tmp =>
+      val path = tmp.toString
+      val (s, nb) = graft.operators.PairBlocks.write(synth, path, "gt", blockSize = 5)
+      assert(s === 12 && nb === 3)
+      def ibsMap(df: org.apache.spark.sql.DataFrame) =
+        df.select("si", "sj", "ibs_num", "ibs_den").as[(Int, Int, Long, Long)]
+          .collect().map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
+      val (bi, pi) = (ibsMap(graft.operators.PairBlocks.ibsFromBlocks(spark, path)),
+        ibsMap(Stats.ibsPairs(synth, "gt")))
+      assert(bi.keySet === pi.keySet && bi.keySet.size === 12 * 11 / 2)
+      assert(bi === pi)
+      def kingMap(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Int, Int, Long, Long, Long, Long, Option[Double])].collect()
+          .map(r => (r._1, r._2) -> ((r._3, r._4, r._5, r._6, r._7))).toMap
+      val (bk, pk) = (kingMap(graft.operators.PairBlocks.kingFromBlocks(spark, path)),
+        kingMap(Stats.kingPairs(synth, "gt")))
+      assert(bk === pk)
+      // auto-switch picks the exploded path at this width but the blocked
+      // path under a forced tiny envelope
+      val auto = ibsMap(graft.operators.PairBlocks.ibsAuto(synth, "gt",
+        maxExplodedSamples = 4, maxDriverSamples = 8, blockSize = 5))
+      assert(auto === pi)
+    }
   }
 
   test("allelicTest: perfect separation → chi2 = N, null OR; balance → 0; missing excluded") {

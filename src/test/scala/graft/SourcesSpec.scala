@@ -87,30 +87,32 @@ class SourcesSpec extends SparkTestBase {
 
   test("shard store: deterministic shards, manifest validates, loss detected") {
     import graft.sources.ShardStore
-    val dir = java.nio.file.Files.createTempDirectory("shards").resolve("corpus").toString
-    val m1 = ShardStore.writeShards(docs, "doc_id", numShards = 4, dir)
-    assert(m1.count() === 4)
-    // every row landed exactly once
-    assert(spark.read.parquet(dir).count() === docs.count())
-    // on-disk audit: all shards ok
-    val v = ShardStore.validateShards(spark, dir).collect()
-    assert(v.length === 4 && v.forall(_.getAs[Boolean]("ok")))
-    // determinism: rewriting from a reshuffled input yields the SAME
-    // manifest (shard assignment is a function of the id, fingerprint
-    // is order-independent)
-    val dir2 = java.nio.file.Files.createTempDirectory("shards").resolve("corpus2").toString
-    val m2 = ShardStore.writeShards(docs.repartition(7).sortWithinPartitions("lang"),
-      "doc_id", numShards = 4, dir2)
-    def rows(m: org.apache.spark.sql.DataFrame) = m.collect()
-      .map(r => (r.getAs[Number]("shard").longValue(),
-        r.getAs[Long]("n_rows"), r.getAs[Long]("fingerprint"))).toSet
-    assert(rows(m1) === rows(m2))
-    // shard loss is caught: drop one shard directory → its ok flag false
-    val victim = new java.io.File(dir).listFiles
-      .filter(f => f.isDirectory && f.getName.startsWith("shard=")).head
-    victim.listFiles.foreach(_.delete()); victim.delete()
-    val after = ShardStore.validateShards(spark, dir).collect()
-    assert(after.count(!_.getAs[Boolean]("ok")) === 1)
+    withTempDir("shards") { tmp =>
+      val dir = tmp.resolve("corpus").toString
+      val m1 = ShardStore.writeShards(docs, "doc_id", numShards = 4, dir)
+      assert(m1.count() === 4)
+      // every row landed exactly once
+      assert(spark.read.parquet(dir).count() === docs.count())
+      // on-disk audit: all shards ok
+      val v = ShardStore.validateShards(spark, dir).collect()
+      assert(v.length === 4 && v.forall(_.getAs[Boolean]("ok")))
+      // determinism: rewriting from a reshuffled input yields the SAME
+      // manifest (shard assignment is a function of the id, fingerprint
+      // is order-independent)
+      val dir2 = tmp.resolve("corpus2").toString
+      val m2 = ShardStore.writeShards(docs.repartition(7).sortWithinPartitions("lang"),
+        "doc_id", numShards = 4, dir2)
+      def rows(m: org.apache.spark.sql.DataFrame) = m.collect()
+        .map(r => (r.getAs[Number]("shard").longValue(),
+          r.getAs[Long]("n_rows"), r.getAs[Long]("fingerprint"))).toSet
+      assert(rows(m1) === rows(m2))
+      // shard loss is caught: drop one shard directory → its ok flag false
+      val victim = new java.io.File(dir).listFiles
+        .filter(f => f.isDirectory && f.getName.startsWith("shard=")).head
+      victim.listFiles.foreach(_.delete()); victim.delete()
+      val after = ShardStore.validateShards(spark, dir).collect()
+      assert(after.count(!_.getAs[Boolean]("ok")) === 1)
+    }
   }
 
   test("atomic shard store: crash debris invisible, readers keep the committed version") {
@@ -238,44 +240,48 @@ class SourcesSpec extends SparkTestBase {
 
   test("AppendStore.readOr fails fast on a plain-parquet store (atomicStore flip cannot silently drop history)") {
     import graft.sources.AppendStore
-    val root = java.nio.file.Files.createTempDirectory("aplain").resolve("store").toString
-    // a stream previously ran with atomicStore=false: plain part-files
-    docs.limit(3).write.parquet(root)
-    val e = intercept[IllegalArgumentException] {
-      AppendStore.readOr(spark, root, docs.limit(0))
+    withTempDir("aplain") { tmp =>
+      val root = tmp.resolve("store").toString
+      // a stream previously ran with atomicStore=false: plain part-files
+      docs.limit(3).write.parquet(root)
+      val e = intercept[IllegalArgumentException] {
+        AppendStore.readOr(spark, root, docs.limit(0))
+      }
+      assert(e.getMessage.contains("non-atomic"), e.getMessage)
+      // an absent path and a genuine (empty) atomic store still read fine
+      val fresh = tmp.resolve("fresh").resolve("s").toString
+      assert(AppendStore.readOr(spark, fresh, docs.limit(0)).count() === 0L)
+      AppendStore.append(docs.limit(2), fresh)
+      assert(AppendStore.readOr(spark, fresh, docs.limit(0)).count() === 2L)
     }
-    assert(e.getMessage.contains("non-atomic"), e.getMessage)
-    // an absent path and a genuine (empty) atomic store still read fine
-    val fresh = java.nio.file.Files.createTempDirectory("aplain2").resolve("s").toString
-    assert(AppendStore.readOr(spark, fresh, docs.limit(0)).count() === 0L)
-    AppendStore.append(docs.limit(2), fresh)
-    assert(AppendStore.readOr(spark, fresh, docs.limit(0)).count() === 2L)
   }
 
   test("AppendStore.manifestRows: priced from commit manifests alone — " +
       "exact across appends and compact; plain and pre-rows stores decline") {
     import graft.sources.{AppendStore, AtomicCommit}
-    val root = java.nio.file.Files.createTempDirectory("amrows").resolve("s").toString
-    assert(AppendStore.manifestRows(spark, root) === None) // absent: not a store
-    AppendStore.append(docs.limit(3), root)
-    AppendStore.append(docs.limit(2), root)
-    assert(AppendStore.manifestRows(spark, root) === Some(5L))
-    // the count comes from _commits alone — corrupt a version dir to
-    // prove no parquet read happens (a scan-backed count would throw)
-    AppendStore.compact(spark, root)
-    assert(AppendStore.manifestRows(spark, root) === Some(5L))
-    assert(AppendStore.readOr(spark, root, docs.limit(0)).count() === 5L)
-    // a pre-r17 commit (no rows line) makes the WHOLE store decline —
-    // a partial sum would understate silently
-    val legacy = java.nio.file.Files.createTempDirectory("amrows2").resolve("s").toString
-    docs.limit(2).write.parquet(AtomicCommit.versionDir(legacy, 1L))
-    assert(AtomicCommit.commit(spark, legacy, 1L, ""))
-    AppendStore.append(docs.limit(3), legacy)
-    assert(AppendStore.manifestRows(spark, legacy) === None)
-    // a plain parquet store has no commit log: decline, never Some(0)
-    val plain = java.nio.file.Files.createTempDirectory("amrows3").resolve("s").toString
-    docs.limit(3).write.parquet(plain)
-    assert(AppendStore.manifestRows(spark, plain) === None)
+    withTempDir("amrows") { tmp =>
+      val root = tmp.resolve("s").toString
+      assert(AppendStore.manifestRows(spark, root) === None) // absent: not a store
+      AppendStore.append(docs.limit(3), root)
+      AppendStore.append(docs.limit(2), root)
+      assert(AppendStore.manifestRows(spark, root) === Some(5L))
+      // the count comes from _commits alone — corrupt a version dir to
+      // prove no parquet read happens (a scan-backed count would throw)
+      AppendStore.compact(spark, root)
+      assert(AppendStore.manifestRows(spark, root) === Some(5L))
+      assert(AppendStore.readOr(spark, root, docs.limit(0)).count() === 5L)
+      // a pre-r17 commit (no rows line) makes the WHOLE store decline —
+      // a partial sum would understate silently
+      val legacy = tmp.resolve("legacy").resolve("s").toString
+      docs.limit(2).write.parquet(AtomicCommit.versionDir(legacy, 1L))
+      assert(AtomicCommit.commit(spark, legacy, 1L, ""))
+      AppendStore.append(docs.limit(3), legacy)
+      assert(AppendStore.manifestRows(spark, legacy) === None)
+      // a plain parquet store has no commit log: decline, never Some(0)
+      val plain = tmp.resolve("plain").resolve("s").toString
+      docs.limit(3).write.parquet(plain)
+      assert(AppendStore.manifestRows(spark, plain) === None)
+    }
   }
 
   test("AppendStore.compact reader grace: readerGrace=true supersedes old " +
